@@ -47,6 +47,12 @@ def run_parallel_jobs(
     The session should run with ``spark.scheduler.mode=FAIR`` for real
     fair sharing; without it the pools still isolate job groups and
     cancellation still works (FIFO order applies).
+
+    Neither mode preempts running tasks: a job's tasks start only when a
+    slot frees, in FIFO and FAIR alike. So a sibling whose running tasks
+    fill every slot delays the others until those tasks end, and
+    cancel-on-first-failure can fire only once the failing job has had a
+    slot.
     """
     import time
 

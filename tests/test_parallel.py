@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from orc_spark.engine import parallel
@@ -44,11 +45,15 @@ def test_parallel_failure_cancels_partner(spark):
         spark.range(10).select((F.lit(1)).alias("x")).count()
         raise RuntimeError("boom")
 
-    # slow gets 4 of the 8 local slots so the failing job runs at once
-    # (FIFO session: a full-width slow job would queue `bad` behind it)
+    # slow takes half the session's task slots so the failing job runs at
+    # once: neither FIFO nor FAIR preempts running tasks, so a full-width
+    # slow job would queue `bad` behind it for the whole 20 s
+    slots = spark.sparkContext.defaultParallelism
+    if slots < 2:
+        pytest.skip(f"`bad` needs a slot beside `slow`; {slots} slot(s)")
     res = parallel.run_parallel_jobs(
         spark,
-        {"bad": failing, "slow": _slow_count(spark, 20, 4)},
+        {"bad": failing, "slow": _slow_count(spark, 20, slots // 2)},
     )
     assert not res["bad"].ok and "boom" in res["bad"].error
     # the long job was cancelled, not run to completion (~20s/task)
