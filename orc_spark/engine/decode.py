@@ -9,6 +9,8 @@ lossiness (nullable ints stay ints; None-vs-"" survives).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from dataclasses import dataclass
+from functools import partial
 
 import pyarrow as pa
 
@@ -35,7 +37,6 @@ def decode_stage(
     missing_defaults: dict | None = None,
     verify_checksums: bool = False,
     residual: list | None = None,
-    apply_deletes: bool = False,
     emit_positions: bool = False,
     eq_deletes: list | None = None,
 ) -> DataFrame:
@@ -69,9 +70,9 @@ def decode_stage(
     not null). Callers (decode_job) compute the list from the stripe
     metadata.
 
-    ``apply_deletes=True`` — the stripes DF carries a ``_delete_vecs``
-    column (array<binary> of packed little-endian row bitmaps, joined
-    per stripe group by the caller): marked rows are masked out right
+    Deletes — when the stripes DF carries a ``_delete_vecs`` column
+    (array<binary> of packed little-endian row bitmaps, joined per
+    stripe group by the caller), marked rows are masked out right
     after the batch is rebuilt, BEFORE the residual filter — Iceberg
     v2 position-delete merge-on-read semantics. Multiple vectors per
     group (append-only delete files) are OR-combined here.
@@ -99,127 +100,176 @@ def decode_stage(
     check below still hard-fails rather than silently dropping rows if
     the assumption is ever violated.
     """
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    cols = columns or [
-        f.name
-        for f in result_schema.fields
-        if f.name not in POSITION_COLS
-    ]
-    missing = set(fill_missing or ())
-    # eq-delete columns outside the projection decode internally for
-    # the mask and are dropped before yield (never resurrected rows)
-    hidden = [
-        c
-        for c, _ in (eq_deletes or [])
-        if c not in cols and c not in missing
-    ]
-    all_cols = list(cols) + hidden
-    want = set(all_cols) - missing
-    n_cols = len(want)
-    arrow_types = {
-        f.name: to_arrow_type(f.dataType) for f in result_schema.fields
-    }
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..codecs import column_checksum
-
-        def _decode_one(col: str, blob: bytes, expect: str):
-            arr = decode_frame(blob)
-            if verify_checksums and expect:
-                got = column_checksum(arr)
-                if got != expect:
-                    raise RuntimeError(
-                        f"checksum mismatch decoding column {col!r}: "
-                        f"stripe recorded {expect}, decoded {got}"
-                    )
-            # hidden eq-delete columns keep their natural decode type
-            if col in arrow_types:
-                return arr.cast(arrow_types[col])
-            return arr
-
-        import numpy as np
-
-        pending: dict[tuple[int, int], dict[str, tuple[bytes, str]]] = {}
-        group_meta: dict[tuple[int, int], tuple[int, list]] = {}
-        for batch in batches:
-            d = batch.to_pydict()
-            vecs_col = d.get("_delete_vecs") if apply_deletes else None
-            for i in range(batch.num_rows):
-                col = d["column"][i]
-                if col not in want:
-                    continue
-                key = (d["partition_id"][i], d["stripe_idx"][i])
-                grp = pending.setdefault(key, {})
-                if key not in group_meta:
-                    group_meta[key] = (
-                        d["epoch"][i],
-                        (vecs_col[i] if vecs_col is not None else None),
-                    )
-                grp[col] = (d["data"][i], d["checksum"][i])
-                if len(grp) == n_cols:
-                    decoded = {
-                        c: _decode_one(c, *grp[c])
-                        for c in all_cols
-                        if c not in missing
-                    }
-                    n = len(next(iter(decoded.values())))
-                    defaults = missing_defaults or {}
-
-                    def _fill(c, n):
-                        if defaults.get(c) is None:
-                            return pa.nulls(n, type=arrow_types[c])
-                        return pa.array(
-                            [defaults[c]] * n, type=arrow_types[c]
-                        )
-
-                    arrays = [
-                        decoded[c] if c not in missing else _fill(c, n)
-                        for c in all_cols
-                    ]
-                    names = list(all_cols)
-                    epoch, vecs = group_meta.pop(key)
-                    if emit_positions:
-                        for pname, pval in (
-                            ("_pid", np.full(n, key[0], dtype=np.int64)),
-                            ("_epoch", np.full(n, epoch, dtype=np.int64)),
-                            ("_sidx", np.full(n, key[1], dtype=np.int64)),
-                            ("_rowpos", np.arange(n, dtype=np.int64)),
-                        ):
-                            arrays.append(pa.array(pval))
-                            names.append(pname)
-                    out = pa.RecordBatch.from_arrays(arrays, names=names)
-                    if vecs:
-                        deleted = np.zeros(n, dtype=bool)
-                        for vec in vecs:
-                            if not vec:
-                                continue
-                            bits = np.unpackbits(
-                                np.frombuffer(vec, dtype=np.uint8),
-                                bitorder="little",
-                            )[:n]
-                            # OR across append-only delete files
-                            deleted[: len(bits)] |= bits.astype(bool)
-                        if deleted.any():
-                            out = out.filter(pa.array(~deleted))
-                    if eq_deletes:
-                        out = _apply_eq_deletes(out, eq_deletes)
-                    if hidden:
-                        out = out.select(
-                            [nm for nm in out.schema.names if nm not in hidden]
-                        )
-                    if residual:
-                        out = _apply_residual(out, residual)
-                    yield out
-                    del pending[key]
-        if pending:
-            raise RuntimeError(
-                f"incomplete stripe groups (missing columns): {sorted(pending)[:4]}"
-            )
-
+    spec = DecodeSpec.build(
+        result_schema, columns, fill_missing, missing_defaults,
+        verify_checksums, residual, emit_positions, eq_deletes,
+    )
     if not colocated:
         stripes = stripes.repartition(F.col("partition_id"), F.col("stripe_idx"))
-    return stripes.mapInArrow(fn, result_schema)
+    return stripes.mapInArrow(partial(decode_batches, spec=spec), result_schema)
+
+
+@dataclass(frozen=True)
+class DecodeSpec:
+    """What :func:`decode_batches` rebuilds: the output columns in
+    order, the hidden eq-delete columns, the null-filled ones, their
+    Arrow types, and every row-level step (see :func:`decode_stage`)."""
+
+    cols: tuple
+    hidden: tuple
+    missing: frozenset
+    arrow_types: dict
+    missing_defaults: dict
+    verify_checksums: bool
+    residual: list | None
+    emit_positions: bool
+    eq_deletes: list | None
+
+    @classmethod
+    def build(
+        cls, result_schema: StructType, columns=None, fill_missing=None,
+        missing_defaults=None, verify_checksums=False, residual=None,
+        emit_positions=False, eq_deletes=None,
+    ) -> "DecodeSpec":
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        cols = columns or [
+            f.name
+            for f in result_schema.fields
+            if f.name not in POSITION_COLS
+        ]
+        missing = frozenset(fill_missing or ())
+        # eq-delete columns outside the projection decode internally for
+        # the mask and are dropped before yield (never resurrected rows)
+        hidden = [
+            c
+            for c, _ in (eq_deletes or [])
+            if c not in cols and c not in missing
+        ]
+        return cls(
+            cols=tuple(cols), hidden=tuple(hidden), missing=missing,
+            arrow_types={
+                f.name: to_arrow_type(f.dataType) for f in result_schema.fields
+            },
+            missing_defaults=missing_defaults or {},
+            verify_checksums=verify_checksums, residual=residual,
+            emit_positions=emit_positions, eq_deletes=eq_deletes,
+        )
+
+    @property
+    def all_cols(self) -> list:
+        return [*self.cols, *self.hidden]
+
+    @property
+    def want(self) -> set:
+        """The stored columns a stripe group must carry to decode."""
+        return set(self.all_cols) - self.missing
+
+
+def decode_batches(
+    batches: Iterator[pa.RecordBatch], spec: DecodeSpec
+) -> Iterator[pa.RecordBatch]:
+    """Stripe rows (partition_id, stripe_idx, epoch, column, data,
+    checksum, and ``_delete_vecs`` when deletes apply) -> decoded
+    batches, one per complete stripe group. Pure: the decode task and
+    the driver-side decode both run it. A group still missing columns
+    when the input ends raises rather than drop its rows."""
+    import numpy as np
+
+    from ..codecs import column_checksum
+
+    all_cols = spec.all_cols
+    want = spec.want
+    n_cols = len(want)
+    types = spec.arrow_types
+
+    def _decode_one(col: str, blob: bytes, expect: str):
+        arr = decode_frame(blob)
+        if spec.verify_checksums and expect:
+            got = column_checksum(arr)
+            if got != expect:
+                raise RuntimeError(
+                    f"checksum mismatch decoding column {col!r}: "
+                    f"stripe recorded {expect}, decoded {got}"
+                )
+        # hidden eq-delete columns keep their natural decode type
+        if col in types:
+            return arr.cast(types[col])
+        return arr
+
+    def _fill(c, n):
+        if spec.missing_defaults.get(c) is None:
+            return pa.nulls(n, type=types[c])
+        return pa.array([spec.missing_defaults[c]] * n, type=types[c])
+
+    pending: dict[tuple[int, int], dict[str, tuple[bytes, str]]] = {}
+    group_meta: dict[tuple[int, int], tuple[int, list]] = {}
+    for batch in batches:
+        d = batch.to_pydict()
+        vecs_col = d.get("_delete_vecs")
+        for i in range(batch.num_rows):
+            col = d["column"][i]
+            if col not in want:
+                continue
+            key = (d["partition_id"][i], d["stripe_idx"][i])
+            grp = pending.setdefault(key, {})
+            if key not in group_meta:
+                group_meta[key] = (
+                    d["epoch"][i],
+                    (vecs_col[i] if vecs_col is not None else None),
+                )
+            grp[col] = (d["data"][i], d["checksum"][i])
+            if len(grp) < n_cols:
+                continue
+            decoded = {
+                c: _decode_one(c, *grp[c])
+                for c in all_cols
+                if c not in spec.missing
+            }
+            n = len(next(iter(decoded.values())))
+            arrays = [
+                decoded[c] if c not in spec.missing else _fill(c, n)
+                for c in all_cols
+            ]
+            names = list(all_cols)
+            epoch, vecs = group_meta.pop(key)
+            if spec.emit_positions:
+                for pname, pval in (
+                    ("_pid", np.full(n, key[0], dtype=np.int64)),
+                    ("_epoch", np.full(n, epoch, dtype=np.int64)),
+                    ("_sidx", np.full(n, key[1], dtype=np.int64)),
+                    ("_rowpos", np.arange(n, dtype=np.int64)),
+                ):
+                    arrays.append(pa.array(pval))
+                    names.append(pname)
+            out = pa.RecordBatch.from_arrays(arrays, names=names)
+            if vecs:
+                deleted = np.zeros(n, dtype=bool)
+                for vec in vecs:
+                    if not vec:
+                        continue
+                    bits = np.unpackbits(
+                        np.frombuffer(vec, dtype=np.uint8),
+                        bitorder="little",
+                    )[:n]
+                    # OR across append-only delete files
+                    deleted[: len(bits)] |= bits.astype(bool)
+                if deleted.any():
+                    out = out.filter(pa.array(~deleted))
+            if spec.eq_deletes:
+                out = _apply_eq_deletes(out, spec.eq_deletes)
+            if spec.hidden:
+                out = out.select(
+                    [nm for nm in out.schema.names if nm not in spec.hidden]
+                )
+            if spec.residual:
+                out = _apply_residual(out, spec.residual)
+            yield out
+            del pending[key]
+    if pending:
+        raise RuntimeError(
+            f"incomplete stripe groups (missing columns): {sorted(pending)[:4]}"
+        )
 
 
 def _apply_eq_deletes(

@@ -107,6 +107,34 @@ def read_delete_vectors(
     return df
 
 
+def _read_run_arrow(d: str, schema: StructType, run_id: str):
+    """One run's rows of a small side table (deletes, eq-deletes),
+    read with pyarrow under the table's explicit schema — no Spark
+    job."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return ds.dataset(
+        d, format="parquet", schema=to_arrow_schema(schema)
+    ).to_table(filter=ds.field("run_id") == run_id)
+
+
+def delete_vecs_by_group(out_dir: str, run_id: str) -> dict | None:
+    """{(partition_id, epoch, stripe_idx): [vec, ...]} for the run,
+    read with pyarrow — the driver-side twin of
+    :func:`grouped_delete_vecs`; None when the table has no deletes."""
+    d = deletes_dir(out_dir)
+    if not os.path.isdir(d):
+        return None
+    t = _read_run_arrow(d, DELETES_SCHEMA, run_id)
+    out: dict = {}
+    for p, e, s, v in zip(
+        *(t[c].to_pylist() for c in ("partition_id", "epoch", "stripe_idx", "vec"))
+    ):
+        out.setdefault((p, e, s), []).append(v)
+    return out
+
+
 def grouped_delete_vecs(deletes: DataFrame) -> DataFrame:
     """(partition_id, epoch, stripe_idx, _delete_vecs array<binary>)
     — the join-ready shape decode_stage consumes."""
@@ -171,37 +199,34 @@ def write_eq_deletes(
     return len(rows)
 
 
-def read_eq_deletes(
-    spark: SparkSession, out_dir: str, run_id: str
-) -> list[tuple[str, list]]:
-    """[(column, [typed values...])] for the run — collected (bounded
-    by EQ_COLLECT_MAX, loud beyond it) so decode tasks can mask
-    without a join."""
+def read_eq_deletes(out_dir: str, run_id: str) -> list[tuple[str, list]]:
+    """[(column, [typed values...])] for the run — read on the driver
+    with pyarrow (bounded by EQ_COLLECT_MAX, loud beyond it) so decode
+    tasks can mask without a join."""
     import json as _json
 
     d = eq_deletes_dir(out_dir)
     if not os.path.isdir(d):
         return []
-    df = spark.read.schema(EQ_DELETES_SCHEMA).parquet(d).filter(
-        F.col("run_id") == run_id
-    )
-    rows = df.limit(EQ_COLLECT_MAX + 1).collect()
-    if len(rows) > EQ_COLLECT_MAX:
+    t = _read_run_arrow(d, EQ_DELETES_SCHEMA, run_id)
+    if t.num_rows > EQ_COLLECT_MAX:
         raise ValueError(
             f"run {run_id!r} has more than {EQ_COLLECT_MAX} equality-"
             "delete rows — compact the run (materializes the live "
             "view) before decoding"
         )
     by_col: dict[str, list] = {}
-    for r in rows:
-        v = _json.loads(r.value_json)
-        if r.kind == "int":
+    for col, kind, vj in zip(
+        *(t[c].to_pylist() for c in ("column", "kind", "value_json"))
+    ):
+        v = _json.loads(vj)
+        if kind == "int":
             v = int(v)
-        elif r.kind == "float":
+        elif kind == "float":
             v = float(v)
-        elif r.kind == "bool":
+        elif kind == "bool":
             v = bool(v)
-        by_col.setdefault(r.column, []).append(v)
+        by_col.setdefault(col, []).append(v)
     return sorted(by_col.items())
 
 
@@ -226,6 +251,6 @@ def delete_stats(spark: SparkSession, out_dir: str, run_id: str) -> dict:
             "rows_marked_ub": int(agg.nr or 0),
         }
     out["n_eq_values"] = sum(
-        len(vs) for _, vs in read_eq_deletes(spark, out_dir, run_id)
+        len(vs) for _, vs in read_eq_deletes(out_dir, run_id)
     )
     return out

@@ -244,18 +244,9 @@ def run_encode_job(
         return result
 
     epoch = lineage_mod.next_epoch(spark, cfg.out_dir, cfg.run_id)
-    zexpr = None
-    if cfg.zorder_by:
-        if cfg.cluster_by:
-            raise ValueError("cluster_by and zorder_by are exclusive")
-        from . import zorder as zorder_mod
-
-        # bounds once for the whole job (not per wave): one min/max
-        # aggregate, or caller-supplied to skip the pass entirely
-        zbounds = cfg.zorder_bounds or zorder_mod.column_bounds(
-            df, cfg.zorder_by
-        )
-        zexpr = zorder_mod.zorder_key(df, cfg.zorder_by, bounds=zbounds)
+    sort_key = _clustering_key(
+        df, cfg.cluster_by, cfg.zorder_by, cfg.zorder_bounds
+    )
     waves = max(1, min(cfg.waves, len(todo)))
     per_wave = -(-len(todo) // waves)
     for w in range(waves):
@@ -268,10 +259,8 @@ def run_encode_job(
         wave_df = skew.salted_repartition(
             wave_df.drop("_pid"), cfg.n_partitions, cfg.key, cfg.salt
         )
-        if cfg.cluster_by:
-            wave_df = wave_df.sortWithinPartitions(cfg.cluster_by)
-        elif zexpr is not None:
-            wave_df = wave_df.sortWithinPartitions(zexpr)
+        if sort_key is not None:
+            wave_df = wave_df.sortWithinPartitions(sort_key)
         stripes = encode_mod.encode_stage(
             wave_df, plans, cfg.run_id, cfg.size_budget_ratio,
             epoch=epoch, fault_spec=cfg.fault_spec,
@@ -308,6 +297,22 @@ def run_encode_job(
         result.partitions_failed += len(failed_ids)
         result.waves += 1
     return result
+
+
+def _clustering_key(df: DataFrame, cluster_by, zorder_by, zorder_bounds):
+    """The within-partition sort key of a run's clustering layout
+    (cluster_by column, or the Z-order key over zorder_by), or None.
+    The sort rides the encode exchange's output — no extra shuffle.
+    Z-order bounds come once for the whole job: the stored/supplied
+    ones, or one min/max aggregate over ``df``."""
+    if not zorder_by:
+        return cluster_by
+    if cluster_by:
+        raise ValueError("cluster_by and zorder_by are exclusive")
+    from . import zorder as zorder_mod
+
+    bounds = zorder_bounds or zorder_mod.column_bounds(df, zorder_by)
+    return zorder_mod.zorder_key(df, zorder_by, bounds=bounds)
 
 
 def compact_run(
@@ -452,6 +457,13 @@ def compact_fragmented(
     wave_df = skew.salted_repartition(
         df.select(columns), n_partitions, key, salt
     )
+    # keep the run's clustering, or zone maps stop pruning the rewrite
+    sort_key = _clustering_key(
+        df, stored.get("cluster_by"), stored.get("zorder_by"),
+        stored.get("zorder_bounds"),
+    )
+    if sort_key is not None:
+        wave_df = wave_df.sortWithinPartitions(sort_key)
     plans = selector.plan_for_schema(
         _arrow_schema(df.select(columns)), stored.get("overrides")
     )
@@ -810,6 +822,21 @@ def decode_job(
     layout proves co-location (the common case: encode tasks write one
     file each); falls back to an explicit repartition otherwise.
 
+    Driver path: a predicated read (or a restricted decode given a
+    keep-set list) of a local stripes directory whose metadata fits
+    the footer budget (zonemap._driver_plan_budget_ok) starts NO Spark
+    job here. The stripe metadata is read with pyarrow and planned by
+    zonemap.plan_keep_groups (epoch keep, zone maps, blooms). When the
+    kept groups hold at most _DRIVER_DECODE_MAX_ROWS rows and
+    _DRIVER_DECODE_MAX_BYTES decoded bytes (the ledger's ``bytes_in``
+    of the wanted columns), their blobs are decoded on the driver by
+    the same decode_mod.decode_batches the decode task runs, and
+    returned as ``spark.createDataFrame(table, schema)``: the caller's
+    action is the read's only job. Larger keep-sets decode as Spark
+    tasks behind literal group filters. Iceberg tables, runs over the
+    budget and unpredicated scans plan with Spark jobs (key pin,
+    fused metadata job or epoch keep-map) and decode as tasks.
+
     ``as_of_epoch`` — time travel: decode the table as it stood after
     encode wave ``k`` (Iceberg snapshot-read semantics over the resume
     lineage; ≙ the reference's state history,
@@ -892,7 +919,6 @@ def decode_job(
         return inner.select(
             *[F.col(stored[c]).alias(c) for c in req_cols]
         )
-    colocated = _stripe_files_fit_one_task_each(spark, out_dir)
     if columns is not None:
         # Project result_schema onto the requested columns IN THEIR
         # REQUESTED ORDER — decode_stage emits batches in `columns`
@@ -911,16 +937,49 @@ def decode_job(
             )
         result_schema = StructType([by_name[c] for c in columns])
     want = set(columns or [f.name for f in result_schema.fields])
-    all_stripes = read_stripes(spark, out_dir, run_id)
     if as_of_tag is not None:
         if as_of_epoch is not None:
             raise ValueError("pass as_of_epoch OR as_of_tag, not both")
         as_of_epoch = lineage_mod.resolve_tag(out_dir, run_id, as_of_tag)
-    if as_of_epoch is not None:
-        # the cap flows through BOTH epoch-selection paths (the fused
-        # metadata job and _epoch_keep_filter project from this DF),
-        # so "newest complete epoch" naturally means "≤ k"
-        all_stripes = all_stripes.filter(F.col("epoch") <= int(as_of_epoch))
+    out_schema = result_schema
+    if _emit_positions:
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        out_schema = StructType(
+            list(result_schema.fields)
+            + [
+                StructField(p, LongType(), False)
+                for p in decode_mod.POSITION_COLS
+            ]
+        )
+    # temporal keep-pins from the caller's schema: lower-bounded
+    # timestamp scans ("since date X") prune only when the stat unit is
+    # known (zonemap._pin_keep_cands)
+    pins = _temporal_pins(result_schema, predicate) if predicate else None
+    spec_args = dict(
+        missing_defaults=missing_defaults,
+        verify_checksums=verify_checksums,
+        # row-level residual inside the decode (conservative); callers'
+        # zonemap.predicate_expr stays the exactness gate
+        residual=predicate,
+        emit_positions=_emit_positions,
+    )
+    sdir = lineage_mod.stripes_dir(out_dir)
+    driver_plannable = (
+        isinstance(_only_groups, list)
+        or (predicate and _only_groups is None)
+    )
+    if driver_plannable and not storage.is_iceberg(sdir):
+        from . import retention
+
+        retention.recover_swap(sdir)  # as read_stripes: restore first
+        if zonemap._driver_plan_budget_ok(sdir):
+            return _driver_planned_read(
+                spark, out_dir, run_id, out_schema, columns, want,
+                predicate, pins, as_of_epoch, allow_missing_columns,
+                apply_deletes, _only_groups, spec_args,
+            )
+    all_stripes = _capped_stripes(spark, out_dir, run_id, as_of_epoch)
     fill: list[str] = []
     if allow_missing_columns:
         present = {
@@ -933,27 +992,20 @@ def decode_job(
             return spark.createDataFrame([], result_schema)
     if predicate:
         # nested-column conjuncts ("meta.status") prune via the
-        # per-descendant stats rows encode emits; a run encoded
-        # WITHOUT them would silently prune every group (a group with
-        # no row for a conjunct's column never survives) — hard-error
-        # instead, mirroring metadata_aggregate's exact-or-loud rule
+        # per-descendant stats rows encode emits
         nested = sorted({c for c, _, _ in predicate if "." in c})
         if nested:
-            present = {
-                r.column
-                for r in all_stripes.select("column")
-                .filter(F.col("column").isin(nested))
-                .distinct()
-                .collect()
-            }
-            missing = [c for c in nested if c not in present]
-            if missing:
-                raise ValueError(
-                    f"no nested stats rows for predicate column(s) "
-                    f"{missing} in run {run_id!r} — the run predates "
-                    "nested-column statistics; decode without the "
-                    "predicate and filter the result instead"
-                )
+            _check_nested_stats(
+                nested,
+                {
+                    r.column
+                    for r in all_stripes.select("column")
+                    .filter(F.col("column").isin(nested))
+                    .distinct()
+                    .collect()
+                },
+                run_id,
+            )
         # key-equality fast path: an ==/IN conjunct on the run's
         # PARTITION KEY pins the partition id arithmetically, so even
         # the metadata scan reads 1/n of the stripes table
@@ -964,22 +1016,9 @@ def decode_job(
             all_stripes = all_stripes.filter(
                 F.col("partition_id").isin(key_pids)
             )
-        # ONE fused metadata job for epoch keep-map + zone/bloom
-        # keep-set (point lookups pay 2 driver actions total, not 4);
-        # small runs plan driver-side off the parquet footers
-        # (zonemap._fused_prune_driver — a single-stage collect)
-        sdir = lineage_mod.stripes_dir(out_dir)
-        # temporal keep-pins from the caller's schema: lower-bounded
-        # timestamp scans ("since date X") prune only when the stat
-        # unit is known (zonemap._pin_keep_cands)
-        pins = _temporal_pins(result_schema, predicate)
-        stripes = zonemap.fused_prune(
-            all_stripes,
-            want,
-            predicate,
-            stripes_path=None if storage.is_iceberg(sdir) else sdir,
-            pins=pins,
-        )
+        # ONE distributed metadata job for epoch keep-map + zone/bloom
+        # keep-set (point lookups pay 2 driver actions total, not 4)
+        stripes = zonemap.fused_prune(all_stripes, want, predicate, pins=pins)
         if stripes is None:  # keep-set too large for literal pushdown
             stripes = zonemap.prune_stripes(
                 _epoch_keep_filter(spark, all_stripes, want), predicate,
@@ -995,86 +1034,264 @@ def decode_job(
         stripes = _epoch_keep_filter(spark, all_stripes, want)
     if _only_groups is not None:
         # internal (metadata_count's mixed-stripe decode): restrict to
-        # an explicit (partition_id, epoch, stripe_idx) keep-set. Small
-        # sets (lists) become literal filters (partition_id isin pushes
-        # to the parquet scan, like prune_stripes); a DataFrame keep-set
-        # (too large to collect) semi-joins instead.
+        # an explicit (partition_id, epoch, stripe_idx) keep-set; a
+        # DataFrame keep-set (too large to collect) semi-joins
         if isinstance(_only_groups, DataFrame):
             stripes = stripes.join(
                 _only_groups.select("partition_id", "epoch", "stripe_idx"),
                 ["partition_id", "epoch", "stripe_idx"],
                 "left_semi",
             )
-        elif len(_only_groups) <= zonemap._PUSHDOWN_MAX_GROUPS:
-            if not _only_groups:
-                stripes = stripes.filter(F.lit(False))
-            else:
-                pids = sorted({int(p) for p, _, _ in _only_groups})
-                gkeys = [f"{int(p)}:{int(e)}:{int(s)}" for p, e, s in _only_groups]
-                stripes = stripes.filter(
-                    F.col("partition_id").isin(pids)
-                    & F.concat_ws(
-                        ":", "partition_id", "epoch", "stripe_idx"
-                    ).isin(gkeys)
-                )
         else:
-            gdf = spark.createDataFrame(
-                [(int(p), int(e), int(s)) for p, e, s in _only_groups],
-                "partition_id int, epoch bigint, stripe_idx int",
-            )
-            stripes = stripes.join(
-                F.broadcast(gdf),
-                ["partition_id", "epoch", "stripe_idx"],
-                "left_semi",
-            )
-    have_deletes = False
+            stripes = zonemap.restrict_groups(stripes, _only_groups)
     eq_dels: list = []
     if apply_deletes:
-        eq_dels = deletes_mod.read_eq_deletes(spark, out_dir, run_id)
+        eq_dels = deletes_mod.read_eq_deletes(out_dir, run_id)
         if eq_dels:
-            present = {
-                r.column
-                for r in all_stripes.select("column").distinct().collect()
-            }
-            bad = [c for c, _ in eq_dels if c not in present]
-            if bad:
-                raise ValueError(
-                    f"equality delete(s) on column(s) {bad} not encoded "
-                    f"in run {run_id!r} — cannot apply; decode with "
-                    "apply_deletes=False to read the raw table"
-                )
+            _check_eq_delete_columns(
+                eq_dels,
+                {
+                    r.column
+                    for r in all_stripes.select("column").distinct().collect()
+                },
+                run_id,
+            )
+    return _task_decode(
+        spark, out_dir, run_id, stripes, out_schema, columns, fill, eq_dels,
+        apply_deletes, spec_args,
+    )
+
+
+# Driver-side decode gate (decode_job): a planned keep-set at most this
+# large decodes on the driver and is handed back as a local DataFrame;
+# a larger one runs the decode as Spark tasks. Set from the measured
+# crossover of the two paths (see CHANGES.md).
+_DRIVER_DECODE_MAX_ROWS = 65_536
+_DRIVER_DECODE_MAX_BYTES = 16 << 20
+
+
+def _check_nested_stats(nested: list, present: set, run_id: str) -> None:
+    """A run encoded WITHOUT per-descendant stats rows would silently
+    prune every group on a nested conjunct (a group with no row for a
+    conjunct's column never survives) — hard-error instead, mirroring
+    metadata_aggregate's exact-or-loud rule."""
+    missing = [c for c in nested if c not in present]
+    if missing:
+        raise ValueError(
+            f"no nested stats rows for predicate column(s) "
+            f"{missing} in run {run_id!r} — the run predates "
+            "nested-column statistics; decode without the "
+            "predicate and filter the result instead"
+        )
+
+
+def _check_eq_delete_columns(eq_dels: list, present: set, run_id: str) -> None:
+    bad = [c for c, _ in eq_dels if c not in present]
+    if bad:
+        raise ValueError(
+            f"equality delete(s) on column(s) {bad} not encoded "
+            f"in run {run_id!r} — cannot apply; decode with "
+            "apply_deletes=False to read the raw table"
+        )
+
+
+def _task_decode(
+    spark, out_dir, run_id, stripes, out_schema, columns, fill, eq_dels,
+    apply_deletes, spec_args,
+) -> DataFrame:
+    """The decode as Spark tasks over the kept stripe rows. Delete
+    vectors ride a broadcast metadata join: one ``_delete_vecs``
+    array<binary> per stripe group that has delete files."""
+    if apply_deletes:
         dels = deletes_mod.read_delete_vectors(spark, out_dir, run_id)
         if dels is not None:
-            # broadcast metadata join: one array<binary> per stripe
-            # group that has delete files; groups without stay null
             stripes = stripes.join(
                 F.broadcast(deletes_mod.grouped_delete_vecs(dels)),
                 ["partition_id", "epoch", "stripe_idx"],
                 "left",
             )
-            have_deletes = True
-    out_schema = result_schema
-    if _emit_positions:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        out_schema = StructType(
-            list(result_schema.fields)
-            + [
-                StructField(p, LongType(), False)
-                for p in decode_mod.POSITION_COLS
-            ]
-        )
     return decode_mod.decode_stage(
-        stripes, out_schema, columns, colocated,
-        fill_missing=fill or None, missing_defaults=missing_defaults,
-        verify_checksums=verify_checksums,
-        # row-level residual inside the decode task (conservative);
-        # callers' zonemap.predicate_expr stays the exactness gate
-        residual=predicate,
-        apply_deletes=have_deletes,
-        emit_positions=_emit_positions,
-        eq_deletes=eq_dels or None,
+        stripes, out_schema, columns,
+        _stripe_files_fit_one_task_each(spark, out_dir),
+        fill_missing=fill or None, eq_deletes=eq_dels or None, **spec_args,
     )
+
+
+def _stripes_dataset(out_dir: str):
+    """The stripes directory as a pyarrow dataset under the Arrow form
+    of STRIPE_SCHEMA: older files null-fill the columns they lack,
+    exactly as the explicit-schema Spark read does."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(
+        lineage_mod.stripes_dir(out_dir), format="parquet",
+        schema=encode_mod._STRIPE_PA_SCHEMA,
+    )
+
+
+def _driver_planned_read(
+    spark, out_dir, run_id, out_schema, columns, want, predicate, pins,
+    as_of_epoch, allow_missing_columns, apply_deletes, only_groups,
+    spec_args,
+) -> DataFrame:
+    """decode_job for a local stripes dir whose metadata fits the
+    footer budget: plan with pyarrow on the driver (no Spark job, no
+    key-pin probe — zone maps plus blooms over every group cost
+    milliseconds here), then decode the kept groups on the driver
+    when they are within the _DRIVER_DECODE_MAX_* gate, handing them
+    back as a local DataFrame; larger keep-sets decode as Spark tasks
+    behind literal group filters."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    dset = _stripes_dataset(out_dir)
+    filt = ds.field("run_id") == run_id
+    if as_of_epoch is not None:
+        filt &= ds.field("epoch") <= int(as_of_epoch)
+    meta = dset.to_table(
+        columns=[*zonemap.PLAN_COLUMNS, "bytes_in"], filter=filt
+    )
+    present = set(pc.unique(meta["column"]).to_pylist())
+    fill: list[str] = []
+    if allow_missing_columns:
+        fill = sorted(want - present)
+        want = want & present
+        if not want:  # nothing encoded to anchor row counts on
+            return spark.createDataFrame([], out_schema)
+    nested = sorted({c for c, _, _ in predicate or () if "." in c})
+    if nested:
+        _check_nested_stats(nested, present, run_id)
+    eq_dels: list = []
+    if apply_deletes:
+        eq_dels = deletes_mod.read_eq_deletes(out_dir, run_id)
+        _check_eq_delete_columns(eq_dels, present, run_id)
+    only = None if only_groups is None else {
+        (int(p), int(e), int(s)) for p, e, s in only_groups
+    }
+    if only is not None and not predicate and as_of_epoch is None:
+        keys = sorted(only)  # exact keys over epoch-filtered metadata
+    else:
+        keys = zonemap.plan_keep_groups(
+            meta, want, predicate or [], pins,
+            max_groups=zonemap._PUSHDOWN_MAX_GROUPS if predicate else None,
+        )
+        if keys is not None and only is not None:
+            keys = sorted(set(keys) & only)
+    spec = decode_mod.DecodeSpec.build(
+        out_schema, columns, fill or None, eq_deletes=eq_dels or None,
+        **spec_args,
+    )
+    if keys is not None:
+        gkeys = pa.array([f"{p}:{e}:{s}" for p, e, s in keys], pa.string())
+        n_rows, n_bytes = _decoded_size(meta, gkeys, spec.want)
+        if (
+            n_rows <= _DRIVER_DECODE_MAX_ROWS
+            and n_bytes <= _DRIVER_DECODE_MAX_BYTES
+        ):
+            return spark.createDataFrame(
+                _driver_decode(
+                    dset, out_dir, run_id, keys, gkeys, spec, out_schema,
+                    apply_deletes,
+                ),
+                out_schema,
+            )
+    stripes = _capped_stripes(spark, out_dir, run_id, as_of_epoch)
+    if keys is not None:
+        stripes = zonemap.restrict_groups(
+            stripes.filter(F.col("status") == "completed"), keys
+        )
+    else:  # keep-set too large for literal pushdown
+        stripes = zonemap.prune_stripes(
+            _epoch_keep_filter(spark, stripes, want), predicate, pins=pins
+        )
+        if only is not None:
+            stripes = zonemap.restrict_groups(stripes, sorted(only))
+    return _task_decode(
+        spark, out_dir, run_id, stripes, out_schema, columns, fill, eq_dels,
+        apply_deletes, spec_args,
+    )
+
+
+def _decoded_size(meta, gkeys, want) -> tuple[int, int]:
+    """(rows, decoded bytes) of the kept groups: the stripe ledger's
+    n_rows per group and bytes_in of the wanted columns."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    kept = meta.filter(
+        pc.and_(
+            pc.and_(
+                pc.is_in(zonemap.group_key_strings(meta), value_set=gkeys),
+                pc.equal(meta["status"], "completed"),
+            ),
+            pc.is_in(meta["column"], value_set=pa.array(sorted(want))),
+        )
+    )
+    per_group = kept.group_by(["partition_id", "epoch", "stripe_idx"]).aggregate(
+        [("n_rows", "max")]
+    )
+    return (
+        pc.sum(per_group["n_rows_max"]).as_py() or 0,
+        pc.sum(kept["bytes_in"]).as_py() or 0,
+    )
+
+
+def _capped_stripes(spark, out_dir, run_id, as_of_epoch) -> DataFrame:
+    """The run's stripes as of epoch ``as_of_epoch``: the cap flows
+    through every epoch-selection path, so "newest complete epoch"
+    means "≤ k"."""
+    s = read_stripes(spark, out_dir, run_id)
+    if as_of_epoch is not None:
+        s = s.filter(F.col("epoch") <= int(as_of_epoch))
+    return s
+
+
+def _driver_decode(
+    dset, out_dir, run_id, keys, gkeys, spec, out_schema, apply_deletes
+):
+    """Read only the kept groups' blobs (a pyarrow filter on
+    partition_id and column, then the exact group-key match) and run
+    decode_batches over them on the driver. Returns an Arrow table."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    blobs = dset.to_table(
+        columns=["partition_id", "epoch", "stripe_idx", "column", "data", "checksum"],
+        filter=(ds.field("run_id") == run_id)
+        & (ds.field("status") == "completed")
+        & ds.field("partition_id").isin(sorted({p for p, _, _ in keys}))
+        & ds.field("column").isin(sorted(spec.want)),
+    )
+    blobs = blobs.filter(
+        pc.is_in(zonemap.group_key_strings(blobs), value_set=gkeys)
+    )
+    vecs = deletes_mod.delete_vecs_by_group(out_dir, run_id) if apply_deletes else None
+    if vecs:
+        blobs = blobs.append_column(
+            "_delete_vecs",
+            pa.array(
+                [
+                    vecs.get(k)
+                    for k in zip(
+                        *(blobs[c].to_pylist() for c in ("partition_id", "epoch", "stripe_idx"))
+                    )
+                ],
+                pa.list_(pa.binary()),
+            ),
+        )
+    # createDataFrame's Arrow stream ends at the first empty batch, so a
+    # group the row filter emptied would drop every row after it
+    batches = [
+        b
+        for b in decode_mod.decode_batches(blobs.to_batches(), spec)
+        if b.num_rows
+    ]
+    if not batches:
+        return to_arrow_schema(out_schema).empty_table()
+    return pa.Table.from_batches(batches).combine_chunks()
 
 
 def incremental_read(
@@ -1840,8 +2057,8 @@ def _classify_driver(
     target: str | None = None,
 ):
     """Driver-side fast path for the ALL/NONE/MIXED classifier — the
-    metadata_count/metadata_sum analogue of zonemap._fused_prune_driver:
-    ONE single-stage Spark job (scan -> per-row conjunct flags ->
+    metadata_count/metadata_sum counterpart of zonemap.plan_keep_groups,
+    with Spark Column flags: ONE single-stage Spark job (scan -> per-row conjunct flags ->
     collect, no exchange) and the group/epoch logic as a dict walk on
     the driver. Budget-gated on the parquet footers
     (zonemap._driver_plan_budget_ok); returns None past the budget and

@@ -15,6 +15,7 @@ import contextlib
 import os
 import shutil
 import time
+import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -95,6 +96,35 @@ def _lock_is_stale(lock: str) -> bool:
         return False  # exists but not ours to probe -> live
 
 
+def _read_lock(lock: str) -> str | None:
+    try:
+        with open(lock) as fh:
+            return fh.read()
+    except OSError:
+        return None
+
+
+def _break_stale_lock(lock: str, seen: str) -> None:
+    """Remove the stale lock whose content was ``seen``, so that of
+    several waiters that judged it stale exactly one removes it. The
+    lock is renamed to a name unique to this waiter first: a waiter
+    that lost the race finds the path gone, or finds a NEW lock there
+    (another waiter already broke the stale one and took the lock) —
+    told apart by the content, which is unique per acquisition. A new
+    lock goes back in place; link() never replaces a lock created in
+    the meantime."""
+    tomb = f"{lock}.broken.{uuid.uuid4().hex}"
+    try:
+        os.rename(lock, tomb)
+    except OSError:
+        return  # another waiter broke it first
+    if _read_lock(tomb) != seen:
+        with contextlib.suppress(OSError):
+            os.link(tomb, lock)
+    with contextlib.suppress(OSError):
+        os.unlink(tomb)
+
+
 @contextlib.contextmanager
 def writer_lock(path: str, timeout_s: float = 30.0):
     """Advisory single-WRITER lock for table rewrites (ADVICE r4 #1).
@@ -111,18 +141,19 @@ def writer_lock(path: str, timeout_s: float = 30.0):
     this file entirely."""
     lock = path + _LOCK_SUFFIX
     deadline = time.monotonic() + timeout_s
+    token = f"{os.getpid()} {time.time()} {uuid.uuid4().hex}"
     while True:
         try:
             fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
             try:
-                os.write(fd, f"{os.getpid()} {time.time()}".encode())
+                os.write(fd, token.encode())
             finally:
                 os.close(fd)
             break
         except FileExistsError:
-            if _lock_is_stale(lock):
-                with contextlib.suppress(OSError):
-                    os.unlink(lock)
+            seen = _read_lock(lock)
+            if seen is not None and _lock_is_stale(lock):
+                _break_stale_lock(lock, seen)
                 continue
             if time.monotonic() >= deadline:
                 raise TimeoutError(
@@ -134,8 +165,9 @@ def writer_lock(path: str, timeout_s: float = 30.0):
     try:
         yield
     finally:
-        with contextlib.suppress(OSError):
-            os.unlink(lock)
+        if _read_lock(lock) == token:  # never release another's lock
+            with contextlib.suppress(OSError):
+                os.unlink(lock)
 
 
 def _swap_in(path: str, tmp: str, _retries: int = 3) -> None:

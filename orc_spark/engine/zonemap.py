@@ -459,6 +459,165 @@ def _conjunct_keep(op: str, value, pin: str | None = None) -> Column:
     return _range_overlap(None, value, pin)  # '<'
 
 
+# ------------------------------------ the same keep tests over Arrow
+#
+# Driver-side twins of _conjunct_keep and its helpers, evaluated with
+# pyarrow.compute over a table of stripe metadata rows. Every
+# comparison follows Spark's: Kleene AND/OR (a null flag stays null,
+# exactly as the Column expression evaluates), NaN sorting above every
+# number and equal to itself. tests/test_zonemap_arrow.py holds the two
+# in lockstep differentially.
+
+def _cmp_arrow(arr, op: str, v):
+    """``arr <op> v`` under Spark's ordering; null rows give null."""
+    t = arr.type
+    if not pa.types.is_floating(t):
+        fn = {
+            "==": pc.equal, "<": pc.less, "<=": pc.less_equal,
+            ">": pc.greater, ">=": pc.greater_equal,
+        }[op]
+        return fn(arr, pa.scalar(v, type=t))
+    v = float(v)
+    nan = pc.is_nan(arr)
+    if v != v:  # NaN literal: only NaN equals it, every value is below
+        return {
+            "==": nan, ">=": nan,
+            "<": pc.invert(nan),
+            "<=": pc.or_kleene(nan, pc.invert(nan)),
+            ">": pc.and_kleene(nan, pc.invert(nan)),
+        }[op]
+    s = pa.scalar(v, type=t)
+    if op == "==":
+        return pc.equal(arr, s)
+    if op == "<":
+        return pc.less(arr, s)
+    if op == "<=":
+        return pc.less_equal(arr, s)
+    if op == ">":
+        return pc.or_kleene(pc.greater(arr, s), nan)
+    return pc.or_kleene(pc.greater_equal(arr, s), nan)  # '>='
+
+
+def _const_arrow(meta: pa.Table, value: bool) -> pa.Array:
+    return pa.array(np.full(meta.num_rows, value, dtype=bool))
+
+
+def _range_overlap_arrow(meta: pa.Table, lo, hi, pin: str | None = None):
+    """Arrow twin of :func:`_range_overlap`."""
+    ilo, nlo, slo = _as_scalar(lo) if lo is not None else (None, None, None)
+    ihi, nhi, shi = _as_scalar(hi) if hi is not None else (None, None, None)
+    ilo, ihi = _pin_keep_cands(ilo, pin), _pin_keep_cands(ihi, pin)
+
+    def fam(minc: str, maxc: str, flo, fhi):
+        cond = pc.is_valid(meta[minc])
+        if fhi is not None:
+            cond = pc.and_kleene(cond, _cmp_arrow(meta[minc], "<=", fhi))
+        if flo is not None:
+            cond = pc.and_kleene(cond, _cmp_arrow(meta[maxc], ">=", flo))
+        return cond
+
+    if slo is not None or shi is not None:
+        checked = fam("min_str", "max_str", slo, shi)
+        stats_present = pc.is_valid(meta["min_str"])
+    else:
+        n_cand = max(len(ilo or ()), len(ihi or ()))
+        first_ilo = ilo[0] if ilo else None
+        first_ihi = ihi[0] if ihi else None
+        checked = fam(
+            "min_num", "max_num",
+            float(first_ilo) if first_ilo is not None else nlo,
+            float(first_ihi) if first_ihi is not None else nhi,
+        )
+        for i in range(n_cand):
+            checked = pc.or_kleene(checked, fam(
+                "min_int", "max_int",
+                ilo[i] if ilo is not None and i < len(ilo) else None,
+                ihi[i] if ihi is not None and i < len(ihi) else None,
+            ))
+        stats_present = pc.or_(
+            pc.is_valid(meta["min_int"]), pc.is_valid(meta["min_num"])
+        )
+    return pc.or_kleene(checked, pc.invert(stats_present))
+
+
+def _single_valued_at_arrow(meta: pa.Table, value):
+    """Arrow twin of :func:`_single_valued_at`."""
+    ints, num, s = _as_scalar(value)
+    if ints is not None and len(ints) >= 2 and ints[0] != ints[1] * _DAY_US:
+        ints = [ints[0]]
+
+    def fam(minc: str, maxc: str, v):
+        return pc.and_kleene(
+            pc.is_valid(meta[minc]),
+            pc.and_kleene(
+                _cmp_arrow(meta[minc], "==", v), _cmp_arrow(meta[maxc], "==", v)
+            ),
+        )
+
+    if s is not None:
+        return fam("min_str", "max_str", s)
+    if num is not None:
+        cond = fam("min_num", "max_num", num)
+        if float(num).is_integer():
+            cond = pc.or_kleene(cond, fam("min_int", "max_int", int(num)))
+        return cond
+    cond = fam("min_num", "max_num", float(ints[0]))
+    for iv in ints:
+        cond = pc.or_kleene(cond, fam("min_int", "max_int", iv))
+    return cond
+
+
+def _prefix_overlap_arrow(meta: pa.Table, prefix: str):
+    """Arrow twin of :func:`_prefix_overlap`."""
+    if not prefix:
+        return _const_arrow(meta, True)
+    stats_present = pc.and_(
+        pc.is_valid(meta["min_str"]), pc.is_valid(meta["max_str"])
+    )
+    keep = _cmp_arrow(meta["max_str"], ">=", prefix)
+    upper = _prefix_upper(prefix)
+    if upper is not None:
+        keep = pc.and_kleene(keep, _cmp_arrow(meta["min_str"], "<", upper))
+    return pc.or_kleene(keep, pc.invert(stats_present))
+
+
+def conjunct_keep_arrow(meta: pa.Table, op: str, value, pin: str | None = None):
+    """Per-row keep flags of one conjunct over a stripe metadata table:
+    :func:`_conjunct_keep` evaluated with pyarrow on the driver."""
+    if op not in _OPS:
+        raise ValueError(f"unsupported predicate op: {op!r}")
+    if op == "like_prefix":
+        return _prefix_overlap_arrow(meta, str(value))
+    if op == "contains_token":
+        if _norm_token(value) is None:
+            raise ValueError(
+                f"contains_token needs a lowercase [a-z0-9]+ token, "
+                f"got {value!r}"
+            )
+        return _const_arrow(meta, True)
+    nc = meta["null_count"]
+    if op == "is_null":
+        return pc.or_kleene(pc.is_null(nc), pc.greater(nc, 0))
+    if op == "not_null":
+        return pc.or_kleene(pc.is_null(nc), pc.less(nc, meta["n_rows"]))
+    if op == "!=":
+        return pc.invert(_single_valued_at_arrow(meta, value))
+    if op == "between":
+        lo, hi = value
+        return _range_overlap_arrow(meta, lo, hi, pin)
+    if op == "in":
+        vals = list(value)
+        keep = _const_arrow(meta, False)
+        for v in vals:
+            keep = pc.or_kleene(keep, _range_overlap_arrow(meta, v, v, pin))
+        return keep
+    if op in ("==", "="):
+        return _range_overlap_arrow(meta, value, value, pin)
+    if op in (">=", ">"):
+        return _range_overlap_arrow(meta, value, None, pin)
+    return _range_overlap_arrow(meta, None, value, pin)  # '<=', '<'
+
+
 _F53 = float(1 << 53)  # doubles are exact below this; proofs above risk rounding
 
 
@@ -657,18 +816,8 @@ def prune_stripes(
     keep = keep.distinct()
     keys = keep.limit(_PUSHDOWN_MAX_GROUPS + 1).collect()
     if len(keys) <= _PUSHDOWN_MAX_GROUPS:
-        if not keys:
-            return stripes.filter(F.lit(False))
-        pids = sorted({int(r.partition_id) for r in keys})
-        group_keys = [
-            f"{int(r.partition_id)}:{int(r.epoch)}:{int(r.stripe_idx)}"
-            for r in keys
-        ]
-        return stripes.filter(
-            F.col("partition_id").isin(pids)  # pushed to the parquet scan
-            & F.concat_ws(
-                ":", "partition_id", "epoch", "stripe_idx"
-            ).isin(group_keys)  # exact group keep, post-scan
+        return restrict_groups(
+            stripes, [(r.partition_id, r.epoch, r.stripe_idx) for r in keys]
         )
     return stripes.join(
         keep, ["partition_id", "epoch", "stripe_idx"], "left_semi"
@@ -725,129 +874,135 @@ def _driver_plan_budget_ok(stripes_path: str) -> bool:
     return True
 
 
-def _fused_prune_driver(
-    stripes: DataFrame,
-    want: list[str],
+#: the non-blob stripe columns the keep-set planner reads
+PLAN_COLUMNS = [
+    "partition_id", "epoch", "stripe_idx", "column", "status", "n_rows",
+    "null_count", "min_int", "max_int", "min_num", "max_num", "min_str",
+    "max_str", "bloom",
+]
+
+
+def group_key_strings(t: pa.Table):
+    """``"partition_id:epoch:stripe_idx"`` per row — the stripe-group
+    key the literal decode filter matches (see :func:`restrict_groups`)."""
+    return pc.binary_join_element_wise(
+        *[t[k].cast(pa.string()) for k in ("partition_id", "epoch", "stripe_idx")],
+        ":",
+    )
+
+
+def plan_keep_groups(
+    meta: pa.Table,
+    want,
     predicate: list[Conjunct],
-    max_groups: int,
     pins: dict | None = None,
-) -> DataFrame | None:
-    """fused_prune's small-metadata fast path: ONE single-stage Spark
-    job (scan -> row-level conjunct flags -> collect, no exchange) and
-    the group/epoch/bloom logic on the driver — for a point lookup
-    this halves the planning latency, because the distributed version
-    pays three shuffle stages to aggregate what is here a dict walk
-    over a few hundred metadata rows.
+    max_groups: int | None = _PUSHDOWN_MAX_GROUPS,
+) -> list[tuple[int, int, int]] | None:
+    """The keep-set of a predicated read, planned on the driver from an
+    Arrow table of blob-free stripe metadata (``PLAN_COLUMNS``).
 
-    Semantics are identical to the distributed path by construction:
-    the per-row conjunct conditions are the SAME Spark expressions
-    (_conjunct_keep — typed stat families, NaN/null conservatism), and
-    the group max-flag / epoch-completeness / best-epoch / bloom-veto
-    steps mirror it 1:1. One deliberate addition, mirrored in the
-    distributed path too: when the run's newest wanted-column epoch is
-    0 (never resumed — the common case), the completeness window
-    short-circuits exactly like pipeline._epoch_keep_filter, so
-    predicated and unpredicated decodes select identical stripe sets
-    (ADVICE r4 #2).
+    Per stripe group: each conjunct's zone flag (the max of
+    :func:`conjunct_keep_arrow` over the group's rows of that column —
+    a group with no row for a conjunct's column is pruned); per
+    partition, the newest epoch whose wanted column set is complete,
+    short-circuited to epoch 0 when no wanted column has a later epoch
+    (mirrors pipeline._epoch_keep_filter, so predicated and
+    unpredicated decodes select the same stripe sets); then the bloom
+    veto (AND across conjuncts, OR across IN-list members; absent or
+    cross-domain blobs keep). Semantics equal the distributed metadata
+    job in :func:`fused_prune`.
 
-    Caller guarantees the metadata fits the driver budget
-    (_driver_plan_budget_ok). Returns the filtered stripes DF, or
-    None when survivors exceed ``max_groups`` (caller falls back to
-    the distributed join path).
+    Returns sorted (partition_id, epoch, stripe_idx) keys, or None when
+    more than ``max_groups`` groups pass the zones (None = no cap).
     """
     want_set = set(want)
     pcols = {c for c, _, _ in predicate}
-    proj = (
-        stripes.drop("data")
-        .filter(F.col("status") == "completed")
-        .filter(F.col("column").isin(sorted(want_set | pcols)))
-    )
-    has_bloom = "bloom" in stripes.columns
-    n = len(predicate)
-    flag_cols = []
-    probe_vals: dict[int, list] = {}  # conjunct idx -> IN-list values
+    ctype = meta.schema.field("column").type
+    meta = meta.filter(
+        pc.and_(
+            pc.equal(meta["status"], "completed"),
+            pc.is_in(
+                meta["column"],
+                value_set=pa.array(sorted(want_set | pcols), type=ctype),
+            ),
+        )
+    ).combine_chunks()
+    gkeys = ["partition_id", "epoch", "stripe_idx"]
+    col = meta["column"]
+    flags = {k: meta[k] for k in gkeys}
     for i, (c, op, value) in enumerate(predicate):
-        cond = _conjunct_keep(op, value, pin=(pins or {}).get(c))
-        proj = proj.withColumn(
-            f"_k{i}", F.when(F.col("column") == c, cond.cast("int"))
+        k = conjunct_keep_arrow(meta, op, value, pin=(pins or {}).get(c))
+        flags[f"_k{i}"] = pc.if_else(
+            pc.equal(col, c), k.cast(pa.int8()), pa.scalar(None, pa.int8())
         )
-        flag_cols.append(f"_k{i}")
-        pvals = _bloom_probe_vals(op, value)
-        if has_bloom and pvals is not None:
-            vals = pvals
-            if vals and all(
-                _probe_hash_pairs(op, v) is not None for v in vals
-            ):
-                probe_vals[i] = vals
-    sel = ["partition_id", "epoch", "stripe_idx", "column", *flag_cols]
-    if probe_vals:
-        probe_cols = sorted({predicate[i][0] for i in probe_vals})
-        proj = proj.withColumn(
-            "_bloom",
-            F.when(F.col("column").isin(probe_cols), F.col("bloom")),
-        )
-        sel.append("_bloom")
-    rows = proj.select(*sel).collect()  # single stage: scan+flags only
-
-    base = stripes.filter(F.col("status") == "completed")
-    if not rows:
-        return base.filter(F.lit(False))
-
-    conj_col = {i: c for i, (c, _, _) in enumerate(predicate)}
-    epoch_cols: dict[tuple[int, int], set[str]] = {}
-    flags: dict[tuple[int, int, int], list] = {}
-    blooms: dict[tuple[tuple[int, int, int], int], bytes] = {}
-    gmax = 0
-    for r in rows:
-        pid, ep, sidx = int(r.partition_id), int(r.epoch), int(r.stripe_idx)
-        if r.column in want_set:
-            epoch_cols.setdefault((pid, ep), set()).add(r.column)
-            if ep > gmax:
-                gmax = ep
-        key = (pid, ep, sidx)
-        g = flags.get(key)
-        if g is None:
-            g = flags[key] = [None] * n
-        for i in range(n):
-            v = r[4 + i]
-            if v is not None and (g[i] is None or v > g[i]):
-                g[i] = v  # F.max over the group's rows
-        if probe_vals and r.column in pcols and r[-1] is not None:
-            for i in probe_vals:
-                if conj_col[i] == r.column:
-                    blooms.setdefault((key, i), bytes(r[-1]))
-
-    # newest COMPLETE epoch per partition; epoch-0 short-circuit
-    # mirrors _epoch_keep_filter (single-epoch runs skip completeness)
-    if gmax == 0:
-        best = {key[0]: 0 for key in flags}
+    g = pa.table(flags).group_by(gkeys, use_threads=False).aggregate(
+        [(f"_k{i}", "max") for i in range(len(predicate))]
+    )
+    w = meta.filter(
+        pc.is_in(col, value_set=pa.array(sorted(want_set), type=ctype))
+    )
+    if not w.num_rows or pc.max(w["epoch"]).as_py() == 0:
+        keep = pc.equal(g["epoch"], 0)
     else:
-        best = {}
-        for (pid, ep), cols in epoch_cols.items():
-            if len(cols) >= len(want_set) and ep > best.get(pid, -1):
-                best[pid] = ep
-    survivors = [
-        key
-        for key, g in flags.items()
-        if best.get(key[0]) == key[1] and all(v == 1 for v in g)
-    ]
-    if len(survivors) > max_groups:
-        return None  # not a lookup — distributed path handles it
-    # driver-side bloom veto: AND across conjuncts, OR across IN-list
-    # members; absent/cross-domain blobs keep (bloom_membership)
-    for i, vals in probe_vals.items():
-        blobs = [blooms.get((key, i)) for key in survivors]
-        keep = np.zeros(len(survivors), dtype=bool)
-        for v in vals:
-            pairs, domain = _probe_hash_pairs(predicate[i][1], v)
-            keep |= bloom_membership(blobs, pairs, domain)
-        survivors = [k for k, kp in zip(survivors, keep.tolist()) if kp]
-    if not survivors:
-        return base.filter(F.lit(False))
-    pids = sorted({key[0] for key in survivors})
-    group_keys = [f"{pid}:{ep}:{sidx}" for pid, ep, sidx in survivors]
-    return base.filter(
-        F.col("partition_id").isin(pids)  # pushed to the parquet scan
+        per = w.group_by(["partition_id", "epoch"]).aggregate(
+            [("column", "count_distinct")]
+        )
+        best = per.filter(
+            pc.greater_equal(per["column_count_distinct"], len(want_set))
+        ).group_by("partition_id").aggregate([("epoch", "max")])
+        best_ep = pc.take(
+            best["epoch_max"],
+            pc.index_in(g["partition_id"], value_set=best["partition_id"]),
+        )
+        keep = pc.fill_null(pc.equal(g["epoch"], best_ep), False)
+    for i in range(len(predicate)):
+        keep = pc.and_(keep, pc.fill_null(pc.equal(g[f"_k{i}_max"], 1), False))
+    surv = g.filter(keep)
+    if max_groups is not None and surv.num_rows > max_groups:
+        return None
+    if "bloom" in meta.column_names:
+        for c, op, value in predicate:
+            vals = _bloom_probe_vals(op, value)
+            if not vals or any(_probe_hash_pairs(op, v) is None for v in vals):
+                continue
+            brows = meta.filter(
+                pc.and_(pc.equal(col, c), pc.is_valid(meta["bloom"]))
+            )
+            blobs = pc.take(
+                brows["bloom"],
+                pc.index_in(
+                    group_key_strings(surv), value_set=group_key_strings(brows)
+                ),
+            )
+            kept = np.zeros(surv.num_rows, dtype=bool)
+            for v in vals:
+                pairs, domain = _probe_hash_pairs(op, v)
+                kept |= bloom_membership(blobs, pairs, domain)
+            surv = surv.filter(pa.array(kept))
+    return sorted(zip(*(surv[k].to_pylist() for k in gkeys)))
+
+
+def restrict_groups(stripes: DataFrame, keys) -> DataFrame:
+    """Keep only the listed (partition_id, epoch, stripe_idx) groups.
+    Up to _PUSHDOWN_MAX_GROUPS keys become LITERAL filters:
+    `partition_id isin` reaches the parquet scan as a pushed filter
+    (encode tasks write one file per partition, so whole blob files
+    are skipped) and the group-key match is exact, post-scan. A larger
+    keep-set semi-joins a broadcast key table instead."""
+    if len(keys) > _PUSHDOWN_MAX_GROUPS:
+        gdf = stripes.sparkSession.createDataFrame(
+            [(int(p), int(e), int(s)) for p, e, s in keys],
+            "partition_id int, epoch bigint, stripe_idx int",
+        )
+        return stripes.join(
+            F.broadcast(gdf), ["partition_id", "epoch", "stripe_idx"], "left_semi"
+        )
+    if not keys:
+        return stripes.filter(F.lit(False))
+    pids = sorted({int(p) for p, _, _ in keys})
+    group_keys = [f"{int(p)}:{int(e)}:{int(s)}" for p, e, s in keys]
+    return stripes.filter(
+        F.col("partition_id").isin(pids)
         & F.concat_ws(":", "partition_id", "epoch", "stripe_idx").isin(group_keys)
     )
 
@@ -891,10 +1046,10 @@ def fused_prune(
 
     ``stripes_path`` (local/posix dirs only — pass None for Iceberg):
     when the run's blob-free metadata fits the driver budget measured
-    from parquet footers, planning runs via :func:`_fused_prune_driver`
-    — one single-stage collect instead of a three-exchange metadata
-    job. Identical semantics; at 100 TB the budget gate always routes
-    here, to the distributed path below.
+    from parquet footers, the metadata rows are collected as Arrow
+    (one single-stage job, no exchange) and planned by
+    :func:`plan_keep_groups`. Identical semantics; at 100 TB the
+    budget gate always routes to the distributed path below.
 
     Epoch completeness: when the newest wanted-column epoch is 0 the
     completeness requirement short-circuits (every epoch-0 group kept,
@@ -906,17 +1061,20 @@ def fused_prune(
     from pyspark.sql import Window
 
     want = sorted(want_cols)
-    if stripes_path is not None and _driver_plan_budget_ok(stripes_path):
-        return _fused_prune_driver(stripes, want, predicate, max_groups, pins)
     pcols = {c for c, _, _ in predicate}
-    proj = (
-        stripes.drop("data")
-        .filter(F.col("status") == "completed")
-        .filter(F.col("column").isin(sorted(set(want) | pcols)))
+    base = stripes.filter(F.col("status") == "completed")
+    proj = base.drop("data").filter(
+        F.col("column").isin(sorted(set(want) | pcols))
     )
+    has_bloom = "bloom" in stripes.columns
+    if stripes_path is not None and _driver_plan_budget_ok(stripes_path):
+        meta = proj.select(
+            *[c for c in PLAN_COLUMNS if has_bloom or c != "bloom"]
+        ).toArrow()
+        keys = plan_keep_groups(meta, want, predicate, pins, max_groups)
+        return None if keys is None else restrict_groups(base, keys)
     flags = []
     bloom_probes: dict[str, list] = {}  # agg alias -> probe values
-    has_bloom = "bloom" in stripes.columns
     for i, (c, op, value) in enumerate(predicate):
         cond = _conjunct_keep(op, value, pin=(pins or {}).get(c))
         # null when the group has no row for the conjunct's column —
@@ -990,16 +1148,8 @@ def fused_prune(
             pairs, domain = _probe_hash_pairs(p_op, v)
             keep |= bloom_membership(blobs, pairs, domain)
         keys = [r for r, k in zip(keys, keep.tolist()) if k]
-    base = stripes.filter(F.col("status") == "completed")
-    if not keys:
-        return base.filter(F.lit(False))
-    pids = sorted({int(r.partition_id) for r in keys})
-    group_keys = [
-        f"{int(r.partition_id)}:{int(r.epoch)}:{int(r.stripe_idx)}" for r in keys
-    ]
-    return base.filter(
-        F.col("partition_id").isin(pids)  # pushed to the parquet scan
-        & F.concat_ws(":", "partition_id", "epoch", "stripe_idx").isin(group_keys)
+    return restrict_groups(
+        base, [(r.partition_id, r.epoch, r.stripe_idx) for r in keys]
     )
 
 

@@ -24,6 +24,13 @@ def _slow_count(spark, seconds: float, n: int = 64):
 
 
 def test_parallel_jobs_run_concurrently(spark):
+    slots = spark.sparkContext.defaultParallelism
+    if slots < 2:
+        pytest.skip(f"two jobs cannot overlap on {slots} slot(s)")
+    # warm a Python worker per slot first: a fresh session's first job
+    # pays seconds of worker start-up, which would time the cold start
+    # instead of the overlap
+    _slow_count(spark, 0.2, slots)()
     t0 = time.time()
     res = parallel.run_parallel_jobs(
         spark,
