@@ -741,40 +741,31 @@ def cmd_plan(args) -> int:
     predicate = [_parse_where(w) for w in args.where]
     # classification only — metadata_count would also decode; reuse
     # its classifier pieces for the dry-run
-    stripes = pipeline.read_stripes(spark, args.out, args.run_id)
     pcols = sorted({c for c, _, _ in predicate})
     want_tops = {c.partition(".")[0] for c in pcols}
     pins = pipeline._temporal_pins(schema, predicate)
-    fast = pipeline._classify_driver(
-        spark, args.out, stripes, pcols, want_tops, predicate, pins
-    )
-    if fast is not None:
-        groups, present, _ = fast
+    try:
         # same loud contract as metadata_count: a misspelled /
         # stats-less predicate column must error, not print an
         # all-zero classification that reads as "everything prunes"
-        missing = sorted(
-            {predicate[j][0] for j in range(len(predicate))
-             if not present[j]}
-        )
-        if missing:
-            raise SystemExit(
-                f"error: no stats rows for predicate column(s) "
-                f"{missing} in run {args.run_id!r}"
-            )
-        n_none = sum(1 for g in groups.values() if not g["keep"])
-        n_all = sum(1 for g in groups.values() if g["keep"] and g["all_"])
-        n_mixed = sum(1 for g in groups.values() if g["keep"] and not g["all_"])
-        rows_all = sum(
-            g["n_rows"] for g in groups.values() if g["keep"] and g["all_"]
-        )
-        rows_mixed = sum(
-            g["n_rows"] for g in groups.values()
-            if g["keep"] and not g["all_"]
-        )
+        fast = pipeline._driver_classify(args.out, args.run_id, predicate, pins)
+    except ValueError as e:
+        raise SystemExit(f"error: {e}") from None
+    if fast is not None:
+        import pyarrow.compute as pc
+
+        groups = fast[2]
+        kept = groups.filter(groups["keep"])
+        proven = kept.filter(kept["all"])
+        mixed = kept.filter(pc.invert(kept["all"]))
+        n_none = groups.num_rows - kept.num_rows
+        n_all, n_mixed = proven.num_rows, mixed.num_rows
+        rows_all = pc.sum(proven["n_rows"]).as_py() or 0
+        rows_mixed = pc.sum(mixed["n_rows"]).as_py() or 0
     else:
         from pyspark.sql import functions as F
 
+        stripes = pipeline.read_stripes(spark, args.out, args.run_id)
         meta = pipeline._epoch_keep_filter(
             spark, stripes, want_tops
         ).drop("data").filter(F.col("column").isin(pcols))

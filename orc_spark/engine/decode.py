@@ -39,6 +39,7 @@ def decode_stage(
     residual: list | None = None,
     emit_positions: bool = False,
     eq_deletes: list | None = None,
+    session_tz: str | None = None,
 ) -> DataFrame:
     """Rebuild the original (encoded-column subset of the) table.
 
@@ -48,11 +49,11 @@ def decode_stage(
     ``residual`` — zonemap conjuncts applied ROW-LEVEL inside the
     decode task (Arrow compute over the just-rebuilt batch — the ORC
     SearchArgument row-filter analogue): rows that provably fail the
-    predicate never cross the Arrow->Spark boundary. Conservative
-    under Spark semantics (float NaN rows always kept, uncastable
-    comparisons skip filtering), so callers still apply
-    ``zonemap.predicate_expr`` — which then drops at most the kept
-    NaN/uncertain rows.
+    predicate never cross the Arrow->Spark boundary. Exact under Spark
+    semantics where zonemap.rows_match_arrow can express a conjunct
+    (``session_tz`` — the Spark session time zone — decides the
+    zone-less timestamp casts); a conjunct it cannot express keeps
+    every row, so callers still apply ``zonemap.predicate_expr``.
 
     ``verify_checksums=True`` recomputes each decoded stripe's value
     checksum and compares it against the one the ENCODE task recorded
@@ -102,7 +103,7 @@ def decode_stage(
     """
     spec = DecodeSpec.build(
         result_schema, columns, fill_missing, missing_defaults,
-        verify_checksums, residual, emit_positions, eq_deletes,
+        verify_checksums, residual, emit_positions, eq_deletes, session_tz,
     )
     if not colocated:
         stripes = stripes.repartition(F.col("partition_id"), F.col("stripe_idx"))
@@ -124,12 +125,13 @@ class DecodeSpec:
     residual: list | None
     emit_positions: bool
     eq_deletes: list | None
+    session_tz: str | None
 
     @classmethod
     def build(
         cls, result_schema: StructType, columns=None, fill_missing=None,
         missing_defaults=None, verify_checksums=False, residual=None,
-        emit_positions=False, eq_deletes=None,
+        emit_positions=False, eq_deletes=None, session_tz=None,
     ) -> "DecodeSpec":
         from pyspark.sql.pandas.types import to_arrow_type
 
@@ -154,6 +156,7 @@ class DecodeSpec:
             missing_defaults=missing_defaults or {},
             verify_checksums=verify_checksums, residual=residual,
             emit_positions=emit_positions, eq_deletes=eq_deletes,
+            session_tz=session_tz,
         )
 
     @property
@@ -263,7 +266,7 @@ def decode_batches(
                     [nm for nm in out.schema.names if nm not in spec.hidden]
                 )
             if spec.residual:
-                out = _apply_residual(out, spec.residual)
+                out = _apply_residual(out, spec.residual, spec.session_tz)
             yield out
             del pending[key]
     if pending:
@@ -307,84 +310,14 @@ def _apply_eq_deletes(
     return batch.filter(keep)
 
 
-def _apply_residual(batch: pa.RecordBatch, predicate: list) -> pa.RecordBatch:
-    """Row-level conservative filter on a rebuilt batch. Keeps a row
-    unless it PROVABLY fails the conjunction under Spark semantics:
-    float NaNs are always kept (Spark orders NaN above all numbers —
-    Arrow IEEE comparisons would wrongly drop them), and any conjunct
-    whose Arrow comparison cannot be built (type mismatch) keeps all
-    rows. Null comparisons drop, matching Spark's WHERE."""
-    import pyarrow.compute as pc
+def _apply_residual(
+    batch: pa.RecordBatch, predicate: list, session_tz: str | None = None
+) -> pa.RecordBatch:
+    """Row-level filter on a rebuilt batch: the exact Arrow form of
+    zonemap.predicate_expr (zonemap.rows_match_arrow — Spark's NaN
+    ordering and type widening, null comparisons drop as in WHERE).
+    A conjunct with no exact Arrow form keeps every row."""
+    from .zonemap import rows_match_arrow
 
-    names = set(batch.schema.names)
-    mask = None
-    for col, op, value in predicate:
-        root, _, path = col.partition(".")
-        if root not in names:
-            continue
-        c = batch.column(batch.schema.get_field_index(root))
-        if path:
-            # nested-column predicate ("meta.status"): descend via
-            # struct_field — parent nulls propagate into the child,
-            # matching Spark's meta.status IS NULL when meta is null
-            try:
-                c = pc.struct_field(c, path.split("."))
-            except (pa.ArrowInvalid, KeyError, TypeError):
-                continue  # unknown path -> keep every row (conservative)
-        try:
-            if op == "is_null":
-                m = pc.is_null(c)
-            elif op == "not_null":
-                m = pc.is_valid(c)
-            elif op == "!=":
-                m = pc.not_equal(c, _residual_scalar(value, c.type))
-            elif op == "in":
-                m = pc.is_in(c, value_set=pa.array(list(value), type=c.type))
-            elif op == "like_prefix":
-                m = pc.starts_with(c, pattern=str(value))
-            elif op == "contains_token":
-                # boundary regex ≡ membership in the [a-z0-9]+ token
-                # split (validated upstream: alphanumeric, no escaping)
-                from .zonemap import _norm_token
-
-                tok = _norm_token(value)
-                if tok is None:
-                    continue  # not a token: conservative keep
-                m = pc.match_substring_regex(
-                    pc.utf8_lower(c),
-                    pattern=f"(^|[^a-z0-9]){tok}([^a-z0-9]|$)",
-                )
-            elif op == "between":
-                m = pc.and_kleene(
-                    pc.greater_equal(c, _residual_scalar(value[0], c.type)),
-                    pc.less_equal(c, _residual_scalar(value[1], c.type)),
-                )
-            else:
-                fn = {
-                    "==": pc.equal, "=": pc.equal,
-                    ">": pc.greater, ">=": pc.greater_equal,
-                    "<": pc.less, "<=": pc.less_equal,
-                }[op]
-                m = fn(c, _residual_scalar(value, c.type))
-            if pa.types.is_floating(c.type):
-                m = pc.or_kleene(m, pc.is_nan(c))  # Spark-NaN conservatism
-        except (pa.ArrowInvalid, pa.ArrowNotImplementedError, pa.ArrowTypeError, TypeError, ValueError):
-            continue  # can't express -> keep every row for this conjunct
-        mask = m if mask is None else pc.and_kleene(mask, m)
-    if mask is None:
-        return batch
-    return batch.filter(mask)  # null mask entries drop, like Spark WHERE
-
-
-def _residual_scalar(value, t: pa.DataType):
-    """Predicate literal -> Arrow scalar of the column's type (so a
-    CLI date compares against a timestamp column and vice versa)."""
-    import datetime as _dt
-
-    if pa.types.is_timestamp(t) and isinstance(value, _dt.date) and not isinstance(value, _dt.datetime):
-        value = _dt.datetime(value.year, value.month, value.day)
-    if pa.types.is_date32(t) and isinstance(value, _dt.datetime):
-        if value.time() != _dt.time():
-            raise TypeError("datetime with time-of-day vs date column")
-        value = value.date()
-    return pa.scalar(value, type=t) if not isinstance(value, float) or pa.types.is_floating(t) else pa.scalar(value)
+    mask, _ = rows_match_arrow(batch, predicate, session_tz)
+    return batch if mask is None else batch.filter(mask)

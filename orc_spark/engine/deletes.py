@@ -233,22 +233,19 @@ def read_eq_deletes(out_dir: str, run_id: str) -> list[tuple[str, list]]:
 def delete_stats(spark: SparkSession, out_dir: str, run_id: str) -> dict:
     """Live-delete accounting for reports/doctor: vectors, touched
     stripe groups, marked rows (upper bound — overlapping delete
-    files may re-mark a row)."""
-    df = read_delete_vectors(spark, out_dir, run_id)
-    if df is None:
+    files may re-mark a row). Read with pyarrow: no Spark job."""
+    d = deletes_dir(out_dir)
+    if not os.path.isdir(d):
         out = {"n_vectors": 0, "n_groups": 0, "rows_marked_ub": 0}
     else:
-        agg = df.agg(
-            F.count(F.lit(1)).alias("nv"),
-            F.countDistinct(
-                "partition_id", "epoch", "stripe_idx"
-            ).alias("ng"),
-            F.sum("n_deleted").alias("nr"),
-        ).first()
+        import pyarrow.compute as pc
+
+        t = _read_run_arrow(d, DELETES_SCHEMA, run_id)
+        keys = t.select(_GROUP_KEYS[1:]).drop_null()
         out = {
-            "n_vectors": int(agg.nv),
-            "n_groups": int(agg.ng),
-            "rows_marked_ub": int(agg.nr or 0),
+            "n_vectors": t.num_rows,
+            "n_groups": keys.group_by(keys.column_names).aggregate([]).num_rows,
+            "rows_marked_ub": pc.sum(t["n_deleted"]).as_py() or 0,
         }
     out["n_eq_values"] = sum(
         len(vs) for _, vs in read_eq_deletes(out_dir, run_id)

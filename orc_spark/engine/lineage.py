@@ -93,31 +93,42 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     return storage.read_table(spark, lineage_dir(out_dir), LINEAGE_SCHEMA)
 
 
+def complete_partition_ids(stripes: DataFrame, columns: list[str]) -> DataFrame:
+    """Distinct ``partition_id`` of the (partition, epoch) pairs whose
+    completed rows cover every one of ``columns``. Only those
+    top-level encoded columns count: the stats rows of a struct's
+    descendants (``meta.status``) ride their parent's stripes and must
+    not stand in for a column that failed."""
+    return (
+        stripes.filter(
+            (F.col("status") == "completed") & F.col("column").isin(list(columns))
+        )
+        .groupBy("partition_id", "epoch")
+        .agg(F.countDistinct("column").alias("n_cols"))
+        .filter(F.col("n_cols") >= len(set(columns)))
+        .select("partition_id")
+        .distinct()
+    )
+
+
 def completed_partitions(
-    spark: SparkSession, out_dir: str, run_id: str, n_columns: int
+    spark: SparkSession, out_dir: str, run_id: str, columns: list[str]
 ) -> list[int]:
     """Partitions with a complete column set committed IN ONE EPOCH.
 
     The same-epoch requirement is the row-alignment invariant: columns
     encoded in different passes may have different Arrow batch
     boundaries and row order, so a partition only counts as done when
-    one encode pass produced all of its columns — a partition with a
-    failed stripe stays todo and is re-encoded whole at the next epoch.
+    one encode pass produced all of its ``columns`` — a partition with
+    a failed stripe stays todo and is re-encoded whole at the next
+    epoch.
     """
     if not os.path.exists(lineage_dir(out_dir)):
         return []  # fresh run: no Spark job needed
-    lin = read_lineage(spark, out_dir).filter(
-        (F.col("run_id") == run_id) & (F.col("status") == "completed")
+    lin = read_lineage(spark, out_dir).filter(F.col("run_id") == run_id)
+    return sorted(
+        r.partition_id for r in complete_partition_ids(lin, columns).collect()
     )
-    rows = (
-        lin.groupBy("partition_id", "epoch")
-        .agg(F.countDistinct("column").alias("n_cols"))
-        .filter(F.col("n_cols") >= n_columns)
-        .select("partition_id")
-        .distinct()
-        .collect()
-    )
-    return sorted(r.partition_id for r in rows)
 
 
 def next_epoch(spark: SparkSession, out_dir: str, run_id: str) -> int:

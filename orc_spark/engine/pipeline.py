@@ -201,7 +201,7 @@ def run_encode_job(
 
     pid = skew.partition_id_expr(cfg.n_partitions, cfg.key, cfg.salt)
     done = lineage_mod.completed_partitions(
-        spark, cfg.out_dir, cfg.run_id, n_columns=len(columns)
+        spark, cfg.out_dir, cfg.run_id, columns
     )
     # Crash-consistency: a kill between the stripe commit and the
     # lineage append leaves partitions whose data IS durable but whose
@@ -217,11 +217,9 @@ def run_encode_job(
         )
         stripe_done = {
             r.partition_id
-            for r in stripe_meta.filter(F.col("status") == "completed")
-            .groupBy("partition_id", "epoch")
-            .agg(F.countDistinct("column").alias("nc"))
-            .filter(F.col("nc") >= len(columns))
-            .collect()
+            for r in lineage_mod.complete_partition_ids(
+                stripe_meta, columns
+            ).collect()
         }
         orphans = stripe_done - set(done)
         if orphans:
@@ -963,6 +961,9 @@ def decode_job(
         # zonemap.predicate_expr stays the exactness gate
         residual=predicate,
         emit_positions=_emit_positions,
+        session_tz=(
+            spark.conf.get("spark.sql.session.timeZone") if predicate else None
+        ),
     )
     sdir = lineage_mod.stripes_dir(out_dir)
     driver_plannable = (
@@ -2046,123 +2047,19 @@ def _bloom_relevant(predicate: list[tuple]) -> bool:
     return any(op in ("==", "=", "in", "contains_token") for _, op, _ in predicate)
 
 
-def _classify_driver(
-    spark: SparkSession,
-    out_dir: str,
-    stripes: DataFrame,
-    need: list[str],
-    want_tops: set[str],
-    predicate: list[tuple],
-    pins: dict,
-    target: str | None = None,
-):
-    """Driver-side fast path for the ALL/NONE/MIXED classifier — the
-    metadata_count/metadata_sum counterpart of zonemap.plan_keep_groups,
-    with Spark Column flags: ONE single-stage Spark job (scan -> per-row conjunct flags ->
-    collect, no exchange) and the group/epoch logic as a dict walk on
-    the driver. Budget-gated on the parquet footers
-    (zonemap._driver_plan_budget_ok); returns None past the budget and
-    the distributed aggregation takes over — at 100 TB that gate
-    always routes distributed.
+def _tops_schema(result_schema, cols):
+    """(tops, schema): the sorted top-level parents of ``cols`` (dotted
+    names decode their parent struct) and ``result_schema`` cut to
+    them in that order — decode_job pairs schema fields with
+    ``columns`` positionally."""
+    from pyspark.sql.types import StructType
 
-    Semantics mirror the distributed path 1:1 by construction: the
-    per-row flags are the SAME Spark expressions (_conjunct_keep /
-    _conjunct_all with the caller's pins), group flags are max-over-
-    rows, epoch completeness counts distinct want_tops columns per
-    (partition, epoch) with the same epoch-0 short-circuit as
-    _epoch_keep_filter.
-
-    Returns (groups, present, tgt_present): groups maps
-    (partition_id, epoch, stripe_idx) -> dict(n_rows, keep, all_,
-    sum_int, sum_num, nn); present[j] says conjunct j's column had a
-    stats row anywhere.
-    """
-    sdir = lineage_mod.stripes_dir(out_dir)
-    if storage.is_iceberg(sdir) or not zonemap._driver_plan_budget_ok(sdir):
-        return None
-    scan_cols = sorted(set(need) | set(want_tops))
-    proj = (
-        stripes.drop("data")
-        .filter(F.col("status") == "completed")
-        .filter(F.col("column").isin(scan_cols))
-    )
-    n = len(predicate)
-    for j, (col, op, val) in enumerate(predicate):
-        hit = F.col("column") == col
-        proj = proj.withColumn(
-            f"_k{j}",
-            F.when(
-                hit,
-                zonemap._conjunct_keep(op, val, pin=pins.get(col)).cast("int"),
-            ),
-        ).withColumn(
-            f"_a{j}",
-            F.when(
-                hit,
-                zonemap._conjunct_all(op, val, pin=pins.get(col)).cast("int"),
-            ),
-        )
-    sel = [
-        "partition_id", "epoch", "stripe_idx", "column", "n_rows",
-        "null_count", "sum_int", "sum_num",
-        *[f"_k{j}" for j in range(n)], *[f"_a{j}" for j in range(n)],
-        "m2",  # appended LAST: the _k/_a flags index positionally at 8+j
-    ]
-    rows = proj.select(*sel).collect()  # single stage, no exchange
-    # epoch completeness on the driver (mirrors _epoch_keep_filter)
-    epoch_cols: dict[tuple[int, int], set[str]] = {}
-    gmax = 0
-    for r in rows:
-        if r.column in want_tops:
-            key = (int(r.partition_id), int(r.epoch))
-            epoch_cols.setdefault(key, set()).add(r.column)
-            gmax = max(gmax, key[1])
-    if gmax == 0:
-        kept = None  # epoch-0 short-circuit: every completed group
-    else:
-        best: dict[int, int] = {}
-        for (pid, ep), cols in epoch_cols.items():
-            if len(cols) >= len(want_tops):
-                best[pid] = max(best.get(pid, -1), ep)
-        kept = best
-    groups: dict[tuple, dict] = {}
-    present = [False] * n
-    tgt_present = False
-    pcols = [c for c, _, _ in predicate]
-    for r in rows:
-        pid, ep = int(r.partition_id), int(r.epoch)
-        if kept is not None and kept.get(pid) != ep:
-            continue
-        key = (pid, ep, int(r.stripe_idx))
-        g = groups.get(key)
-        if g is None:
-            g = groups[key] = {
-                "n_rows": 0, "k": [None] * n, "a": [None] * n,
-                "sum_int": None, "sum_num": None, "nn": None, "m2": None,
-            }
-        g["n_rows"] = max(g["n_rows"], int(r.n_rows))
-        for j in range(n):
-            if r.column == pcols[j]:
-                present[j] = True
-                kv, av = r[8 + j], r[8 + n + j]
-                if kv is not None and (g["k"][j] is None or kv > g["k"][j]):
-                    g["k"][j] = kv
-                if av is not None and (g["a"][j] is None or av > g["a"][j]):
-                    g["a"][j] = av
-        if target is not None and r.column == target:
-            tgt_present = True
-            g["sum_int"] = r.sum_int
-            g["sum_num"] = r.sum_num
-            g["m2"] = r.m2
-            g["nn"] = int(r.n_rows) - int(r.null_count or 0)
-    for g in groups.values():
-        g["keep"] = all(
-            (g["k"][j] if g["k"][j] is not None else 1) == 1 for j in range(n)
-        )
-        g["all_"] = all(
-            (g["a"][j] if g["a"][j] is not None else 0) == 1 for j in range(n)
-        )
-    return groups, present, tgt_present
+    tops = sorted({c.partition(".")[0] for c in cols})
+    by_name = {f.name: f for f in result_schema.fields}
+    lost = sorted(set(tops) - set(by_name))
+    if lost:
+        raise ValueError(f"column(s) {lost} not in result_schema")
+    return tops, StructType([by_name[t] for t in tops])
 
 
 def _restricted_decode(
@@ -2177,20 +2074,11 @@ def _restricted_decode(
     """Shared tail of every metadata aggregate: decode ONLY the stripe
     groups in ``only`` (list => literal pushdown, DataFrame =>
     semi-join; see decode_job(_only_groups)), projecting the top-level
-    parents of ``cols`` (dotted names decode their parent struct;
-    field order follows the sorted tops — decode_job pairs schema
-    fields with `columns` positionally). The in-decode fused prune is
-    engaged only when the predicate carries bloom-relevant conjuncts
-    (equality/IN/token) — for pure range predicates the caller's
-    classifier already did all the zone math."""
-    from pyspark.sql.types import StructType
-
-    tops = sorted({c.partition(".")[0] for c in cols})
-    by_name = {f.name: f for f in result_schema.fields}
-    lost = sorted(set(tops) - set(by_name))
-    if lost:
-        raise ValueError(f"column(s) {lost} not in result_schema")
-    sub = StructType([by_name[t] for t in tops])
+    parents of ``cols`` (:func:`_tops_schema`). The in-decode fused
+    prune is engaged only when the predicate carries bloom-relevant
+    conjuncts (equality/IN/token) — for pure range predicates the
+    caller's classifier already did all the zone math."""
+    tops, sub = _tops_schema(result_schema, cols)
     return decode_job(
         spark, out_dir, run_id, sub, columns=tops,
         predicate=(
@@ -2198,6 +2086,98 @@ def _restricted_decode(
         ),
         _only_groups=only,
     )
+
+
+def _driver_classify(out_dir, run_id, predicate, pins, target=None):
+    """The ALL/NONE/MIXED classifier of metadata_count, metadata_sum
+    and metadata_stddev on the driver, for a local stripes dir whose
+    metadata fits the footer budget (zonemap._driver_plan_budget_ok):
+    the blob-free metadata is read with pyarrow and classified by
+    zonemap.classify_groups — no Spark job. None for Iceberg tables
+    and stores over the budget (the distributed classifier's case).
+
+    Raises when a predicate column (or ``target``) has no stats row.
+    Returns (dataset, metadata table, classified groups)."""
+    import pyarrow.dataset as ds
+
+    from . import retention
+
+    sdir = lineage_mod.stripes_dir(out_dir)
+    if storage.is_iceberg(sdir):
+        return None
+    retention.recover_swap(sdir)  # as read_stripes: restore first
+    if not zonemap._driver_plan_budget_ok(sdir):
+        return None
+    dset = _stripes_dataset(out_dir)
+    cols = [
+        c for c in zonemap.PLAN_COLUMNS
+        if c != "bloom" or _bloom_relevant(predicate)
+    ]
+    meta = dset.to_table(
+        columns=[*cols, "bytes_in", "sum_int", "sum_num", "m2"],
+        filter=ds.field("run_id") == run_id,
+    )
+    need = {c for c, _, _ in predicate} | ({target} if target else set())
+    groups, present, target_present = zonemap.classify_groups(
+        meta, {c.partition(".")[0] for c in need}, predicate, pins, target
+    )
+    missing = sorted({c for (c, _, _), p in zip(predicate, present) if not p})
+    if missing:
+        raise ValueError(
+            f"no stats rows for predicate column(s) {missing} in run "
+            f"{run_id!r} — decode-and-aggregate instead"
+        )
+    if target is not None and not target_present:
+        raise ValueError(
+            f"no stats rows for column(s) [{target!r}] in run {run_id!r} "
+            "— decode-and-aggregate instead"
+        )
+    return dset, meta, groups
+
+
+def _count_mixed(spark, out_dir, run_id, result_schema, predicate, dset, meta, only):
+    """Rows of the MIXED stripe groups ``only`` that satisfy
+    ``predicate``. Within the _DRIVER_DECODE_MAX_* gate the groups
+    decode on the driver (decode_mod.decode_batches) and
+    zonemap.rows_match_arrow counts the matches: no Spark job. A
+    conjunct it cannot express exactly (contains_token, a type pairing
+    outside its proven set) makes Spark count the decoded rows with
+    predicate_expr instead (one job). Larger sets decode as tasks."""
+    import pyarrow as pa
+
+    pcols = [c for c, _, _ in predicate]
+    tops, sub = _tops_schema(result_schema, pcols)
+    spec = decode_mod.DecodeSpec.build(sub, tops)
+    gkeys = pa.array([f"{p}:{e}:{s}" for p, e, s in only], pa.string())
+    n_rows, n_bytes = _decoded_size(meta, gkeys, spec.want)
+    if n_rows <= _DRIVER_DECODE_MAX_ROWS and n_bytes <= _DRIVER_DECODE_MAX_BYTES:
+        table = _driver_decode(
+            dset, out_dir, run_id, only, gkeys, spec, sub, apply_deletes=False
+        )
+        mask, exact = zonemap.rows_match_arrow(
+            table, predicate, spark.conf.get("spark.sql.session.timeZone")
+        )
+        if exact:
+            return table.filter(mask).num_rows
+        dec = spark.createDataFrame(table, sub)
+    else:
+        dec = _restricted_decode(
+            spark, out_dir, run_id, result_schema, pcols, predicate, only
+        )
+    return dec.filter(zonemap.predicate_expr(predicate)).count()
+
+
+def _key_restricted_stripes(spark, out_dir, run_id, result_schema, predicate):
+    """The run's stripes, cut to the partitions an ==/IN conjunct on
+    the partition key pins (:func:`_key_partition_restriction`):
+    partitions other than the literal's own cannot hold matching rows."""
+    stripes = read_stripes(spark, out_dir, run_id)
+    key_pids = _key_partition_restriction(
+        spark, out_dir, run_id, result_schema, predicate
+    )
+    if key_pids is not None:
+        stripes = stripes.filter(F.col("partition_id").isin(key_pids))
+    return stripes
 
 
 def _nested_field_type(result_schema, dotted: str):
@@ -2227,14 +2207,25 @@ def metadata_count(
     stripes — count pushdown over the zone maps (the ORC row-index /
     parquet `aggregatePushdown` trick, extended to predicates).
 
-    One blob-free metadata job classifies every kept stripe group per
-    conjunct: NONE (zone range provably excludes — contributes 0), ALL
+    Every stripe group is classified per conjunct: NONE (zone range or
+    bloom provably excludes — contributes 0), ALL
     (zonemap._conjunct_all proves EVERY row satisfies — contributes
     n_rows with zero data bytes), else MIXED. Only the mixed groups
-    are decoded (predicate columns only, through the ordinary fused
-    predicated decode, bloom vetoes included) and counted row-level.
-    On a clustered column the mixed set is the two boundary stripes of
-    the range — at 100 TB the count touches metadata + ~2 stripes.
+    are decoded (predicate columns only) and counted row-level. On a
+    clustered column the mixed set is the two boundary stripes of the
+    range — at 100 TB the count touches metadata + ~2 stripes.
+
+    Driver path: for a local stripes dir whose metadata fits the
+    footer budget (zonemap._driver_plan_budget_ok) the count starts no
+    Spark job. The metadata is read with pyarrow and classified by
+    zonemap.classify_groups; mixed groups within the
+    _DRIVER_DECODE_MAX_* gate decode on the driver and are counted by
+    zonemap.rows_match_arrow. Fallbacks: a conjunct that function
+    cannot express exactly (contains_token, a type pairing outside its
+    proven set) is counted by Spark over the driver-decoded rows (one
+    job); a mixed set over the gate decodes as Spark tasks. Iceberg
+    tables and stores over the budget classify with a distributed
+    metadata job.
 
     Exactness: ALL-proofs are sound under widened bounds and require
     null_count == 0 (SQL 3-value logic — one null breaks ALL); groups
@@ -2255,83 +2246,65 @@ def metadata_count(
             "describe the encoded rows; compact the run first"
         )
     pcols = sorted({c for c, _, _ in predicate})
-    stripes = read_stripes(spark, out_dir, run_id)
+    pins = _temporal_pins(result_schema, predicate)
+    gkeys = ["partition_id", "epoch", "stripe_idx"]
+    plan = _driver_classify(out_dir, run_id, predicate, pins)
+    if plan is not None:
+        import pyarrow.compute as pc
+
+        dset, meta, groups = plan
+        kept = groups.filter(groups["keep"])
+        mixed = kept.filter(pc.invert(kept["all"]))
+        meta_rows = pc.sum(kept.filter(kept["all"])["n_rows"]).as_py() or 0
+        detail = {
+            "n_all": kept.num_rows - mixed.num_rows,
+            "n_mixed": mixed.num_rows,
+            "rows_from_metadata": meta_rows,
+        }
+        only = list(zip(*(mixed[k].to_pylist() for k in gkeys)))
+        mixed_count = _count_mixed(
+            spark, out_dir, run_id, result_schema, predicate, dset, meta, only
+        ) if only else 0
+        return meta_rows + mixed_count, detail
     # key-equality fast path: groups outside the literal's own
     # partition(s) contribute 0 to a conjunct count by construction
-    key_pids = _key_partition_restriction(
+    stripes = _key_restricted_stripes(
         spark, out_dir, run_id, result_schema, predicate
     )
-    if key_pids is not None:
-        stripes = stripes.filter(F.col("partition_id").isin(key_pids))
     # epoch completeness is judged on TOP-LEVEL columns (nested stats
     # rows ride their parent's stripes); classification then reads the
     # exact (possibly dotted) stats rows
     want_tops = {c.partition(".")[0] for c in pcols}
-    pins = _temporal_pins(result_schema, predicate)
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    fast = _classify_driver(
-        spark, out_dir, stripes, pcols, want_tops, predicate, pins
-    )
-    if fast is not None:
-        # driver fast path: the whole classification is ONE
-        # single-stage metadata job (footer-budget-gated)
-        groups, present, _ = fast
-        missing = sorted(
-            {predicate[j][0] for j in range(len(predicate))
-             if not present[j]}
-        )
-        if missing:
-            raise ValueError(
-                f"no stats rows for predicate column(s) {missing} in "
-                f"run {run_id!r} — decode-and-aggregate instead"
-            )
-        meta_rows = sum(
-            g["n_rows"] for g in groups.values() if g["keep"] and g["all_"]
-        )
-        only = [k for k, g in groups.items() if g["keep"] and not g["all_"]]
-        n_mixed = len(only)
-        detail = {
-            "n_all": sum(
-                1 for g in groups.values() if g["keep"] and g["all_"]
-            ),
-            "n_mixed": n_mixed,
-            "rows_from_metadata": meta_rows,
-        }
-    else:
-        meta = _epoch_keep_filter(
-            spark, stripes, want_tops
-        ).drop("data").filter(F.col("column").isin(pcols))
-        cls = _classify_pred_groups(meta, predicate, gkeys, pins=pins)
-        # ONE metadata action: classification totals + the loud
-        # missing-column check ride the same aggregate
-        agg = cls.agg(
-            F.sum(F.when(F.col("_keep") & F.col("_all"), F.col("n_rows"))).alias("meta_rows"),
-            F.sum(F.when(F.col("_keep") & F.col("_all"), 1).otherwise(0)).alias("n_all"),
-            F.sum(F.when(F.col("_keep") & ~F.col("_all"), 1).otherwise(0)).alias("n_mixed"),
-            *_presence_aggs(predicate),
-        ).first()
-        _raise_missing(agg, predicate, run_id)
-        meta_rows = int(agg.meta_rows or 0)
-        n_mixed = int(agg.n_mixed or 0)
-        detail = {
-            "n_all": int(agg.n_all or 0),
-            "n_mixed": n_mixed,
-            "rows_from_metadata": meta_rows,
-        }
-        only = None
+    meta = _epoch_keep_filter(
+        spark, stripes, want_tops
+    ).drop("data").filter(F.col("column").isin(pcols))
+    cls = _classify_pred_groups(meta, predicate, gkeys, pins=pins)
+    # ONE metadata action: classification totals + the loud
+    # missing-column check ride the same aggregate
+    agg = cls.agg(
+        F.sum(F.when(F.col("_keep") & F.col("_all"), F.col("n_rows"))).alias("meta_rows"),
+        F.sum(F.when(F.col("_keep") & F.col("_all"), 1).otherwise(0)).alias("n_all"),
+        F.sum(F.when(F.col("_keep") & ~F.col("_all"), 1).otherwise(0)).alias("n_mixed"),
+        *_presence_aggs(predicate),
+    ).first()
+    _raise_missing(agg, predicate, run_id)
+    meta_rows = int(agg.meta_rows or 0)
+    n_mixed = int(agg.n_mixed or 0)
+    detail = {
+        "n_all": int(agg.n_all or 0),
+        "n_mixed": n_mixed,
+        "rows_from_metadata": meta_rows,
+    }
     mixed_count = 0
     if n_mixed:
-        if only is None:
-            mixed = cls.filter(
-                F.col("_keep") & ~F.col("_all")
-            ).select(*gkeys)
-            if n_mixed <= zonemap._PUSHDOWN_MAX_GROUPS:
-                only = [
-                    (r.partition_id, r.epoch, r.stripe_idx)
-                    for r in mixed.collect()
-                ]
-            else:  # huge boundary set: semi-join, no driver collect
-                only = mixed
+        mixed = cls.filter(F.col("_keep") & ~F.col("_all")).select(*gkeys)
+        if n_mixed <= zonemap._PUSHDOWN_MAX_GROUPS:
+            only = [
+                (r.partition_id, r.epoch, r.stripe_idx)
+                for r in mixed.collect()
+            ]
+        else:  # huge boundary set: semi-join, no driver collect
+            only = mixed
         dec = _restricted_decode(
             spark, out_dir, run_id, result_schema, pcols, predicate, only
         )
@@ -2374,39 +2347,14 @@ def metadata_sum(
     predicate = predicate or []
     pcols = sorted({c for c, _, _ in predicate})
     need = sorted(set(pcols) | {column})
-    stripes = read_stripes(spark, out_dir, run_id)
-    # key-equality fast path (see metadata_count): partitions other
-    # than the key literal's own cannot hold predicate-matching rows
-    key_pids = _key_partition_restriction(
-        spark, out_dir, run_id, result_schema, predicate
-    )
-    if key_pids is not None:
-        stripes = stripes.filter(F.col("partition_id").isin(key_pids))
-    want_tops = {c.partition(".")[0] for c in need}
     pins = _temporal_pins(result_schema, predicate)
     gkeys = ["partition_id", "epoch", "stripe_idx"]
-    fast = _classify_driver(
-        spark, out_dir, stripes, need, want_tops, predicate, pins,
-        target=column,
-    )
-    if fast is not None:
-        groups, present, tgt_present = fast
-        missing = sorted(
-            {predicate[j][0] for j in range(len(predicate))
-             if not present[j]}
-        )
-        if missing or not tgt_present:
-            bad = missing or [column]
-            raise ValueError(
-                f"no stats rows for column(s) {bad} in run {run_id!r} "
-                "— decode-and-aggregate instead"
-            )
+    plan = _driver_classify(out_dir, run_id, predicate, pins, target=column)
+    if plan is not None:
         s_int = s_num = None
         meta_nn = n_meta = 0
         only = []
-        for k, g in groups.items():
-            if not g["keep"]:
-                continue
+        for g in plan[2].filter(plan[2]["keep"]).to_pylist():
             # an all-null stripe (nn == 0, stats row present) has no
             # recorded sum but needs no decode: SUM skips nulls
             has_sum = (
@@ -2414,7 +2362,7 @@ def metadata_sum(
                 or g["sum_num"] is not None
                 or g["nn"] == 0
             )
-            if g["all_"] and has_sum:
+            if g["all"] and has_sum:
                 n_meta += 1
                 meta_nn += g["nn"] or 0
                 if g["sum_int"] is not None:
@@ -2422,9 +2370,13 @@ def metadata_sum(
                 if g["sum_num"] is not None:
                     s_num = (s_num or 0.0) + float(g["sum_num"])
             else:
-                only.append(k)
+                only.append((g["partition_id"], g["epoch"], g["stripe_idx"]))
         n_decode = len(only)
     else:
+        stripes = _key_restricted_stripes(
+            spark, out_dir, run_id, result_schema, predicate
+        )
+        want_tops = {c.partition(".")[0] for c in need}
         meta = _epoch_keep_filter(
             spark, stripes, want_tops
         ).drop("data").filter(F.col("column").isin(need))
@@ -2979,54 +2931,33 @@ def metadata_stddev(
     predicate = predicate or []
     pcols = sorted({c for c, _, _ in predicate})
     need = sorted(set(pcols) | {column})
-    stripes = read_stripes(spark, out_dir, run_id)
-    # key-equality fast path (see metadata_count): partitions other
-    # than the key literal's own cannot hold predicate-matching rows
-    key_pids = _key_partition_restriction(
-        spark, out_dir, run_id, result_schema, predicate
-    )
-    if key_pids is not None:
-        stripes = stripes.filter(F.col("partition_id").isin(key_pids))
-    want_tops = {c.partition(".")[0] for c in need}
     pins = _temporal_pins(result_schema, predicate)
     gkeys = ["partition_id", "epoch", "stripe_idx"]
     # components: list of (n, sum, m2) driver-side — ONE per metadata
     # fold half + one for the decode residue (never per stripe)
-    fast = _classify_driver(
-        spark, out_dir, stripes, need, want_tops, predicate, pins,
-        target=column,
-    )
+    fast = _driver_classify(out_dir, run_id, predicate, pins, target=column)
     comp_meta: list[tuple[int, float, float]] = []
     if fast is not None:
-        groups, present, tgt_present = fast
-        missing = sorted(
-            {predicate[j][0] for j in range(len(predicate))
-             if not present[j]}
-        )
-        if missing or not tgt_present:
-            bad = missing or [column]
-            raise ValueError(
-                f"no stats rows for column(s) {bad} in run {run_id!r} "
-                "— decode-and-aggregate instead"
-            )
         n_meta = n_decode = 0
         only = []
-        for k, g in groups.items():
-            if not g["keep"]:
-                continue
+        for g in fast[2].filter(fast[2]["keep"]).to_pylist():
             s = g["sum_int"] if g["sum_int"] is not None else g["sum_num"]
-            ok = (s is not None and g.get("m2") is not None) or g["nn"] == 0
-            if g["all_"] and ok:
+            ok = (s is not None and g["m2"] is not None) or g["nn"] == 0
+            if g["all"] and ok:
                 n_meta += 1
                 if g["nn"]:
                     comp_meta.append(
                         (int(g["nn"]), float(s), float(g["m2"]))
                     )
             else:
-                only.append(k)
+                only.append((g["partition_id"], g["epoch"], g["stripe_idx"]))
         n_decode = len(only)
         j = meta_ok = None
     else:
+        stripes = _key_restricted_stripes(
+            spark, out_dir, run_id, result_schema, predicate
+        )
+        want_tops = {c.partition(".")[0] for c in need}
         meta = _epoch_keep_filter(
             spark, stripes, want_tops
         ).drop("data").filter(F.col("column").isin(need))
@@ -3860,14 +3791,9 @@ def metadata_percentile(
     predicate = predicate or []
     pcols = sorted({c for c, _, _ in predicate})
     need = sorted(set(pcols) | {column})
-    stripes = read_stripes(spark, out_dir, run_id)
-    # key-equality fast path (see metadata_count): partitions other
-    # than the key literal's own cannot hold predicate-matching rows
-    key_pids = _key_partition_restriction(
+    stripes = _key_restricted_stripes(
         spark, out_dir, run_id, result_schema, predicate
     )
-    if key_pids is not None:
-        stripes = stripes.filter(F.col("partition_id").isin(key_pids))
     want_tops = {c.partition(".")[0] for c in need}
     meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data").filter(
         F.col("column").isin(need)

@@ -311,43 +311,46 @@ def rollback_to_epoch(
         raise ValueError(f"no stripes at {out_dir}")
     from .encode import STRIPE_SCHEMA
 
-    stripes = spark.read.schema(STRIPE_SCHEMA).parquet(spath)
-    mine = stripes.filter(F.col("run_id") == run_id)
-    agg = mine.groupBy().agg(
-        F.min("epoch").alias("lo"),
-        F.sum((F.col("epoch") > int(epoch)).cast("long")).alias("over"),
-    ).first()
-    if agg.lo is None:
-        raise ValueError(f"run {run_id!r} has no stripes at {out_dir}")
-    if int(agg.lo) > int(epoch):
-        raise ValueError(
-            f"run {run_id!r} has no epoch <= {epoch} (earliest is "
-            f"{int(agg.lo)}); rollback would erase the run"
-        )
-    removed = int(agg.over or 0)
     drop = (F.col("run_id") == run_id) & (F.col("epoch") > int(epoch))
+    with writer_lock(spath):
+        stripes = spark.read.schema(STRIPE_SCHEMA).parquet(spath)
+        agg = stripes.filter(F.col("run_id") == run_id).groupBy().agg(
+            F.min("epoch").alias("lo"),
+            F.sum((F.col("epoch") > int(epoch)).cast("long")).alias("over"),
+        ).first()
+        if agg.lo is None:
+            raise ValueError(f"run {run_id!r} has no stripes at {out_dir}")
+        if int(agg.lo) > int(epoch):
+            raise ValueError(
+                f"run {run_id!r} has no epoch <= {epoch} (earliest is "
+                f"{int(agg.lo)}); rollback would erase the run"
+            )
+        removed = int(agg.over or 0)
+        if removed:
+            tmp = spath + ".vacuum_tmp"
+            stripes.filter(~drop).write.mode("overwrite").option(
+                "compression", "none"
+            ).option("parquet.enable.dictionary", "false").parquet(tmp)
+            _swap_in(spath, tmp)
     if removed:
-        tmp = spath + ".vacuum_tmp"
-        stripes.filter(~drop).write.mode("overwrite").option(
-            "compression", "none"
-        ).option("parquet.enable.dictionary", "false").parquet(tmp)
-        _swap_in(spath, tmp)
         if os.path.exists(lpath):
-            lin = spark.read.schema(lineage_mod.LINEAGE_SCHEMA).parquet(lpath)
-            ltmp = lpath + ".vacuum_tmp"
-            lin.filter(~drop).write.mode("overwrite").parquet(ltmp)
-            _swap_in(lpath, ltmp)
+            with writer_lock(lpath):
+                lin = spark.read.schema(lineage_mod.LINEAGE_SCHEMA).parquet(lpath)
+                ltmp = lpath + ".vacuum_tmp"
+                lin.filter(~drop).write.mode("overwrite").parquet(ltmp)
+                _swap_in(lpath, ltmp)
         from . import deletes as deletes_mod
 
         dpath = deletes_mod.deletes_dir(out_dir)
         recover_swap(dpath)
         if os.path.isdir(dpath):
-            dels = spark.read.schema(deletes_mod.DELETES_SCHEMA).parquet(dpath)
-            dkept = dels.filter(~drop)
-            if dkept.count() < dels.count():
-                dtmp = dpath + ".vacuum_tmp"
-                dkept.write.mode("overwrite").parquet(dtmp)
-                _swap_in(dpath, dtmp)
+            with writer_lock(dpath):
+                dels = spark.read.schema(deletes_mod.DELETES_SCHEMA).parquet(dpath)
+                dkept = dels.filter(~drop)
+                if dkept.count() < dels.count():
+                    dtmp = dpath + ".vacuum_tmp"
+                    dkept.write.mode("overwrite").parquet(dtmp)
+                    _swap_in(dpath, dtmp)
     # drop tags that now point past the history (report via lineage API)
     tags = lineage_mod.read_tags(out_dir)
     run_tags = tags.get(run_id, {})
@@ -413,18 +416,19 @@ def publish_run(
     def _rewrite(path: str, schema, precompressed: bool) -> None:
         if not os.path.exists(path):
             return
-        recover_swap(path)
-        df = spark.read.schema(schema).parquet(path).withColumn(
-            "run_id", rename
-        )
-        tmp = path + ".vacuum_tmp"
-        w = df.write.mode("overwrite")
-        if precompressed:
-            w = w.option("compression", "none").option(
-                "parquet.enable.dictionary", "false"
+        with writer_lock(path):
+            recover_swap(path)
+            df = spark.read.schema(schema).parquet(path).withColumn(
+                "run_id", rename
             )
-        w.parquet(tmp)
-        _swap_in(path, tmp)
+            tmp = path + ".vacuum_tmp"
+            w = df.write.mode("overwrite")
+            if precompressed:
+                w = w.option("compression", "none").option(
+                    "parquet.enable.dictionary", "false"
+                )
+            w.parquet(tmp)
+            _swap_in(path, tmp)
 
     from . import deletes as deletes_mod
 
@@ -484,86 +488,89 @@ def vacuum_epochs(
         return 0
     from .encode import STRIPE_SCHEMA
 
-    stripes = spark.read.schema(STRIPE_SCHEMA).parquet(spath)
-    scope = stripes if run_id is None else stripes.filter(F.col("run_id") == run_id)
-    run_cols = scope.drop("data").groupBy("run_id").agg(
-        F.countDistinct("column").alias("run_nc")
-    )
-    # Materialize the keep-map before any rename: it is tiny metadata
-    # (one row per run x partition), and a lazy plan over the stripes
-    # path would re-list files AFTER the atomic swap below.
-    keep_rows = (
-        scope.drop("data")
-        .filter(F.col("status") == "completed")
-        .groupBy("run_id", "partition_id", "epoch")
-        .agg(F.countDistinct("column").alias("nc"))
-        .join(run_cols, "run_id")
-        .filter(F.col("nc") >= F.col("run_nc"))
-        .groupBy("run_id", "partition_id")
-        .agg(F.max("epoch").alias("keep_from"))
-        .collect()
-    )
-    complete = spark.createDataFrame(
-        [(r.run_id, int(r.partition_id), int(r.keep_from)) for r in keep_rows],
-        "run_id string, partition_id int, keep_from long",
-    )
-    before = stripes.count()
-    kept = (
-        stripes.join(
-            F.broadcast(complete), ["run_id", "partition_id"], "left"
+    with writer_lock(spath):
+        stripes = spark.read.schema(STRIPE_SCHEMA).parquet(spath)
+        scope = stripes if run_id is None else stripes.filter(F.col("run_id") == run_id)
+        run_cols = scope.drop("data").groupBy("run_id").agg(
+            F.countDistinct("column").alias("run_nc")
         )
-        .filter(
-            F.col("keep_from").isNull()  # out of scope or never complete
-            | (F.col("epoch") >= F.col("keep_from"))
+        # Materialize the keep-map before any rename: it is tiny metadata
+        # (one row per run x partition), and a lazy plan over the stripes
+        # path would re-list files AFTER the atomic swap below.
+        keep_rows = (
+            scope.drop("data")
+            .filter(F.col("status") == "completed")
+            .groupBy("run_id", "partition_id", "epoch")
+            .agg(F.countDistinct("column").alias("nc"))
+            .join(run_cols, "run_id")
+            .filter(F.col("nc") >= F.col("run_nc"))
+            .groupBy("run_id", "partition_id")
+            .agg(F.max("epoch").alias("keep_from"))
+            .collect()
         )
-        .drop("keep_from")
-    )
-    removed = before - kept.count()
-    if removed == 0:
-        return 0
-    tmp = spath + ".vacuum_tmp"
-    # blobs are engine-compressed: skip parquet page compression /
-    # dictionary attempts, matching storage.append_table(precompressed)
-    kept.write.mode("overwrite").option("compression", "none").option(
-        "parquet.enable.dictionary", "false"
-    ).parquet(tmp)
-    _swap_in(spath, tmp)
-
-    lpath = lineage_mod.lineage_dir(out_dir)
-    if os.path.exists(lpath):
-        lin = spark.read.schema(lineage_mod.LINEAGE_SCHEMA).parquet(lpath)
-        lkept = (
-            lin.join(F.broadcast(complete), ["run_id", "partition_id"], "left")
+        complete = spark.createDataFrame(
+            [(r.run_id, int(r.partition_id), int(r.keep_from)) for r in keep_rows],
+            "run_id string, partition_id int, keep_from long",
+        )
+        before = stripes.count()
+        kept = (
+            stripes.join(
+                F.broadcast(complete), ["run_id", "partition_id"], "left"
+            )
             .filter(
-                F.col("keep_from").isNull()
+                F.col("keep_from").isNull()  # out of scope or never complete
                 | (F.col("epoch") >= F.col("keep_from"))
             )
             .drop("keep_from")
         )
-        ltmp = lpath + ".vacuum_tmp"
-        lkept.write.mode("overwrite").parquet(ltmp)
-        _swap_in(lpath, ltmp)
+        removed = before - kept.count()
+        if removed == 0:
+            return 0
+        tmp = spath + ".vacuum_tmp"
+        # blobs are engine-compressed: skip parquet page compression /
+        # dictionary attempts, matching storage.append_table(precompressed)
+        kept.write.mode("overwrite").option("compression", "none").option(
+            "parquet.enable.dictionary", "false"
+        ).parquet(tmp)
+        _swap_in(spath, tmp)
+
+    lpath = lineage_mod.lineage_dir(out_dir)
+    if os.path.exists(lpath):
+        with writer_lock(lpath):
+            lin = spark.read.schema(lineage_mod.LINEAGE_SCHEMA).parquet(lpath)
+            lkept = (
+                lin.join(F.broadcast(complete), ["run_id", "partition_id"], "left")
+                .filter(
+                    F.col("keep_from").isNull()
+                    | (F.col("epoch") >= F.col("keep_from"))
+                )
+                .drop("keep_from")
+            )
+            ltmp = lpath + ".vacuum_tmp"
+            lkept.write.mode("overwrite").parquet(ltmp)
+            _swap_in(lpath, ltmp)
 
     from . import deletes as deletes_mod
 
     dpath = deletes_mod.deletes_dir(out_dir)
     recover_swap(dpath)
     if os.path.isdir(dpath):
-        # delete vectors of vacuumed epochs are orphans (their stripe
-        # groups no longer exist); keeping them is harmless to reads
-        # (the broadcast join finds no group) but leaks space and
-        # confuses delete_stats — drop them with the epochs
-        dels = spark.read.schema(deletes_mod.DELETES_SCHEMA).parquet(dpath)
-        dkept = (
-            dels.join(F.broadcast(complete), ["run_id", "partition_id"], "left")
-            .filter(
-                F.col("keep_from").isNull()
-                | (F.col("epoch") >= F.col("keep_from"))
+        with writer_lock(dpath):
+            # delete vectors of vacuumed epochs are orphans (their stripe
+            # groups no longer exist); keeping them is harmless to reads
+            # (the broadcast join finds no group) but leaks space and
+            # confuses delete_stats — drop them with the epochs
+            dels = spark.read.schema(deletes_mod.DELETES_SCHEMA).parquet(dpath)
+            dkept = (
+                dels.join(F.broadcast(complete), ["run_id", "partition_id"], "left")
+                .filter(
+                    F.col("keep_from").isNull()
+                    | (F.col("epoch") >= F.col("keep_from"))
+                )
+                .drop("keep_from")
             )
-            .drop("keep_from")
-        )
-        if dkept.count() < dels.count():
-            dtmp = dpath + ".vacuum_tmp"
-            dkept.write.mode("overwrite").parquet(dtmp)
-            _swap_in(dpath, dtmp)
+            if dkept.count() < dels.count():
+                dtmp = dpath + ".vacuum_tmp"
+                dkept.write.mode("overwrite").parquet(dtmp)
+                _swap_in(dpath, dtmp)
     return removed

@@ -469,8 +469,12 @@ def _conjunct_keep(op: str, value, pin: str | None = None) -> Column:
 # in lockstep differentially.
 
 def _cmp_arrow(arr, op: str, v):
-    """``arr <op> v`` under Spark's ordering; null rows give null."""
+    """``arr <op> v`` under Spark's ordering; null rows give null. An
+    integer ``arr`` against a float ``v`` compares as doubles, as Spark
+    widens the column."""
     t = arr.type
+    if pa.types.is_integer(t) and isinstance(v, float):
+        arr, t = pc.cast(arr, pa.float64(), safe=False), pa.float64()
     if not pa.types.is_floating(t):
         fn = {
             "==": pc.equal, "<": pc.less, "<=": pc.less_equal,
@@ -621,6 +625,22 @@ def conjunct_keep_arrow(meta: pa.Table, op: str, value, pin: str | None = None):
 _F53 = float(1 << 53)  # doubles are exact below this; proofs above risk rounding
 
 
+def _pin_all_cands(ints, pin):
+    """ALL-side candidate pinning: restrict a temporal literal's
+    candidate encodings to the pinned unit (index 0 = epoch-us,
+    1 = epoch-days). Bare ints have one candidate and are unaffected.
+    A fractional-time literal's days candidate is TRUNCATED — proving
+    through it would miscount (midnight rows at floor(v) fail `>= v`
+    but the floored proof would claim them) — so an unfaithful days
+    pin keeps BOTH candidates (the AND never proves; the group
+    decodes, exact)."""
+    if ints is None or len(ints) < 2 or pin is None:
+        return ints
+    if pin == "us":
+        return [ints[0]]
+    return [ints[1]] if ints[0] == ints[1] * _DAY_US else ints
+
+
 def _conjunct_all(op: str, value, pin: str | None = None) -> Column:
     """Provably EVERY row of the stripe satisfies (col op value) — the
     dual of :func:`_conjunct_keep`, powering metadata-only COUNT
@@ -657,26 +677,11 @@ def _conjunct_all(op: str, value, pin: str | None = None) -> Column:
     if op == "contains_token":
         return F.lit(False)  # token membership is never zone-provable
 
-    def _pin_cands(ints):
-        """Restrict a temporal literal's candidate encodings to the
-        pinned unit (index 0 = epoch-us, 1 = epoch-days). Bare ints
-        have one candidate and are unaffected. A fractional-time
-        literal's days candidate is TRUNCATED — proving through it
-        would miscount (midnight rows at floor(v) fail `>= v` but the
-        floored proof would claim them) — so an unfaithful days pin
-        keeps BOTH candidates (the AND never proves; the group
-        decodes, exact)."""
-        if ints is None or len(ints) < 2 or pin is None:
-            return ints
-        if pin == "us":
-            return [ints[0]]
-        return [ints[1]] if ints[0] == ints[1] * _DAY_US else ints
-
     def within(lo, hi, strict_lo=False, strict_hi=False) -> Column:
         """All values in the interval (bounds None = unbounded)."""
         ilo, nlo, slo = _as_scalar(lo) if lo is not None else (None,) * 3
         ihi, nhi, shi = _as_scalar(hi) if hi is not None else (None,) * 3
-        ilo, ihi = _pin_cands(ilo), _pin_cands(ihi)
+        ilo, ihi = _pin_all_cands(ilo, pin), _pin_all_cands(ihi, pin)
         lo_cmp = (lambda c, v: c > F.lit(v)) if strict_lo else (
             lambda c, v: c >= F.lit(v)
         )
@@ -768,6 +773,89 @@ def _conjunct_all(op: str, value, pin: str | None = None) -> Column:
     else:  # pragma: no cover — _OPS guard above
         raise ValueError(f"unsupported predicate op: {op!r}")
     return F.coalesce(cond & no_nulls, F.lit(False))
+
+
+def conjunct_all_arrow(meta: pa.Table, op: str, value, pin: str | None = None):
+    """Per-row ALL flags of one conjunct over a stripe metadata table:
+    :func:`_conjunct_all` evaluated with pyarrow on the driver (never
+    null, like its coalesce)."""
+    if op not in _OPS:
+        raise ValueError(f"unsupported predicate op: {op!r}")
+    nc = meta["null_count"]
+    if op == "is_null":
+        return pc.fill_null(pc.equal(nc, meta["n_rows"]), False)
+    if op == "not_null":
+        return pc.fill_null(pc.equal(nc, 0), False)
+    if op == "contains_token":
+        return _const_arrow(meta, False)
+
+    def fam(minc: str, maxc: str, bounds, lo_op: str, hi_op: str):
+        """Both stats present and every (lo, hi) candidate holds."""
+        cond = pc.and_(pc.is_valid(meta[minc]), pc.is_valid(meta[maxc]))
+        for flo, fhi in bounds:
+            if flo is not None:
+                cond = pc.and_kleene(cond, _cmp_arrow(meta[minc], lo_op, flo))
+            if fhi is not None:
+                cond = pc.and_kleene(cond, _cmp_arrow(meta[maxc], hi_op, fhi))
+        return cond
+
+    def within(lo, hi, strict_lo=False, strict_hi=False):
+        ilo, nlo, slo = _as_scalar(lo) if lo is not None else (None,) * 3
+        ihi, nhi, shi = _as_scalar(hi) if hi is not None else (None,) * 3
+        ilo, ihi = _pin_all_cands(ilo, pin), _pin_all_cands(ihi, pin)
+        ops = (">" if strict_lo else ">=", "<" if strict_hi else "<=")
+        if slo is not None or shi is not None:
+            return fam("min_str", "max_str", [(slo, shi)], *ops)
+        flo = float(ilo[0]) if ilo else nlo
+        fhi = float(ihi[0]) if ihi else nhi
+        proof = _const_arrow(meta, False)
+        if (flo is None or abs(flo) < _F53) and (fhi is None or abs(fhi) < _F53):
+            proof = fam("min_num", "max_num", [(flo, fhi)], *ops)
+        if (nlo is None or abs(nlo) < _F53) and (nhi is None or abs(nhi) < _F53):
+            n_cand = max(len(ilo or ()), len(ihi or ()), 1)
+            bounds = [
+                (
+                    ilo[i] if ilo is not None and i < len(ilo) else nlo,
+                    ihi[i] if ihi is not None and i < len(ihi) else nhi,
+                )
+                for i in range(n_cand)
+            ]
+            proof = pc.or_kleene(fam("min_int", "max_int", bounds, *ops), proof)
+        return proof
+
+    if op in ("==", "="):
+        cond = within(value, value)
+    elif op == "between":
+        cond = within(*value)
+    elif op == ">=":
+        cond = within(value, None)
+    elif op == ">":
+        cond = within(value, None, strict_lo=True)
+    elif op == "<=":
+        cond = within(None, value)
+    elif op == "<":
+        cond = within(None, value, strict_hi=True)
+    elif op == "in":
+        cond = _const_arrow(meta, False)
+        for v in list(value):
+            cond = pc.or_kleene(cond, within(v, v))
+    elif op == "!=":
+        cond = pc.or_kleene(
+            within(None, value, strict_hi=True),
+            within(value, None, strict_lo=True),
+        )
+    else:  # like_prefix
+        prefix = str(value)
+        cond = pc.is_valid(meta["min_str"])
+        if prefix:
+            cond = pc.and_kleene(
+                pc.and_(cond, pc.is_valid(meta["max_str"])),
+                _cmp_arrow(meta["min_str"], ">=", prefix),
+            )
+            upper = _prefix_upper(prefix)
+            if upper is not None:
+                cond = pc.and_kleene(cond, _cmp_arrow(meta["max_str"], "<", upper))
+    return pc.fill_null(pc.and_kleene(cond, pc.equal(nc, 0)), False)
 
 
 def prune_stripes(
@@ -915,34 +1003,63 @@ def plan_keep_groups(
     Returns sorted (partition_id, epoch, stripe_idx) keys, or None when
     more than ``max_groups`` groups pass the zones (None = no cap).
     """
+    meta, g = _group_flags(meta, want, predicate, pins, with_all=False)
+    keep = g["_epoch_ok"]
+    for i in range(len(predicate)):
+        keep = pc.and_(keep, pc.fill_null(pc.equal(g[f"_k{i}_max"], 1), False))
+    surv = g.filter(keep)
+    if max_groups is not None and surv.num_rows > max_groups:
+        return None
+    surv = surv.filter(pa.array(_bloom_keep(meta, surv, predicate)))
+    return sorted(zip(*(surv[k].to_pylist() for k in _GROUP_KEYS)))
+
+
+_GROUP_KEYS = ["partition_id", "epoch", "stripe_idx"]
+
+
+def _group_flags(meta, want, predicate, pins, with_all, target=None):
+    """The per-stripe-group view both driver planners share: ``meta``
+    cut to completed rows of the wanted, predicate and ``target``
+    columns, and one row per group with ``n_rows_max``, each conjunct's
+    zone keep flag ``_k{i}_max`` (and ALL flag ``_a{i}_max`` when
+    ``with_all``), ``_h{i}_max`` (1 when the group has a row of the
+    conjunct's column, else null), the target column's stats, and
+    ``_epoch_ok``: the group is in its partition's newest epoch whose
+    wanted column set is complete, short-circuited to epoch 0 when no
+    wanted column has a later epoch (pipeline._epoch_keep_filter)."""
     want_set = set(want)
-    pcols = {c for c, _, _ in predicate}
+    cols = want_set | {c for c, _, _ in predicate} | ({target} if target else set())
     ctype = meta.schema.field("column").type
     meta = meta.filter(
         pc.and_(
             pc.equal(meta["status"], "completed"),
-            pc.is_in(
-                meta["column"],
-                value_set=pa.array(sorted(want_set | pcols), type=ctype),
-            ),
+            pc.is_in(meta["column"], value_set=pa.array(sorted(cols), type=ctype)),
         )
     ).combine_chunks()
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
     col = meta["column"]
-    flags = {k: meta[k] for k in gkeys}
+    flags = {k: meta[k] for k in (*_GROUP_KEYS, "n_rows")}
+    aggs = [("n_rows", "max")]
+
+    def where(hit, arr, name):
+        flags[name] = pc.if_else(hit, arr, pa.scalar(None, arr.type))
+        aggs.append((name, "max"))
+
     for i, (c, op, value) in enumerate(predicate):
-        k = conjunct_keep_arrow(meta, op, value, pin=(pins or {}).get(c))
-        flags[f"_k{i}"] = pc.if_else(
-            pc.equal(col, c), k.cast(pa.int8()), pa.scalar(None, pa.int8())
-        )
-    g = pa.table(flags).group_by(gkeys, use_threads=False).aggregate(
-        [(f"_k{i}", "max") for i in range(len(predicate))]
-    )
-    w = meta.filter(
-        pc.is_in(col, value_set=pa.array(sorted(want_set), type=ctype))
-    )
+        hit = pc.equal(col, c)
+        pin = (pins or {}).get(c)
+        where(hit, conjunct_keep_arrow(meta, op, value, pin=pin).cast(pa.int8()), f"_k{i}")
+        where(hit, _const_arrow(meta, True).cast(pa.int8()), f"_h{i}")
+        if with_all:
+            where(hit, conjunct_all_arrow(meta, op, value, pin=pin).cast(pa.int8()), f"_a{i}")
+    if target is not None:
+        hit = pc.equal(col, target)
+        for k in ("sum_int", "sum_num", "m2"):
+            where(hit, meta[k], f"_t_{k}")
+        where(hit, pc.subtract(meta["n_rows"], pc.fill_null(meta["null_count"], 0)), "_t_nn")
+    g = pa.table(flags).group_by(_GROUP_KEYS, use_threads=False).aggregate(aggs)
+    w = meta.filter(pc.is_in(col, value_set=pa.array(sorted(want_set), type=ctype)))
     if not w.num_rows or pc.max(w["epoch"]).as_py() == 0:
-        keep = pc.equal(g["epoch"], 0)
+        ok = pc.equal(g["epoch"], 0)
     else:
         per = w.group_by(["partition_id", "epoch"]).aggregate(
             [("column", "count_distinct")]
@@ -954,32 +1071,74 @@ def plan_keep_groups(
             best["epoch_max"],
             pc.index_in(g["partition_id"], value_set=best["partition_id"]),
         )
-        keep = pc.fill_null(pc.equal(g["epoch"], best_ep), False)
+        ok = pc.fill_null(pc.equal(g["epoch"], best_ep), False)
+    return meta, g.append_column("_epoch_ok", ok)
+
+
+def _bloom_keep(meta, groups, predicate) -> np.ndarray:
+    """Bloom veto over ``groups`` (rows keyed by _GROUP_KEYS): True where
+    every equality-shaped conjunct may match — AND across conjuncts, OR
+    across IN-list members; absent or cross-domain blobs keep."""
+    kept = np.ones(groups.num_rows, dtype=bool)
+    if "bloom" not in meta.column_names or not groups.num_rows:
+        return kept
+    col = meta["column"]
+    for c, op, value in predicate:
+        vals = _bloom_probe_vals(op, value)
+        if not vals or any(_probe_hash_pairs(op, v) is None for v in vals):
+            continue
+        brows = meta.filter(pc.and_(pc.equal(col, c), pc.is_valid(meta["bloom"])))
+        blobs = pc.take(
+            brows["bloom"],
+            pc.index_in(group_key_strings(groups), value_set=group_key_strings(brows)),
+        )
+        hit = np.zeros(groups.num_rows, dtype=bool)
+        for v in vals:
+            pairs, domain = _probe_hash_pairs(op, v)
+            hit |= bloom_membership(blobs, pairs, domain)
+        kept &= hit
+    return kept
+
+
+def classify_groups(meta, want, predicate, pins=None, target=None):
+    """Classify every stripe group of a run as ALL, NONE or MIXED
+    against a conjunctive predicate, on the driver from an Arrow table
+    of blob-free stripe metadata — the metadata_count / metadata_sum /
+    metadata_stddev counterpart of :func:`plan_keep_groups`, with the
+    same group, epoch and bloom logic.
+
+    A group is kept unless some conjunct's zone keep flag is 0 or the
+    bloom veto rejects it; a conjunct whose column has no row in the
+    group neither prunes nor proves (the group decodes). It is ALL when
+    every conjunct's :func:`conjunct_all_arrow` flag is 1. These are
+    the distributed classifier's rules (pipeline._classify_pred_groups).
+
+    Returns ``(groups, present, target_present)``: ``groups`` has one
+    row per group of the selected epochs with ``partition_id``,
+    ``epoch``, ``stripe_idx``, ``n_rows``, ``keep``, ``all`` and, for a
+    ``target`` column, its ``sum_int``, ``sum_num``, ``m2`` and
+    non-null count ``nn`` (null where the group has no target row);
+    ``present[j]`` says conjunct j's column has a row in some group."""
+    meta, g = _group_flags(meta, want, predicate, pins, with_all=True, target=target)
+    g = g.filter(g["_epoch_ok"])
+    keep = _const_arrow(g, True)
+    all_ = _const_arrow(g, True)
     for i in range(len(predicate)):
-        keep = pc.and_(keep, pc.fill_null(pc.equal(g[f"_k{i}_max"], 1), False))
-    surv = g.filter(keep)
-    if max_groups is not None and surv.num_rows > max_groups:
-        return None
-    if "bloom" in meta.column_names:
-        for c, op, value in predicate:
-            vals = _bloom_probe_vals(op, value)
-            if not vals or any(_probe_hash_pairs(op, v) is None for v in vals):
-                continue
-            brows = meta.filter(
-                pc.and_(pc.equal(col, c), pc.is_valid(meta["bloom"]))
-            )
-            blobs = pc.take(
-                brows["bloom"],
-                pc.index_in(
-                    group_key_strings(surv), value_set=group_key_strings(brows)
-                ),
-            )
-            kept = np.zeros(surv.num_rows, dtype=bool)
-            for v in vals:
-                pairs, domain = _probe_hash_pairs(op, v)
-                kept |= bloom_membership(blobs, pairs, domain)
-            surv = surv.filter(pa.array(kept))
-    return sorted(zip(*(surv[k].to_pylist() for k in gkeys)))
+        keep = pc.and_(keep, pc.fill_null(pc.equal(g[f"_k{i}_max"], 1), True))
+        all_ = pc.and_(all_, pc.fill_null(pc.equal(g[f"_a{i}_max"], 1), False))
+    keep = np.array(keep, dtype=bool)
+    idx = np.flatnonzero(keep)
+    keep[idx] = _bloom_keep(meta, g.take(idx), predicate)
+    cols = {k: g[k] for k in _GROUP_KEYS}
+    cols["n_rows"] = g["n_rows_max"]
+    cols["keep"] = pa.array(keep)
+    cols["all"] = all_
+    if target is not None:
+        for k in ("sum_int", "sum_num", "m2", "nn"):
+            cols[k] = g[f"_t_{k}_max"]
+    present = [g[f"_h{i}_max"].null_count < g.num_rows for i in range(len(predicate))]
+    target_present = target is not None and g["_t_nn_max"].null_count < g.num_rows
+    return pa.table(cols), present, target_present
 
 
 def restrict_groups(stripes: DataFrame, keys) -> DataFrame:
@@ -1197,6 +1356,128 @@ def predicate_expr(predicate: list[Conjunct]) -> Column:
         else:
             raise ValueError(f"unsupported predicate op: {op!r}")
     return cond
+
+
+# -------------------------------- the same row filter over Arrow
+#
+# Exact twin of predicate_expr over decoded rows, for the pairings of
+# column type and literal whose Spark coercion is known here: each
+# comparison runs in the type Spark widens both sides to, with Spark's
+# NaN ordering (_cmp_arrow). Anything else (contains_token, decimals,
+# float32 against an int literal, string against a number, a
+# timezone-dependent timestamp cast) reports "not exact" and callers
+# either keep those rows or let Spark evaluate predicate_expr.
+# tests/test_driver_count.py holds the two in lockstep.
+
+_UTC_ZONES = {"UTC", "Etc/UTC", "GMT", "Etc/GMT", "Z", "+00:00", "Etc/Universal", "UCT"}
+
+
+def _row_operand(arr, v, session_tz):
+    """(values, literal) in the domain Spark compares ``arr`` with
+    ``F.lit(v)`` in, or None when that comparison has no exact form."""
+    t = arr.type
+    if isinstance(v, bool):
+        return (arr, v) if pa.types.is_boolean(t) else None
+    if isinstance(v, int):
+        if not -(1 << 63) <= v < (1 << 63):
+            return None
+        if pa.types.is_signed_integer(t):
+            return pc.cast(arr, pa.int64()), v
+        return (arr, float(v)) if t == pa.float64() else None
+    if isinstance(v, float):
+        if pa.types.is_signed_integer(t) or t == pa.float64():
+            return arr, v  # _cmp_arrow widens ints to double
+        return (pc.cast(arr, pa.float64()), v) if t == pa.float32() else None
+    if isinstance(v, str):
+        return (arr, v) if pa.types.is_string(t) or pa.types.is_large_string(t) else None
+    if isinstance(v, (datetime.date, datetime.datetime)) and (
+        pa.types.is_timestamp(t) or pa.types.is_date32(t)
+    ):
+        utc = session_tz in _UTC_ZONES
+        if pa.types.is_date32(t):
+            if isinstance(v, datetime.datetime):
+                return None  # the date column is cast at session-zone midnight
+            return pc.cast(pc.cast(arr, pa.int32()), pa.int64()), _as_scalar(v)[0][1]
+        us = pc.cast(pc.cast(arr, pa.timestamp("us", t.tz)), pa.int64())
+        if isinstance(v, datetime.datetime):
+            # the literal is an instant; a zone-less column is cast to
+            # one in the session zone, the identity only under UTC
+            return (us, _as_scalar(v)[0][0]) if t.tz is not None or utc else None
+        # a date literal is cast to the column's type: midnight wall
+        # clock for a zone-less column, session-zone midnight otherwise
+        return (us, _as_scalar(v)[0][0]) if t.tz is None or utc else None
+    return None
+
+
+def conjunct_rows_arrow(arr, op: str, value, session_tz: str | None = None):
+    """Rows of ``arr`` where ``(col op value)`` is true, false or null
+    under Spark WHERE semantics, or None when the pairing of ``arr``'s
+    type and the literal has no exact Arrow form."""
+    if op == "is_null":
+        return pc.is_null(arr)
+    if op == "not_null":
+        return pc.is_valid(arr)
+    if op == "like_prefix":
+        t = arr.type
+        if pa.types.is_string(t) or pa.types.is_large_string(t):
+            return pc.starts_with(arr, pattern=str(value))
+        return None
+    if op == "contains_token":
+        return None
+
+    def cmp(cop, v):
+        pair = _row_operand(arr, v, session_tz)
+        return None if pair is None else _cmp_arrow(pair[0], cop, pair[1])
+
+    if op == "between":
+        lo, hi = (cmp(">=", value[0]), cmp("<=", value[1]))
+        return None if lo is None or hi is None else pc.and_kleene(lo, hi)
+    if op == "in":
+        vals = [v for v in value if v is not None]
+        if len({type(v) for v in vals}) > 1:
+            return None  # Spark widens a mixed list to one common type
+        out = pa.array(np.zeros(len(arr), dtype=bool))
+        for v in vals:
+            m = cmp("==", v)
+            if m is None:
+                return None
+            out = pc.or_kleene(out, m)
+        return out
+    if op == "!=":
+        m = cmp("==", value)
+        return None if m is None else pc.invert(m)
+    if op in ("==", "=", ">", ">=", "<", "<="):
+        return cmp("==" if op == "=" else op, value)
+    raise ValueError(f"unsupported predicate op: {op!r}")
+
+
+def rows_match_arrow(batch, predicate, session_tz: str | None = None):
+    """``(mask, exact)`` for ``predicate`` over a decoded batch or
+    table: the AND of :func:`conjunct_rows_arrow` over every conjunct
+    it can express (None when it expresses none), and whether that
+    covered them all. A true mask entry is a row ``predicate_expr``
+    keeps; false or null entries are rows it drops. Dotted names
+    descend into struct columns (parent nulls propagate)."""
+    names = set(batch.schema.names)
+    mask, exact = None, True
+    for col, op, value in predicate:
+        root, _, path = col.partition(".")
+        m = None
+        if root in names:
+            arr = batch.column(root)
+            try:
+                if path:
+                    arr = pc.struct_field(arr, path.split("."))
+                m = conjunct_rows_arrow(arr, op, value, session_tz)
+            except (pa.ArrowInvalid, pa.ArrowNotImplementedError,
+                    pa.ArrowTypeError, KeyError, TypeError, ValueError,
+                    OverflowError):
+                m = None
+        if m is None:
+            exact = False
+            continue
+        mask = m if mask is None else pc.and_kleene(mask, m)
+    return mask, exact
 
 
 # ------------------------------------------------------ bloom filters

@@ -407,3 +407,45 @@ def test_upsert_then_compact_clears_masks(spark, upsert_store):
         spark, out2, "up-flat", ["doc_id"]
     ).first()
     assert agg.n_rows == merged.count()
+
+
+def test_delete_stats_reads_the_vectors_without_a_spark_job(spark, tmp_path):
+    """delete_stats answers from pyarrow — the same dict the Spark
+    aggregate gave — for each run of a table with deletes in two runs."""
+    df = spark.range(600).select(F.col("id"), (F.col("id") % 10).alias("v"))
+    out = str(tmp_path / "ds")
+    for run in ("a", "b"):
+        pipeline.run_encode_job(spark, df, pipeline.EncodeJobConfig(
+            out_dir=out, run_id=run, key="id", n_partitions=2, stripe_rows=128,
+        ))
+    pipeline.delete_rows(spark, out, "a", df.schema, [("v", "==", 3)])
+    pipeline.delete_rows(spark, out, "a", df.schema, [("v", "<", 2)])
+    pipeline.delete_rows(spark, out, "b", df.schema, [("id", "<", 50)])
+    pipeline.delete_rows_eq(spark, out, "b", "v", [9])
+    sc = spark.sparkContext
+    for run, n_eq in (("a", 0), ("b", 1), ("none", 0)):
+        agg = (
+            spark.read.schema(deletes.DELETES_SCHEMA)
+            .parquet(deletes.deletes_dir(out))
+            .filter(F.col("run_id") == run)
+            .agg(
+                F.count(F.lit(1)).alias("nv"),
+                F.countDistinct("partition_id", "epoch", "stripe_idx").alias("ng"),
+                F.sum("n_deleted").alias("nr"),
+            )
+            .first()
+        )
+        group = f"delete-stats-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "delete_stats")
+        try:
+            got = deletes.delete_stats(spark, out, run)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert got == {
+            "n_vectors": agg.nv, "n_groups": agg.ng,
+            "rows_marked_ub": int(agg.nr or 0), "n_eq_values": n_eq,
+        }
+        assert list(jobs) == [], run
+    assert deletes.delete_stats(spark, out, "a")["n_groups"] > 0

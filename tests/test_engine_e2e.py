@@ -93,7 +93,7 @@ def test_resume_skips_completed_partitions(spark, webdf, tmp_path):
     cfg = pipeline.EncodeJobConfig(out_dir=out, run_id="rr1", key="url", n_partitions=n)
     res1 = pipeline.run_encode_job(spark, first_half, cfg)
     assert res1.partitions_encoded <= 8
-    done = lineage.completed_partitions(spark, out, "rr1", n_columns=5)
+    done = lineage.completed_partitions(spark, out, "rr1", webdf.columns)
     assert set(done) <= set(range(8)) and len(done) == 8
 
     res2 = pipeline.run_encode_job(spark, webdf, cfg)

@@ -560,3 +560,40 @@ def test_doctor_flags_fragmented_layout(spark, docs, tmp_path):
     pipeline.run_encode_job(spark, docs, cfg2)
     entry2 = doctor.diagnose_run(spark, out2, "ok")["runs"]["ok"]
     assert "fragmentation" not in entry2, entry2
+
+
+def test_resume_reencodes_a_faulted_partition_of_a_struct_table(spark, tmp_path):
+    """The stats rows of a struct's descendants (meta.status, meta.n)
+    ride their parent's stripes. Counted as columns, they made a
+    partition whose `s` stripes failed look complete, so resume never
+    re-encoded it and every predicated read kept failing."""
+    import dataclasses
+
+    from orc_spark.engine import zonemap
+
+    df = spark.range(1200).select(
+        F.col("id"),
+        (F.col("id") % 100).cast("int").alias("v"),
+        F.concat(F.lit("s"), (F.col("id") % 17).cast("string")).alias("s"),
+        F.struct(
+            F.when(F.col("id") % 3 == 0, "a").otherwise("b").alias("status"),
+            (F.col("id") % 5).cast("int").alias("n"),
+        ).alias("meta"),
+    )
+    out = str(tmp_path / "struct")
+    cfg = _cfg(
+        out, run_id="st", key="id", n_partitions=2, stripe_rows=256,
+        fault_spec={"columns": ["s"], "partitions": [1]},
+    )
+    pipeline.run_encode_job(spark, df, cfg)
+    res = pipeline.run_encode_job(spark, df, dataclasses.replace(cfg, fault_spec=None))
+    assert (res.partitions_skipped, res.partitions_encoded) == (1, 1)
+    pred = [("v", "between", (10, 40)), ("meta.status", "==", "a")]
+    got = (
+        pipeline.decode_job(spark, out, "st", df.schema, predicate=pred)
+        .filter(zonemap.predicate_expr(pred))
+        .select("id", "s")
+        .collect()
+    )
+    want = df.filter(zonemap.predicate_expr(pred)).select("id", "s").collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want)) and want
