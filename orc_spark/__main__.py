@@ -739,59 +739,31 @@ def cmd_plan(args) -> int:
     spark = _session(args.cores)
     schema = spark.read.parquet(args.schema_from).schema
     predicate = [_parse_where(w) for w in args.where]
-    # classification only — metadata_count would also decode; reuse
-    # its classifier pieces for the dry-run
-    pcols = sorted({c for c, _, _ in predicate})
-    want_tops = {c.partition(".")[0] for c in pcols}
-    pins = pipeline._temporal_pins(schema, predicate)
     try:
-        # same loud contract as metadata_count: a misspelled /
-        # stats-less predicate column must error, not print an
-        # all-zero classification that reads as "everything prunes"
-        fast = pipeline._driver_classify(args.out, args.run_id, predicate, pins)
+        # classification only, with metadata_count's planner and its
+        # loud contract: a misspelled / stats-less predicate column
+        # must error, not print an all-zero classification that reads
+        # as "everything prunes"
+        plan = pipeline._plan(
+            spark, args.out, args.run_id, schema, [predicate], what=None
+        )
     except ValueError as e:
         raise SystemExit(f"error: {e}") from None
-    if fast is not None:
-        import pyarrow.compute as pc
+    import pyarrow.compute as pc
 
-        groups = fast[2]
-        kept = groups.filter(groups["keep"])
-        proven = kept.filter(kept["all"])
-        mixed = kept.filter(pc.invert(kept["all"]))
-        n_none = groups.num_rows - kept.num_rows
-        n_all, n_mixed = proven.num_rows, mixed.num_rows
-        rows_all = pc.sum(proven["n_rows"]).as_py() or 0
-        rows_mixed = pc.sum(mixed["n_rows"]).as_py() or 0
-    else:
-        from pyspark.sql import functions as F
-
-        stripes = pipeline.read_stripes(spark, args.out, args.run_id)
-        meta = pipeline._epoch_keep_filter(
-            spark, stripes, want_tops
-        ).drop("data").filter(F.col("column").isin(pcols))
-        cls = pipeline._classify_pred_groups(
-            meta, predicate, ["partition_id", "epoch", "stripe_idx"],
-            pins=pins,
-        )
-        r = cls.agg(
-            F.sum(F.when(~F.col("_keep"), 1).otherwise(0)).alias("n_none"),
-            F.sum(F.when(F.col("_keep") & F.col("_all"), 1).otherwise(0)).alias("n_all"),
-            F.sum(F.when(F.col("_keep") & ~F.col("_all"), 1).otherwise(0)).alias("n_mixed"),
-            F.sum(F.when(F.col("_keep") & F.col("_all"), F.col("n_rows"))).alias("rows_all"),
-            F.sum(F.when(F.col("_keep") & ~F.col("_all"), F.col("n_rows"))).alias("rows_mixed"),
-            *pipeline._presence_aggs(predicate),
-        ).first()
-        try:
-            pipeline._raise_missing(r, predicate, args.run_id)
-        except ValueError as e:
-            raise SystemExit(f"error: {e}") from None
-        n_none, n_all, n_mixed = int(r.n_none or 0), int(r.n_all or 0), int(r.n_mixed or 0)
-        rows_all, rows_mixed = int(r.rows_all or 0), int(r.rows_mixed or 0)
+    groups = plan.groups
+    kept = groups.filter(groups["keep"])
+    proven = kept.filter(kept["all"])
+    mixed = kept.filter(pc.invert(kept["all"]))
+    n_none = groups.num_rows - kept.num_rows
+    n_all, n_mixed = proven.num_rows, mixed.num_rows
+    rows_all = pc.sum(proven["n_rows"]).as_py() or 0
+    rows_mixed = pc.sum(mixed["n_rows"]).as_py() or 0
     print(json.dumps({
         "stripe_groups": {"none": n_none, "all": n_all, "mixed": n_mixed},
         "rows_provable_from_metadata": rows_all,
         "rows_needing_decode_at_most": rows_mixed,
-        "planned_driver_side": fast is not None,
+        "planned_driver_side": plan.dset is not None,
     }))
     return EXIT_OK
 

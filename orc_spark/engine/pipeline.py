@@ -14,7 +14,11 @@ from __future__ import annotations
 import math
 import os
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -713,24 +717,42 @@ def _epoch_keep_filter(spark: SparkSession, stripes: DataFrame, want_cols: set[s
     is complete (row alignment holds only within one encode pass).
     Returns a filtered stripes DF; bounded driver collect (one row per
     partition x epoch — metadata, never data)."""
-    meta = stripes.drop("data").filter(
-        (F.col("status") == "completed") & F.col("column").isin(list(want_cols))
-    )
+    done = F.col("status") == "completed"
+    meta = stripes.drop("data").filter(F.col("column").isin(list(want_cols)))
     # ONE metadata action for both the max-epoch short-circuit and the
     # per-partition keep-map (this runs on every decode — a second
-    # driver job here is pure fixed cost on point lookups)
+    # driver job here is pure fixed cost on point lookups). A stripe
+    # index with wanted rows but no completed one is a group whose
+    # wanted rows all failed: decode never sees it, so a selected
+    # epoch holding one is checked (zonemap.lost_group_check)
     counts = (
         meta.groupBy("partition_id", "epoch")
-        .agg(F.countDistinct("column").alias("nc"))
+        .agg(
+            F.countDistinct(F.when(done, F.col("column"))).alias("nc"),
+            (
+                F.countDistinct("stripe_idx")
+                - F.countDistinct(F.when(done, F.col("stripe_idx")))
+            ).alias("n_lost"),
+        )
         .collect()
     )
-    if not counts or max(int(r.epoch) for r in counts) == 0:
-        return stripes.filter(F.col("status") == "completed")  # common case
+    formed = [r for r in counts if r.nc]
+    short = not formed or max(int(r.epoch) for r in formed) == 0
     best: dict[int, int] = {}
-    for r in counts:
+    for r in formed:
         if int(r.nc) >= len(want_cols):
             pid = int(r.partition_id)
             best[pid] = max(best.get(pid, -1), int(r.epoch))
+    lost = [
+        f"{r.partition_id}:{r.epoch}" for r in counts if r.n_lost
+        and int(r.epoch) == (0 if short else best.get(int(r.partition_id)))
+    ]
+    if lost:
+        zonemap.lost_group_check(
+            stripes, want_cols, F.concat_ws(":", "partition_id", "epoch").isin(lost)
+        )
+    if short:
+        return stripes.filter(done)  # common case
     keep = spark.createDataFrame(
         [(pid, ep) for pid, ep in sorted(best.items())],
         "partition_id int, epoch long",
@@ -953,7 +975,8 @@ def decode_job(
     # temporal keep-pins from the caller's schema: lower-bounded
     # timestamp scans ("since date X") prune only when the stat unit is
     # known (zonemap._pin_keep_cands)
-    pins = _temporal_pins(result_schema, predicate) if predicate else None
+    session_tz = spark.conf.get("spark.sql.session.timeZone") if predicate else None
+    pins = _temporal_pins(result_schema, predicate, session_tz) if predicate else None
     spec_args = dict(
         missing_defaults=missing_defaults,
         verify_checksums=verify_checksums,
@@ -961,9 +984,7 @@ def decode_job(
         # zonemap.predicate_expr stays the exactness gate
         residual=predicate,
         emit_positions=_emit_positions,
-        session_tz=(
-            spark.conf.get("spark.sql.session.timeZone") if predicate else None
-        ),
+        session_tz=session_tz,
     )
     sdir = lineage_mod.stripes_dir(out_dir)
     driver_plannable = (
@@ -1814,7 +1835,9 @@ def decode_job_dnf(
     keep = None
     for br in branches:
         g = zonemap.prune_stripes(
-            meta, br, pins=_temporal_pins(result_schema, br)
+            meta, br, pins=_temporal_pins(
+                result_schema, br, spark.conf.get("spark.sql.session.timeZone")
+            ),
         ).select("partition_id", "epoch", "stripe_idx").distinct()
         keep = g if keep is None else keep.unionByName(g)
     keep = keep.distinct()
@@ -1844,93 +1867,81 @@ def metadata_aggregate(
     table's; a column where ANY kept stripe holds data rows without
     family stats (NaN-poisoned floats, exotic types) raises ValueError
     instead of returning a wrong bound — decode-and-aggregate is the
-    fallback. Epoch selection matches decode_job's exactly.
+    fallback. Epoch selection is the aggregate planner's (:func:`_plan`,
+    the same as decode_job's); within the footer budget no Spark job
+    runs before the returned DataFrame's own.
 
     At 100 TB this is the difference between a metadata scan (one row
     per stripe x column) and decoding the table to answer
     `SELECT MIN(ts), MAX(ts), COUNT(*)`.
     """
-    want = set(columns)
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        # zone stats describe the ENCODED rows; live deletes make the
-        # footer answer wrong for COUNT and possibly MIN/MAX — refuse
-        # rather than guess (compact_run materializes the live view)
-        raise ValueError(
-            f"run {run_id!r} carries live deletes "
-            f"({dstats['n_vectors']} vector(s), "
-            f"{dstats['n_eq_values']} equality value(s)) — metadata-"
-            "only aggregates would include deleted rows; compact the "
-            "run or decode-and-aggregate"
-        )
-    stripes = read_stripes(spark, out_dir, run_id)
-    meta = _epoch_keep_filter(spark, stripes, want).drop("data").filter(
-        F.col("column").isin(list(want))
+    want = sorted(set(columns))
+    plan = _plan(
+        spark, out_dir, run_id, None, [[]], want=want,
+        what="metadata-only aggregates",
     )
-    rows = (
-        meta.groupBy("column")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("null_count").alias("n_nulls"),
-            F.min("min_int").alias("min_int"),
-            F.max("max_int").alias("max_int"),
-            F.min("min_num").alias("min_num"),
-            F.max("max_num").alias("max_num"),
-            F.min("min_str").alias("min_str"),
-            F.max("max_str").alias("max_str"),
-            F.sum(
-                F.when(
-                    (F.col("n_rows") > F.coalesce("null_count", F.lit(0)))
-                    & F.col("min_int").isNull()
-                    & F.col("min_num").isNull()
-                    & F.col("min_str").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_statless"),
-            F.sum(
-                F.when(F.col("null_count").isNull(), 1).otherwise(0)
-            ).alias("n_countless"),
-            # stat_exact=False marks WIDENED bounds (decimal128's
-            # one-ulp-padded doubles): safe to prune with, wrong to
-            # report as the column's min/max. Null (pre-upgrade rows,
-            # which never widened) counts as exact.
-            F.sum(
-                F.when(F.col("stat_exact") == F.lit(False), 1).otherwise(0)
-            ).alias("n_inexact"),
+    rows = plan.meta.filter(
+        pc.is_in(
+            zonemap.group_key_strings(plan.meta),
+            value_set=zonemap.group_key_strings(plan.groups),
         )
-        .collect()
     )
-    by_col = {r.column: r for r in rows}
-    missing = sorted(want - set(by_col))
+    no_stats = pc.and_(
+        pc.and_(pc.is_null(rows["min_int"]), pc.is_null(rows["min_num"])),
+        pc.is_null(rows["min_str"]),
+    )
+    rows = rows.append_column(
+        "statless",
+        pc.cast(pc.and_(
+            pc.greater(rows["n_rows"], pc.fill_null(rows["null_count"], 0)), no_stats
+        ), pa.int64()),
+    ).append_column(
+        "countless", pc.cast(pc.is_null(rows["null_count"]), pa.int64())
+    ).append_column(
+        # stat_exact=False marks WIDENED bounds (decimal128's
+        # one-ulp-padded doubles): safe to prune with, wrong to report
+        # as the column's min/max. Null (pre-upgrade rows, which never
+        # widened) counts as exact.
+        "inexact",
+        pc.cast(pc.fill_null(pc.invert(rows["stat_exact"]), False), pa.int64()),
+    )
+    by_col = {
+        r["column"]: r
+        for r in rows.group_by("column").aggregate([
+            ("n_rows", "sum"), ("null_count", "sum"),
+            ("min_int", "min"), ("max_int", "max"),
+            ("min_num", "min"), ("max_num", "max"),
+            ("min_str", "min"), ("max_str", "max"),
+            ("statless", "sum"), ("countless", "sum"), ("inexact", "sum"),
+        ]).to_pylist()
+    }
+    missing = sorted(set(want) - set(by_col))
     if missing:
         raise ValueError(f"no stripes for column(s) {missing} in run {run_id!r}")
     out = []
-    for c in sorted(want):
+    for c in want:
         r = by_col[c]
-        if int(r.n_countless):
+        if r["countless_sum"]:
             raise ValueError(
-                f"column {c!r}: {r.n_countless} stripe(s) lack null counts — "
+                f"column {c!r}: {r['countless_sum']} stripe(s) lack null counts — "
                 "metadata aggregate would be inexact; decode instead"
             )
-        if int(r.n_statless):
+        if r["statless_sum"]:
             raise ValueError(
-                f"column {c!r}: {r.n_statless} stripe(s) hold rows without "
+                f"column {c!r}: {r['statless_sum']} stripe(s) hold rows without "
                 "zone stats (NaN-poisoned / unsupported type) — min/max "
                 "from metadata would be wrong; decode instead"
             )
-        if int(r.n_inexact):
+        if r["inexact_sum"]:
             raise ValueError(
-                f"column {c!r}: {r.n_inexact} stripe(s) carry widened "
+                f"column {c!r}: {r['inexact_sum']} stripe(s) carry widened "
                 "(pruning-only) bounds — decimal columns have no exact "
                 "double min/max; decode-and-aggregate instead"
             )
-        out.append(
-            (
-                c, int(r.n_rows), int(r.n_nulls),
-                r.min_int, r.max_int, r.min_num, r.max_num,
-                r.min_str, r.max_str,
-            )
-        )
+        out.append((
+            c, r["n_rows_sum"], r["null_count_sum"],
+            *(r[f"{m}_{f}_{m}"] for f in ("int", "num", "str") for m in ("min", "max")),
+        ))
     return spark.createDataFrame(
         out,
         "column string, n_rows bigint, n_nulls bigint, "
@@ -1939,104 +1950,31 @@ def metadata_aggregate(
     )
 
 
-def _temporal_pins(result_schema, predicate: list[tuple]) -> dict:
+def _temporal_pins(result_schema, predicate: list[tuple], session_tz: str | None = None) -> dict:
     """col -> "us"/"days" for timestamp/date predicate columns — lets
-    _conjunct_all prove under the single true int encoding instead of
+    the ALL proofs hold under the single true int encoding instead of
     conservatively AND-ing both candidates (zonemap._conjunct_all's
-    pin). Nested (dotted) columns stay unpinned (conservative)."""
+    pin). A TimestampNTZ column under a non-UTC ``session_tz`` pins
+    ``"ntz:<zone>"`` instead, nested ones included: its stats are wall
+    clocks that Spark compares with a datetime literal as instants in
+    that zone (zonemap._resolve_ntz). Other nested (dotted) columns
+    stay unpinned (conservative)."""
     from pyspark.sql.types import (
         DateType, TimestampNTZType, TimestampType,
     )
 
-    by_name = {f.name: f.dataType for f in result_schema.fields}
     pins = {}
     for col, _, _ in predicate:
-        t = by_name.get(col)
-        if isinstance(t, (TimestampType, TimestampNTZType)):
+        t = _nested_field_type(result_schema, col)
+        if isinstance(t, TimestampNTZType) and session_tz and session_tz not in zonemap._UTC_ZONES:
+            pins[col] = zonemap.NTZ_PIN + session_tz
+        elif "." in col:
+            continue
+        elif isinstance(t, (TimestampType, TimestampNTZType)):
             pins[col] = "us"
         elif isinstance(t, DateType):
             pins[col] = "days"
     return pins
-
-
-def _classify_pred_groups(
-    meta: DataFrame, predicate: list[tuple], gkeys: list[str],
-    pins: dict | None = None,
-) -> DataFrame:
-    """Classify every stripe group of a blob-free metadata view
-    against a conjunctive predicate: one row per group with `_keep`
-    (zone ranges may match — zonemap._conjunct_keep) and `_all`
-    (EVERY row provably matches — zonemap._conjunct_all). NONE groups
-    are `~_keep`; MIXED are `_keep & ~_all`. Shared by metadata_count,
-    metadata_sum and metadata_group_aggregate. Absent stats coalesce
-    conservatively: keep=yes, all=no. Also emits `_has{j}` (1 when the
-    j-th conjunct's column had a stats row in the group) so callers
-    fold the loud missing-column check into their existing aggregate
-    action instead of a separate metadata collect."""
-    flags = []
-    for j, (col, _, _) in enumerate(predicate):
-        flags.append(
-            F.max(
-                F.when(F.col("column") == col, F.lit(1))
-            ).alias(f"_has{j}")
-        )
-    for j, (col, op, val) in enumerate(predicate):
-        hit = F.col("column") == col
-        flags.append(
-            F.max(
-                F.when(
-                    hit,
-                    zonemap._conjunct_keep(
-                        op, val, pin=(pins or {}).get(col)
-                    ).cast("int"),
-                )
-            ).alias(f"_keep{j}")
-        )
-        flags.append(
-            F.max(
-                F.when(
-                    hit,
-                    zonemap._conjunct_all(
-                        op, val, pin=(pins or {}).get(col)
-                    ).cast("int"),
-                )
-            ).alias(f"_all{j}")
-        )
-    cls = meta.groupBy(*gkeys).agg(F.max("n_rows").alias("n_rows"), *flags)
-    keep = F.lit(True)
-    allf = F.lit(True)
-    for j in range(len(predicate)):
-        keep = keep & (F.coalesce(F.col(f"_keep{j}"), F.lit(1)) == 1)
-        allf = allf & (F.coalesce(F.col(f"_all{j}"), F.lit(0)) == 1)
-    return cls.select(
-        *gkeys, "n_rows", keep.alias("_keep"), allf.alias("_all"),
-        *[F.col(f"_has{j}") for j in range(len(predicate))],
-    )
-
-
-def _presence_aggs(predicate: list[tuple]):
-    """Global aggregate columns over a _classify_pred_groups result:
-    `_p{j}` is non-null iff conjunct j's column had a stats row in ANY
-    group — the lazy twin of the loud missing-column check."""
-    return [
-        F.max(F.col(f"_has{j}")).alias(f"_p{j}")
-        for j in range(len(predicate))
-    ]
-
-
-def _raise_missing(agg_row, predicate: list[tuple], run_id: str) -> None:
-    missing = sorted(
-        {
-            predicate[j][0]
-            for j in range(len(predicate))
-            if getattr(agg_row, f"_p{j}") is None
-        }
-    )
-    if missing:
-        raise ValueError(
-            f"no stats rows for predicate column(s) {missing} in run "
-            f"{run_id!r} — decode-and-aggregate instead"
-        )
 
 
 def _bloom_relevant(predicate: list[tuple]) -> bool:
@@ -2071,13 +2009,13 @@ def _restricted_decode(
     predicate: list[tuple] | None,
     only,
 ) -> DataFrame:
-    """Shared tail of every metadata aggregate: decode ONLY the stripe
-    groups in ``only`` (list => literal pushdown, DataFrame =>
-    semi-join; see decode_job(_only_groups)), projecting the top-level
-    parents of ``cols`` (:func:`_tops_schema`). The in-decode fused
-    prune is engaged only when the predicate carries bloom-relevant
-    conjuncts (equality/IN/token) — for pure range predicates the
-    caller's classifier already did all the zone math."""
+    """Decode ONLY the stripe groups in ``only`` as Spark tasks (see
+    decode_job(_only_groups); more than zonemap._PUSHDOWN_MAX_GROUPS
+    keys semi-join), projecting the top-level parents of ``cols``
+    (:func:`_tops_schema`). The in-decode fused prune is engaged only
+    when the predicate carries bloom-relevant conjuncts
+    (equality/IN/token) — for pure range predicates the caller's
+    classifier already did all the zone math."""
     tops, sub = _tops_schema(result_schema, cols)
     return decode_job(
         spark, out_dir, run_id, sub, columns=tops,
@@ -2088,96 +2026,198 @@ def _restricted_decode(
     )
 
 
-def _driver_classify(out_dir, run_id, predicate, pins, target=None):
-    """The ALL/NONE/MIXED classifier of metadata_count, metadata_sum
-    and metadata_stddev on the driver, for a local stripes dir whose
-    metadata fits the footer budget (zonemap._driver_plan_budget_ok):
-    the blob-free metadata is read with pyarrow and classified by
-    zonemap.classify_groups — no Spark job. None for Iceberg tables
-    and stores over the budget (the distributed classifier's case).
+# ------------------------------------------- the aggregate planner
 
-    Raises when a predicate column (or ``target``) has no stats row.
-    Returns (dataset, metadata table, classified groups)."""
-    import pyarrow.dataset as ds
+# the stats of a target column an aggregate can name (classify_groups)
+_STAT_FIELDS = (
+    "n_rows", "null_count", "min_int", "max_int", "min_num", "max_num",
+    "min_str", "max_str", "stat_exact", "sum_int", "sum_num", "m2",
+)
 
-    from . import retention
 
+class _MetaPlan(NamedTuple):
+    """The planner's answer (:func:`_plan`). ``groups``: one row per
+    selected stripe group (zonemap.classify_groups). ``meta``: the
+    completed metadata rows the groups are formed from. ``dset``: the
+    stripes dir as a pyarrow dataset when pyarrow read the metadata (a
+    local store within the footer budget), which lets the decode tail
+    decode on the driver; None when a Spark job collected it."""
+
+    groups: pa.Table
+    meta: pa.Table
+    dset: object
+    out_dir: str
+    run_id: str
+
+
+def _refuse_live_deletes(spark, out_dir: str, run_id: str, what: str) -> None:
+    """Zone stats and sketches describe the ENCODED rows; live deletes
+    would make a metadata answer include deleted rows — refuse rather
+    than guess (compact_run materializes the live view)."""
+    d = deletes_mod.delete_stats(spark, out_dir, run_id)
+    if d["n_vectors"] or d["n_eq_values"]:
+        raise ValueError(
+            f"run {run_id!r} carries live deletes ({d['n_vectors']} "
+            f"vector(s), {d['n_eq_values']} equality value(s)) — {what} "
+            "describe the encoded rows; compact the run or decode-and-"
+            "aggregate"
+        )
+
+
+def _plan(
+    spark, out_dir, run_id, result_schema, branches, targets=None, *,
+    want=(), lenient=(), blobs=(), what: str | None = "zone stats",
+) -> _MetaPlan:
+    """The one planner of the metadata aggregates. ``branches`` is the
+    predicate in disjunctive normal form: a conjunction is one branch,
+    ``[[]]`` matches every row. In order:
+
+    1. the live-delete check (``what`` names the refused answer; None
+       skips it, for the CLI dry run);
+    2. the metadata read, of the predicate, ``targets`` and ``want``
+       columns. A local store within the footer budget
+       (zonemap._driver_plan_budget_ok) is read with pyarrow: no Spark
+       job. Iceberg tables and stores over the budget run ONE Spark
+       job (:func:`_spark_meta`) that collects those columns'
+       blob-free rows: one row per stripe group per needed column,
+       without blooms, ``blobs`` adding sketch fields to the target
+       rows;
+    3. zonemap.classify_groups: epoch selection over the top-level
+       parents of those columns, ALL/NONE/MIXED per group OR-ed across
+       branches, and each target's stats (``targets`` maps role ->
+       column; fields come back as ``{role}_{field}``);
+    4. the loud missing-column errors: a predicate column, or a target
+       whose role is not in ``lenient``, with no stats row raises.
+    """
+    if what is not None:
+        _refuse_live_deletes(spark, out_dir, run_id, what)
+    targets = targets or {}
+    conjuncts = [c for br in branches for c in br]
+    pcols = {c for c, _, _ in conjuncts}
+    need = pcols | set(targets.values()) | set(want)
+    tops = {c.partition(".")[0] for c in need}
+    pins = _temporal_pins(
+        result_schema, conjuncts, spark.conf.get("spark.sql.session.timeZone")
+    )
+    fields = [*_STAT_FIELDS, *blobs] if targets else []
+    bloom = any(_bloom_relevant(br) for br in branches)
+    cols = list(dict.fromkeys([
+        *(c for c in zonemap.PLAN_COLUMNS if c != "bloom" or bloom),
+        "bytes_in", "stat_exact", *fields,
+    ]))
     sdir = lineage_mod.stripes_dir(out_dir)
-    if storage.is_iceberg(sdir):
-        return None
-    retention.recover_swap(sdir)  # as read_stripes: restore first
-    if not zonemap._driver_plan_budget_ok(sdir):
-        return None
-    dset = _stripes_dataset(out_dir)
-    cols = [
-        c for c in zonemap.PLAN_COLUMNS
-        if c != "bloom" or _bloom_relevant(predicate)
-    ]
-    meta = dset.to_table(
-        columns=[*cols, "bytes_in", "sum_int", "sum_num", "m2"],
-        filter=ds.field("run_id") == run_id,
+    dset = None
+    if not storage.is_iceberg(sdir):
+        from . import retention
+
+        retention.recover_swap(sdir)  # as read_stripes: restore first
+        if zonemap._driver_plan_budget_ok(sdir):
+            dset = _stripes_dataset(out_dir)
+    if dset is not None:
+        import pyarrow.dataset as ds
+
+        meta = dset.to_table(columns=cols, filter=ds.field("run_id") == run_id)
+    else:
+        meta = _spark_meta(
+            spark, out_dir, run_id, result_schema, branches, need | tops, cols,
+            set(targets.values()), blobs,
+        )
+    groups, meta, present = zonemap.classify_groups(
+        meta, tops, branches, pins, targets, fields, extra=need
     )
-    need = {c for c, _, _ in predicate} | ({target} if target else set())
-    groups, present, target_present = zonemap.classify_groups(
-        meta, {c.partition(".")[0] for c in need}, predicate, pins, target
+    missing = sorted(
+        (pcols | {c for r, c in targets.items() if r not in lenient}) - present
     )
-    missing = sorted({c for (c, _, _), p in zip(predicate, present) if not p})
     if missing:
         raise ValueError(
-            f"no stats rows for predicate column(s) {missing} in run "
-            f"{run_id!r} — decode-and-aggregate instead"
+            f"no stats rows for column(s) {missing} in run {run_id!r} — "
+            "decode-and-aggregate instead"
         )
-    if target is not None and not target_present:
-        raise ValueError(
-            f"no stats rows for column(s) [{target!r}] in run {run_id!r} "
-            "— decode-and-aggregate instead"
-        )
-    return dset, meta, groups
+    return _MetaPlan(groups, meta, dset, out_dir, run_id)
 
 
-def _count_mixed(spark, out_dir, run_id, result_schema, predicate, dset, meta, only):
-    """Rows of the MIXED stripe groups ``only`` that satisfy
-    ``predicate``. Within the _DRIVER_DECODE_MAX_* gate the groups
-    decode on the driver (decode_mod.decode_batches) and
-    zonemap.rows_match_arrow counts the matches: no Spark job. A
-    conjunct it cannot express exactly (contains_token, a type pairing
-    outside its proven set) makes Spark count the decoded rows with
-    predicate_expr instead (one job). Larger sets decode as tasks."""
-    import pyarrow as pa
-
-    pcols = [c for c, _, _ in predicate]
-    tops, sub = _tops_schema(result_schema, pcols)
-    spec = decode_mod.DecodeSpec.build(sub, tops)
-    gkeys = pa.array([f"{p}:{e}:{s}" for p, e, s in only], pa.string())
-    n_rows, n_bytes = _decoded_size(meta, gkeys, spec.want)
-    if n_rows <= _DRIVER_DECODE_MAX_ROWS and n_bytes <= _DRIVER_DECODE_MAX_BYTES:
-        table = _driver_decode(
-            dset, out_dir, run_id, only, gkeys, spec, sub, apply_deletes=False
-        )
-        mask, exact = zonemap.rows_match_arrow(
-            table, predicate, spark.conf.get("spark.sql.session.timeZone")
-        )
-        if exact:
-            return table.filter(mask).num_rows
-        dec = spark.createDataFrame(table, sub)
-    else:
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, pcols, predicate, only
-        )
-    return dec.filter(zonemap.predicate_expr(predicate)).count()
-
-
-def _key_restricted_stripes(spark, out_dir, run_id, result_schema, predicate):
-    """The run's stripes, cut to the partitions an ==/IN conjunct on
-    the partition key pins (:func:`_key_partition_restriction`):
-    partitions other than the literal's own cannot hold matching rows."""
+def _spark_meta(spark, out_dir, run_id, result_schema, branches, columns, cols, targets, blobs):
+    """:func:`_plan`'s metadata read for Iceberg tables and stores over
+    the footer budget: ONE Spark job collects the ``cols`` fields of
+    the rows of ``columns`` (blooms left out; the ``blobs`` sketch
+    fields on the ``targets`` rows only), cut to the partitions an
+    ==/IN conjunct on the partition key pins when every branch pins."""
     stripes = read_stripes(spark, out_dir, run_id)
-    key_pids = _key_partition_restriction(
-        spark, out_dir, run_id, result_schema, predicate
+    pids: set | None = set()
+    for br in branches:
+        p = _key_partition_restriction(
+            spark, out_dir, run_id, result_schema, br
+        ) if br else None
+        if p is None:
+            pids = None
+            break
+        pids |= set(p)
+    if pids is not None:
+        stripes = stripes.filter(F.col("partition_id").isin(sorted(pids)))
+    on_target = F.col("column").isin(sorted(targets))
+    meta = stripes.filter(F.col("column").isin(sorted(columns))).select(
+        *[
+            F.when(on_target, F.col(c)).alias(c) if c in blobs else F.col(c)
+            for c in cols if c != "bloom"
+        ]
+    ).toArrow()
+    failed = pc.not_equal(meta["status"], "completed")
+    if not pc.any(failed).as_py():
+        return meta
+    # a group whose needed stripes all failed exists when some other
+    # column completed (zonemap.raise_lost_groups): the rare faulted
+    # store pays one more job, for those partitions
+    pids = pc.unique(meta.filter(failed)["partition_id"]).to_pylist()
+    formed = stripes.filter(
+        F.col("partition_id").isin(pids) & (F.col("status") == "completed")
+    ).select(*zonemap.GROUP_KEYS, "status").distinct().toArrow()
+    return pa.concat_tables([meta, formed], promote_options="default")
+
+
+def _keys(groups) -> list[tuple[int, int, int]]:
+    return list(zip(*(groups[k].to_pylist() for k in zonemap.GROUP_KEYS)))
+
+
+def _decode_matching(spark, plan, result_schema, cols, keys, branches, arrow=False):
+    """The shared tail of the aggregates: decode the kept groups
+    ``keys`` that metadata cannot answer, with the top-level parents of
+    ``cols`` (:func:`_tops_schema`), and keep the rows matching
+    ``branches``. They decode through decode_job(_only_groups=keys)
+    (:func:`_restricted_decode`): on the driver within the
+    _DRIVER_DECODE_MAX_* gate for a local store within the footer
+    budget, else as Spark tasks; a filtered DataFrame comes back.
+
+    ``arrow=True`` (the count) decodes a pyarrow-planned store's groups
+    within the gate right here, against the plan's own metadata, and
+    returns the matching rows as an Arrow table when
+    zonemap.rows_match_arrow expresses every branch exactly: no Spark
+    job and no second metadata read."""
+    if arrow and plan.dset is not None:
+        tops, sub = _tops_schema(result_schema, cols)
+        spec = decode_mod.DecodeSpec.build(sub, tops)
+        gkeys = pa.array([f"{p}:{e}:{s}" for p, e, s in keys], pa.string())
+        n_rows, n_bytes = _decoded_size(plan.meta, gkeys, spec.want)
+        if n_rows <= _DRIVER_DECODE_MAX_ROWS and n_bytes <= _DRIVER_DECODE_MAX_BYTES:
+            table = _driver_decode(
+                plan.dset, plan.out_dir, plan.run_id, keys, gkeys, spec, sub,
+                apply_deletes=False,
+            )
+            tz = spark.conf.get("spark.sql.session.timeZone")
+            masks = [zonemap.rows_match_arrow(table, br, tz) for br in branches]
+            if not all(exact for _, exact in masks):
+                dec = spark.createDataFrame(table, sub)
+                return dec.filter(zonemap.predicate_dnf_expr(branches))
+            if any(m is None for m, _ in masks):
+                return table
+            mask = masks[0][0]
+            for m, _ in masks[1:]:
+                mask = pc.or_kleene(mask, m)
+            return table.filter(mask)
+    dec = _restricted_decode(
+        spark, plan.out_dir, plan.run_id, result_schema, cols,
+        branches[0] if len(branches) == 1 else None, keys,
     )
-    if key_pids is not None:
-        stripes = stripes.filter(F.col("partition_id").isin(key_pids))
-    return stripes
+    return dec.filter(zonemap.predicate_dnf_expr(branches))
 
 
 def _nested_field_type(result_schema, dotted: str):
@@ -2196,6 +2236,47 @@ def _nested_field_type(result_schema, dotted: str):
     return node
 
 
+def _is_integral(leaf) -> bool:
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+    return isinstance(leaf, (ByteType, ShortType, IntegerType, LongType))
+
+
+def _dnf_branches(branches, what: str) -> list:
+    if not branches or not all(branches):
+        raise ValueError(f"DNF {what} needs >= 1 non-empty branch")
+    return branches
+
+
+# ------------------------------------------------------------- COUNT
+
+def _count(spark, out_dir, run_id, result_schema, branches) -> tuple[int, dict]:
+    """COUNT(*) WHERE branches: ALL groups count their n_rows from
+    metadata, NONE groups 0, and MIXED groups decode the predicate
+    columns and count the matching rows — with zonemap.rows_match_arrow
+    when they decode on the driver, else with one Spark count."""
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, branches,
+        what="zone-stat counts",
+    )
+    g = plan.groups
+    kept = g.filter(g["keep"])
+    mixed = kept.filter(pc.invert(kept["all"]))
+    meta_rows = pc.sum(g.filter(g["all"])["n_rows"]).as_py() or 0
+    n = meta_rows
+    if mixed.num_rows:
+        pcols = sorted({c for br in branches for c, _, _ in br})
+        dec = _decode_matching(
+            spark, plan, result_schema, pcols, _keys(mixed), branches, arrow=True
+        )
+        n += dec.num_rows if isinstance(dec, pa.Table) else dec.count()
+    return n, {
+        "n_all": kept.num_rows - mixed.num_rows,
+        "n_mixed": mixed.num_rows,
+        "rows_from_metadata": meta_rows,
+    }
+
+
 def metadata_count(
     spark: SparkSession,
     out_dir: str,
@@ -2207,25 +2288,24 @@ def metadata_count(
     stripes — count pushdown over the zone maps (the ORC row-index /
     parquet `aggregatePushdown` trick, extended to predicates).
 
-    Every stripe group is classified per conjunct: NONE (zone range or
-    bloom provably excludes — contributes 0), ALL
-    (zonemap._conjunct_all proves EVERY row satisfies — contributes
-    n_rows with zero data bytes), else MIXED. Only the mixed groups
-    are decoded (predicate columns only) and counted row-level. On a
-    clustered column the mixed set is the two boundary stripes of the
-    range — at 100 TB the count touches metadata + ~2 stripes.
+    Every stripe group is classified by the aggregate planner
+    (:func:`_plan`): NONE (zone range or bloom provably excludes —
+    contributes 0), ALL (zonemap.conjunct_all_arrow proves EVERY row
+    satisfies — contributes n_rows with zero data bytes), else MIXED.
+    Only the mixed groups are decoded (predicate columns only) and
+    counted row-level. On a clustered column the mixed set is the two
+    boundary stripes of the range — at 100 TB the count touches
+    metadata + ~2 stripes.
 
-    Driver path: for a local stripes dir whose metadata fits the
-    footer budget (zonemap._driver_plan_budget_ok) the count starts no
-    Spark job. The metadata is read with pyarrow and classified by
-    zonemap.classify_groups; mixed groups within the
+    A local store within the footer budget starts no Spark job: the
+    metadata is read with pyarrow, and mixed groups within the
     _DRIVER_DECODE_MAX_* gate decode on the driver and are counted by
     zonemap.rows_match_arrow. Fallbacks: a conjunct that function
     cannot express exactly (contains_token, a type pairing outside its
     proven set) is counted by Spark over the driver-decoded rows (one
     job); a mixed set over the gate decodes as Spark tasks. Iceberg
-    tables and stores over the budget classify with a distributed
-    metadata job.
+    tables and stores over the budget collect their metadata with one
+    Spark job and decode as tasks.
 
     Exactness: ALL-proofs are sound under widened bounds and require
     null_count == 0 (SQL 3-value logic — one null breaks ALL); groups
@@ -2239,271 +2319,7 @@ def metadata_count(
     if not predicate:
         raise ValueError("metadata_count needs a predicate; use "
                          "metadata_aggregate for the unfiltered COUNT")
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — zone-stat counts "
-            "describe the encoded rows; compact the run first"
-        )
-    pcols = sorted({c for c, _, _ in predicate})
-    pins = _temporal_pins(result_schema, predicate)
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    plan = _driver_classify(out_dir, run_id, predicate, pins)
-    if plan is not None:
-        import pyarrow.compute as pc
-
-        dset, meta, groups = plan
-        kept = groups.filter(groups["keep"])
-        mixed = kept.filter(pc.invert(kept["all"]))
-        meta_rows = pc.sum(kept.filter(kept["all"])["n_rows"]).as_py() or 0
-        detail = {
-            "n_all": kept.num_rows - mixed.num_rows,
-            "n_mixed": mixed.num_rows,
-            "rows_from_metadata": meta_rows,
-        }
-        only = list(zip(*(mixed[k].to_pylist() for k in gkeys)))
-        mixed_count = _count_mixed(
-            spark, out_dir, run_id, result_schema, predicate, dset, meta, only
-        ) if only else 0
-        return meta_rows + mixed_count, detail
-    # key-equality fast path: groups outside the literal's own
-    # partition(s) contribute 0 to a conjunct count by construction
-    stripes = _key_restricted_stripes(
-        spark, out_dir, run_id, result_schema, predicate
-    )
-    # epoch completeness is judged on TOP-LEVEL columns (nested stats
-    # rows ride their parent's stripes); classification then reads the
-    # exact (possibly dotted) stats rows
-    want_tops = {c.partition(".")[0] for c in pcols}
-    meta = _epoch_keep_filter(
-        spark, stripes, want_tops
-    ).drop("data").filter(F.col("column").isin(pcols))
-    cls = _classify_pred_groups(meta, predicate, gkeys, pins=pins)
-    # ONE metadata action: classification totals + the loud
-    # missing-column check ride the same aggregate
-    agg = cls.agg(
-        F.sum(F.when(F.col("_keep") & F.col("_all"), F.col("n_rows"))).alias("meta_rows"),
-        F.sum(F.when(F.col("_keep") & F.col("_all"), 1).otherwise(0)).alias("n_all"),
-        F.sum(F.when(F.col("_keep") & ~F.col("_all"), 1).otherwise(0)).alias("n_mixed"),
-        *_presence_aggs(predicate),
-    ).first()
-    _raise_missing(agg, predicate, run_id)
-    meta_rows = int(agg.meta_rows or 0)
-    n_mixed = int(agg.n_mixed or 0)
-    detail = {
-        "n_all": int(agg.n_all or 0),
-        "n_mixed": n_mixed,
-        "rows_from_metadata": meta_rows,
-    }
-    mixed_count = 0
-    if n_mixed:
-        mixed = cls.filter(F.col("_keep") & ~F.col("_all")).select(*gkeys)
-        if n_mixed <= zonemap._PUSHDOWN_MAX_GROUPS:
-            only = [
-                (r.partition_id, r.epoch, r.stripe_idx)
-                for r in mixed.collect()
-            ]
-        else:  # huge boundary set: semi-join, no driver collect
-            only = mixed
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, pcols, predicate, only
-        )
-        mixed_count = dec.filter(zonemap.predicate_expr(predicate)).count()
-    return meta_rows + mixed_count, detail
-
-
-def metadata_sum(
-    spark: SparkSession,
-    out_dir: str,
-    run_id: str,
-    result_schema,
-    column: str,
-    predicate: list[tuple] | None = None,
-) -> tuple[float | int | None, int, dict]:
-    """EXACT ``SUM(column), COUNT(column) WHERE predicate`` from the
-    per-stripe sum statistics (ORC Integer/DoubleStatistics.sum; the
-    Iceberg/parquet aggregate-pushdown analogue, extended to
-    predicates like metadata_count).
-
-    Stripe groups the classifier proves ALL contribute their recorded
-    sum_int/sum_num and non-null count with zero data bytes; NONE
-    contribute nothing; MIXED groups — and ALL groups whose stripes
-    never recorded a sum (NaN-poisoned floats, int64-overflow-risk
-    ranges, decimals, pre-upgrade rows) — decode the target + predicate
-    columns and aggregate row-level. Exact by construction: sums are
-    recorded exactly or not at all, and unprovable groups decode,
-    never estimate. SUM/COUNT skip nulls (SQL semantics) — the stripe
-    stats already count non-null only. Live deletes raise.
-
-    Returns (sum, count_nonnull, detail); sum is None when count is 0
-    (SQL SUM of the empty set). AVG = sum / count at the caller.
-    """
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — zone-stat sums "
-            "describe the encoded rows; compact the run first"
-        )
-    predicate = predicate or []
-    pcols = sorted({c for c, _, _ in predicate})
-    need = sorted(set(pcols) | {column})
-    pins = _temporal_pins(result_schema, predicate)
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    plan = _driver_classify(out_dir, run_id, predicate, pins, target=column)
-    if plan is not None:
-        s_int = s_num = None
-        meta_nn = n_meta = 0
-        only = []
-        for g in plan[2].filter(plan[2]["keep"]).to_pylist():
-            # an all-null stripe (nn == 0, stats row present) has no
-            # recorded sum but needs no decode: SUM skips nulls
-            has_sum = (
-                g["sum_int"] is not None
-                or g["sum_num"] is not None
-                or g["nn"] == 0
-            )
-            if g["all"] and has_sum:
-                n_meta += 1
-                meta_nn += g["nn"] or 0
-                if g["sum_int"] is not None:
-                    s_int = (s_int or 0) + int(g["sum_int"])
-                if g["sum_num"] is not None:
-                    s_num = (s_num or 0.0) + float(g["sum_num"])
-            else:
-                only.append((g["partition_id"], g["epoch"], g["stripe_idx"]))
-        n_decode = len(only)
-    else:
-        stripes = _key_restricted_stripes(
-            spark, out_dir, run_id, result_schema, predicate
-        )
-        want_tops = {c.partition(".")[0] for c in need}
-        meta = _epoch_keep_filter(
-            spark, stripes, want_tops
-        ).drop("data").filter(F.col("column").isin(need))
-        if predicate:
-            cls = _classify_pred_groups(meta, predicate, gkeys, pins=pins)
-        else:
-            cls = (
-                meta.groupBy(*gkeys)
-                .agg(F.max("n_rows").alias("n_rows"))
-                .select(
-                    *gkeys, "n_rows",
-                    F.lit(True).alias("_keep"), F.lit(True).alias("_all"),
-                )
-            )
-        tgt = meta.filter(F.col("column") == column).select(
-            *gkeys,
-            F.col("sum_int"), F.col("sum_num"),
-            (F.col("n_rows") - F.coalesce("null_count", F.lit(0))).alias("_nn"),
-        )
-        # left join: a group missing the target's stats row (evolved-in
-        # column) or its sum (unsummable stripe) must decode, not vanish
-        j = cls.join(tgt, gkeys, "left")
-        # all-null stripes (nn == 0 with a stats row) contribute zero
-        # to SUM/COUNT without decoding; coalesce keeps meta_ok
-        # boolean-valued when the stats row is missing entirely (a
-        # null meta_ok would drop the stripe from BOTH halves)
-        has_sum = (
-            F.col("sum_int").isNotNull()
-            | F.col("sum_num").isNotNull()
-            | F.coalesce(F.col("_nn") == 0, F.lit(False))
-        )
-        meta_ok = F.col("_keep") & F.col("_all") & has_sum
-        # ONE metadata action: totals + the loud missing-column check for
-        # predicate columns (_presence_aggs) and the target (_tp)
-        agg = j.agg(
-            # decimal(38,0) accumulation: each stripe sum is bounded by
-            # the encode-side 2^62 guard, but the TOTAL over stripes is
-            # not — a plain long SUM would wrap silently past int64
-            # while the driver fast path (unbounded Python ints) stays
-            # exact. 38 digits ≈ 2^126 keeps ~2^64 stripes exact.
-            F.sum(
-                F.when(meta_ok, F.col("sum_int").cast("decimal(38,0)"))
-            ).alias("s_int"),
-            F.sum(F.when(meta_ok, F.col("sum_num"))).alias("s_num"),
-            F.sum(F.when(meta_ok, F.col("_nn"))).alias("nn"),
-            F.sum(F.when(meta_ok, 1).otherwise(0)).alias("n_meta"),
-            F.sum(
-                F.when(F.col("_keep") & ~meta_ok, 1).otherwise(0)
-            ).alias("n_decode"),
-            F.count(F.col("_nn")).alias("_tp"),
-            *_presence_aggs(predicate),
-        ).first()
-        _raise_missing(agg, predicate, run_id)
-        if int(agg._tp or 0) == 0:
-            raise ValueError(
-                f"no stats rows for column(s) [{column!r}] in run "
-                f"{run_id!r} — decode-and-aggregate instead"
-            )
-        s_int = int(agg.s_int) if agg.s_int is not None else None
-        s_num = float(agg.s_num) if agg.s_num is not None else None
-        meta_nn = int(agg.nn or 0)
-        n_meta = int(agg.n_meta or 0)
-        n_decode = int(agg.n_decode or 0)
-        only = None
-    if s_int is not None and s_num is not None:
-        raise ValueError(
-            f"column {column!r} carries sums in BOTH stat families — "
-            "mixed-type stripes; decode-and-aggregate instead"
-        )
-    meta_sum = s_int if s_int is not None else s_num
-    detail = {
-        "n_all": n_meta,
-        "n_mixed": n_decode,
-        "rows_from_metadata": meta_nn,
-    }
-    dec_sum, dec_nn = None, 0
-    if n_decode:
-        if only is None:
-            mixed = j.filter(F.col("_keep") & ~meta_ok).select(*gkeys)
-            if n_decode <= zonemap._PUSHDOWN_MAX_GROUPS:
-                only = [
-                    (r.partition_id, r.epoch, r.stripe_idx)
-                    for r in mixed.collect()
-                ]
-            else:
-                only = mixed
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, need, predicate, only
-        )
-        if predicate:
-            dec = dec.filter(zonemap.predicate_expr(predicate))
-        from pyspark.sql.types import (
-            ByteType, IntegerType, LongType, ShortType,
-        )
-
-        # integral leaves aggregate in decimal(38,0) so the decode
-        # residue stays exact past int64 (Spark's long SUM wraps),
-        # mirroring the decimal accumulation on the metadata side
-        leaf = _nested_field_type(result_schema, column)
-        scol = (
-            F.col(column).cast("decimal(38,0)")
-            if isinstance(leaf, (ByteType, ShortType, IntegerType, LongType))
-            else F.col(column)
-        )
-        row = dec.agg(
-            F.sum(scol).alias("s"), F.count(column).alias("c")
-        ).first()
-        dec_sum = row.s
-        dec_nn = int(row.c)
-        if dec_sum is not None and not isinstance(dec_sum, (int, float)):
-            # Decimal: exact int for the integral path, float for
-            # genuine decimal columns
-            dec_sum = (
-                int(dec_sum)
-                if isinstance(
-                    leaf, (ByteType, ShortType, IntegerType, LongType)
-                )
-                else float(dec_sum)
-            )
-    total_nn = meta_nn + dec_nn
-    if meta_sum is None:
-        total = dec_sum
-    elif dec_sum is None:
-        total = meta_sum
-    else:
-        total = meta_sum + dec_sum
-    return total, total_nn, detail
+    return _count(spark, out_dir, run_id, result_schema, [predicate])
 
 
 def metadata_count_dnf(
@@ -2515,7 +2331,7 @@ def metadata_count_dnf(
 ) -> tuple[int, dict]:
     """EXACT ``COUNT(*) WHERE (b1) OR (b2) OR ...`` — the DNF
     completion of :func:`metadata_count`: every stripe group is
-    classified per BRANCH (zonemap keep/ALL proofs), and
+    classified per BRANCH, and
 
     - any branch ALL  ⇒ every row matches that branch ⇒ the whole
       group counts from metadata (n_rows, zero data bytes);
@@ -2531,74 +2347,91 @@ def metadata_count_dnf(
     Returns (count, {"n_all": ..., "n_mixed": ...,
     "rows_from_metadata": ...}).
     """
-    if not branches or not all(branches):
-        raise ValueError("DNF count needs >= 1 non-empty branch")
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — zone-stat counts "
-            "describe the encoded rows; compact the run first"
-        )
-    pcols = sorted({c for br in branches for c, _, _ in br})
-    stripes = read_stripes(spark, out_dir, run_id)
-    want_tops = {c.partition(".")[0] for c in pcols}
-    meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data").filter(
-        F.col("column").isin(pcols)
+    return _count(
+        spark, out_dir, run_id, result_schema, _dnf_branches(branches, "count")
     )
-    present = {
-        r.column for r in meta.select("column").distinct().collect()
-    }
-    missing = sorted(set(pcols) - present)
-    if missing:
+
+
+# --------------------------------------------------------------- SUM
+
+def _sum(spark, out_dir, run_id, result_schema, column, branches):
+    """(sum, count_nonnull, n_all, n_decode, metadata_sum,
+    metadata_count_nonnull) of
+    ``column`` WHERE branches: ALL groups with a recorded sum (or no
+    non-null row) fold their footer sum and non-null count; every other
+    kept group decodes and sums row-level."""
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, branches, {"t": column},
+        what="zone-stat sums",
+    )
+    kept = plan.groups.filter(plan.groups["keep"])
+    # an all-null stripe (nn == 0, stats row present) has no recorded
+    # sum but needs no decode: SUM skips nulls
+    has_sum = pc.or_(
+        pc.or_(pc.is_valid(kept["t_sum_int"]), pc.is_valid(kept["t_sum_num"])),
+        pc.fill_null(pc.equal(kept["t_nn"], 0), False),
+    )
+    ok = pc.and_(kept["all"], has_sum)
+    proven, rest = kept.filter(ok), kept.filter(pc.invert(ok))
+    # int sums accumulate exactly: each stripe sum is bounded by the
+    # encode-side 2^62 guard, the total over stripes is not
+    s_int = pc.sum(pc.cast(proven["t_sum_int"], pa.decimal128(38, 0))).as_py()
+    s_num = pc.sum(proven["t_sum_num"]).as_py()
+    if s_int is not None and s_num is not None:
         raise ValueError(
-            f"no stats rows for predicate column(s) {missing} in run "
-            f"{run_id!r} — decode-and-aggregate instead"
+            f"column {column!r} carries sums in BOTH stat families — "
+            "mixed-type stripes; decode-and-aggregate instead"
         )
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    joined = None
-    hit_cols = []
-    for bi, br in enumerate(branches):
-        cls_b = _classify_pred_groups(
-            meta, br, gkeys, pins=_temporal_pins(result_schema, br)
-        ).select(
-            *gkeys,
-            F.col("n_rows").alias(f"_nr{bi}"),
-            (F.col("_keep") & F.col("_all")).alias(f"_ba{bi}"),
-            F.col("_keep").alias(f"_bk{bi}"),
-        )
-        hit_cols.append(bi)
-        joined = cls_b if joined is None else joined.join(cls_b, gkeys)
-    any_all = F.lit(False)
-    any_keep = F.lit(False)
-    for bi in hit_cols:
-        any_all = any_all | F.col(f"_ba{bi}")
-        any_keep = any_keep | F.col(f"_bk{bi}")
-    agg = joined.agg(
-        F.sum(F.when(any_all, F.col("_nr0"))).alias("meta_rows"),
-        F.sum(F.when(any_all, 1).otherwise(0)).alias("n_all"),
-        F.sum(F.when(any_keep & ~any_all, 1).otherwise(0)).alias("n_mixed"),
-    ).first()
-    meta_rows = int(agg.meta_rows or 0)
-    n_mixed = int(agg.n_mixed or 0)
-    mixed_count = 0
-    if n_mixed:
-        mixed = joined.filter(any_keep & ~any_all).select(*gkeys)
-        only: object = mixed
-        if n_mixed <= zonemap._PUSHDOWN_MAX_GROUPS:
-            only = [
-                (r.partition_id, r.epoch, r.stripe_idx)
-                for r in mixed.collect()
-            ]
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, pcols, None, only
-        )
-        mixed_count = dec.filter(
-            zonemap.predicate_dnf_expr(branches)
-        ).count()
-    return meta_rows + mixed_count, {
-        "n_all": int(agg.n_all or 0),
-        "n_mixed": n_mixed,
-        "rows_from_metadata": meta_rows,
+    meta_sum = int(s_int) if s_int is not None else s_num
+    meta_nn = nn = pc.sum(proven["t_nn"]).as_py() or 0
+    dec_sum = None
+    if rest.num_rows:
+        need = sorted({c for br in branches for c, _, _ in br} | {column})
+        dec = _decode_matching(spark, plan, result_schema, need, _keys(rest), branches)
+        # integral leaves aggregate in decimal(38,0) so the decode
+        # residue stays exact past int64 (Spark's long SUM wraps)
+        integral = _is_integral(_nested_field_type(result_schema, column))
+        scol = F.col(column).cast("decimal(38,0)") if integral else F.col(column)
+        row = dec.agg(F.sum(scol).alias("s"), F.count(column).alias("c")).first()
+        nn += int(row.c)
+        if row.s is not None:
+            dec_sum = int(row.s) if integral else float(row.s)
+    parts = [x for x in (meta_sum, dec_sum) if x is not None]
+    total = sum(parts) if nn else None
+    return total, nn, proven.num_rows, rest.num_rows, meta_sum, meta_nn
+
+
+def metadata_sum(
+    spark: SparkSession,
+    out_dir: str,
+    run_id: str,
+    result_schema,
+    column: str,
+    predicate: list[tuple] | None = None,
+) -> tuple[float | int | None, int, dict]:
+    """EXACT ``SUM(column), COUNT(column) WHERE predicate`` from the
+    per-stripe sum statistics (ORC Integer/DoubleStatistics.sum; the
+    Iceberg/parquet aggregate-pushdown analogue, extended to
+    predicates like metadata_count).
+
+    Stripe groups the planner proves ALL contribute their recorded
+    sum_int/sum_num and non-null count with zero data bytes; NONE
+    contribute nothing; MIXED groups — and ALL groups whose stripes
+    never recorded a sum (NaN-poisoned floats, int64-overflow-risk
+    ranges, decimals, pre-upgrade rows) — decode the target + predicate
+    columns and aggregate row-level. Exact by construction: sums are
+    recorded exactly or not at all, and unprovable groups decode,
+    never estimate. SUM/COUNT skip nulls (SQL semantics) — the stripe
+    stats already count non-null only. Live deletes raise.
+
+    Returns (sum, count_nonnull, detail); sum is None when count is 0
+    (SQL SUM of the empty set). AVG = sum / count at the caller.
+    """
+    total, nn, n_all, n_decode, _, meta_nn = _sum(
+        spark, out_dir, run_id, result_schema, column, [predicate or []]
+    )
+    return total, nn, {
+        "n_all": n_all, "n_mixed": n_decode, "rows_from_metadata": meta_nn,
     }
 
 
@@ -2613,103 +2446,21 @@ def metadata_sum_dnf(
     """EXACT ``SUM(column) WHERE (b1) OR (b2) ...`` — the SUM member
     of the DNF pushdown family (see :func:`metadata_count_dnf` for the
     group-accounting argument): any-branch-ALL groups contribute their
-    footer sum with zero data bytes (integral columns stay exact
-    int64; floats fold in double), every-branch-NONE contribute
-    nothing, the rest decode the union of predicate columns plus the
-    target and sum row-level under the DNF residual. Groups whose
-    target sum is missing from the footer (overflow-declined, NaN
-    poisoning, pre-upgrade rows) decode — exact either way. SQL
-    semantics: nulls skipped; all-matching-rows-null yields None.
+    footer sum with zero data bytes (integral columns stay exact),
+    every-branch-NONE contribute nothing, the rest decode the union of
+    predicate columns plus the target and sum row-level under the DNF
+    residual. Groups whose target sum is missing from the footer
+    (overflow-declined, NaN poisoning, pre-upgrade rows) decode —
+    exact either way. SQL semantics: nulls skipped;
+    all-matching-rows-null yields None.
 
     Returns (sum | None, {"n_all", "n_mixed", "from_metadata"}).
     """
-    from pyspark.sql.types import (
-        ByteType, IntegerType, LongType, ShortType,
+    total, _, n_all, n_decode, meta_sum, _ = _sum(
+        spark, out_dir, run_id, result_schema, column,
+        _dnf_branches(branches, "sum"),
     )
-
-    if not branches or not all(branches):
-        raise ValueError("DNF sum needs >= 1 non-empty branch")
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — zone-stat sums "
-            "describe the encoded rows; compact the run first"
-        )
-    leaf = _nested_field_type(result_schema, column)
-    int_sum = isinstance(leaf, (ByteType, ShortType, IntegerType, LongType))
-    pcols = sorted({c for br in branches for c, _, _ in br} | {column})
-    stripes = read_stripes(spark, out_dir, run_id)
-    want_tops = {c.partition(".")[0] for c in pcols}
-    meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data").filter(
-        F.col("column").isin(pcols)
-    )
-    present = {
-        r.column for r in meta.select("column").distinct().collect()
-    }
-    missing = sorted(set(pcols) - present)
-    if missing:
-        raise ValueError(
-            f"no stats rows for column(s) {missing} in run {run_id!r} "
-            "— decode-and-aggregate instead"
-        )
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    joined = None
-    for bi, br in enumerate(branches):
-        cls_b = _classify_pred_groups(
-            meta, br, gkeys, pins=_temporal_pins(result_schema, br)
-        ).select(
-            *gkeys,
-            (F.col("_keep") & F.col("_all")).alias(f"_ba{bi}"),
-            F.col("_keep").alias(f"_bk{bi}"),
-        )
-        joined = cls_b if joined is None else joined.join(cls_b, gkeys)
-    tgt = meta.filter(F.col("column") == column).select(
-        *gkeys, "sum_int", "sum_num",
-        (F.col("n_rows") - F.coalesce("null_count", F.lit(0))).alias("_nn"),
-    )
-    joined = joined.join(tgt, gkeys, "left")
-    any_all = F.lit(False)
-    any_keep = F.lit(False)
-    for bi in range(len(branches)):
-        any_all = any_all | F.col(f"_ba{bi}")
-        any_keep = any_keep | F.col(f"_bk{bi}")
-    s_col = F.col("sum_int") if int_sum else F.col("sum_num")
-    has_sum = s_col.isNotNull() | (F.col("_nn") == 0)
-    meta_ok = any_all & has_sum
-    agg = joined.agg(
-        F.sum(F.when(meta_ok, s_col)).alias("s"),
-        F.sum(F.when(meta_ok & (F.col("_nn") > 0), F.col("_nn"))).alias("nn"),
-        F.sum(F.when(meta_ok, 1).otherwise(0)).alias("n_all"),
-        F.sum(F.when(any_keep & ~meta_ok, 1).otherwise(0)).alias("n_mixed"),
-    ).first()
-    meta_sum = agg.s
-    meta_nn = int(agg.nn or 0)
-    n_mixed = int(agg.n_mixed or 0)
-    dec_sum = None
-    dec_cnt = 0
-    if n_mixed:
-        mixed = joined.filter(any_keep & ~meta_ok).select(*gkeys)
-        only: object = mixed
-        if n_mixed <= zonemap._PUSHDOWN_MAX_GROUPS:
-            only = [
-                (r.partition_id, r.epoch, r.stripe_idx)
-                for r in mixed.collect()
-            ]
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, pcols, None, only
-        ).filter(zonemap.predicate_dnf_expr(branches))
-        row = dec.agg(
-            F.sum(column).alias("s"), F.count(column).alias("c")
-        ).first()
-        dec_sum = row.s
-        dec_cnt = int(row.c or 0)
-    parts = [x for x in (meta_sum, dec_sum) if x is not None]
-    total = sum(parts) if (meta_nn + dec_cnt) > 0 else None
-    return total, {
-        "n_all": int(agg.n_all or 0),
-        "n_mixed": n_mixed,
-        "from_metadata": meta_sum,
-    }
+    return total, {"n_all": n_all, "n_mixed": n_decode, "from_metadata": meta_sum}
 
 
 def metadata_minmax_dnf(
@@ -2732,147 +2483,62 @@ def metadata_minmax_dnf(
     Returns (min, max, {"n_all", "n_mixed", "from_metadata"}).
     """
     from pyspark.sql.types import (
-        ByteType, DateType, DoubleType, FloatType, IntegerType,
-        LongType, ShortType, StringType, TimestampNTZType, TimestampType,
+        DateType, DoubleType, FloatType, StringType, TimestampNTZType,
+        TimestampType,
     )
 
-    if not branches or not all(branches):
-        raise ValueError("DNF minmax needs >= 1 non-empty branch")
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — zone stats "
-            "describe the encoded rows; compact the run first"
-        )
+    branches = _dnf_branches(branches, "minmax")
     leaf = _nested_field_type(result_schema, column)
     if isinstance(leaf, StringType):
         fam = "str"
-        rebuild = lambda c: c  # noqa: E731
-    elif isinstance(leaf, (ByteType, ShortType, IntegerType, LongType)):
+    elif _is_integral(leaf) or isinstance(
+        leaf, (TimestampType, TimestampNTZType, DateType)
+    ):
         fam = "int"
-        rebuild = lambda c: c.cast(leaf)  # noqa: E731
-    elif isinstance(leaf, TimestampType):
-        fam = "int"
-        rebuild = F.timestamp_micros
-    elif isinstance(leaf, TimestampNTZType):
-        # NTZ rebuilds DRIVER-side, tz-free (epoch-us of the naive
-        # value back to a naive datetime — no session-timezone cast,
-        # the same concern that keeps NTZ out of group purity)
-        fam = "int"
-        rebuild = "ntz"
-    elif isinstance(leaf, DateType):
-        fam = "int"
-        rebuild = lambda c: F.date_from_unix_date(c.cast("int"))  # noqa: E731
     elif isinstance(leaf, (FloatType, DoubleType)):
         fam = "num"
-        rebuild = lambda c: c  # noqa: E731
     else:
         raise ValueError(
             f"column {column!r} is {leaf} — MIN/MAX pushdown covers "
             "int/float/string/timestamp/date leaves"
         )
-    pcols = sorted({c for br in branches for c, _, _ in br} | {column})
-    stripes = read_stripes(spark, out_dir, run_id)
-    want_tops = {c.partition(".")[0] for c in pcols}
-    meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data").filter(
-        F.col("column").isin(pcols)
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, branches, {"t": column},
+        what="zone stats",
     )
-    present = {
-        r.column for r in meta.select("column").distinct().collect()
-    }
-    missing = sorted(set(pcols) - present)
-    if missing:
-        raise ValueError(
-            f"no stats rows for column(s) {missing} in run {run_id!r} "
-            "— decode-and-aggregate instead"
-        )
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    joined = None
-    for bi, br in enumerate(branches):
-        cls_b = _classify_pred_groups(
-            meta, br, gkeys, pins=_temporal_pins(result_schema, br)
-        ).select(
-            *gkeys,
-            (F.col("_keep") & F.col("_all")).alias(f"_ba{bi}"),
-            F.col("_keep").alias(f"_bk{bi}"),
-        )
-        joined = cls_b if joined is None else joined.join(cls_b, gkeys)
-    tgt = meta.filter(F.col("column") == column).select(
-        *gkeys,
-        F.col(f"min_{fam}").alias("_mn"),
-        F.col(f"max_{fam}").alias("_mx"),
-        F.coalesce("stat_exact", F.lit(True)).alias("_ex"),
-        (F.col("n_rows") - F.coalesce("null_count", F.lit(0))).alias("_nn"),
+    kept = plan.groups.filter(plan.groups["keep"])
+    lo, hi = kept[f"t_min_{fam}"], kept[f"t_max_{fam}"]
+    empty = pc.fill_null(pc.equal(kept["t_nn"], 0), False)
+    bounded = pc.and_(
+        pc.and_(pc.is_valid(lo), pc.is_valid(hi)),
+        pc.fill_null(kept["t_stat_exact"], True),
     )
-    joined = joined.join(tgt, gkeys, "left")
-    any_all = F.lit(False)
-    any_keep = F.lit(False)
-    for bi in range(len(branches)):
-        any_all = any_all | F.col(f"_ba{bi}")
-        any_keep = any_keep | F.col(f"_bk{bi}")
-    has_stat = (
-        F.col("_mn").isNotNull() & F.col("_mx").isNotNull() & F.col("_ex")
-    ) | (F.col("_nn") == 0)
-    meta_ok = any_all & has_stat
-    agg = joined.agg(
-        F.min(F.when(meta_ok, F.col("_mn"))).alias("mn"),
-        F.max(F.when(meta_ok, F.col("_mx"))).alias("mx"),
-        F.sum(F.when(meta_ok & (F.col("_nn") > 0), F.col("_nn"))).alias("nn"),
-        F.sum(F.when(meta_ok, 1).otherwise(0)).alias("n_all"),
-        F.sum(F.when(any_keep & ~meta_ok, 1).otherwise(0)).alias("n_mixed"),
-    ).first()
-    n_mixed = int(agg.n_mixed or 0)
-    dec_mn = dec_mx = None
-    dec_cnt = 0
-    if n_mixed:
-        mixed = joined.filter(any_keep & ~meta_ok).select(*gkeys)
-        only: object = mixed
-        if n_mixed <= zonemap._PUSHDOWN_MAX_GROUPS:
-            only = [
-                (r.partition_id, r.epoch, r.stripe_idx)
-                for r in mixed.collect()
-            ]
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, pcols, None, only
-        ).filter(zonemap.predicate_dnf_expr(branches))
-        row = dec.agg(
-            F.min(column).alias("mn"), F.max(column).alias("mx"),
-            F.count(column).alias("c"),
-        ).first()
-        dec_mn, dec_mx, dec_cnt = row.mn, row.mx, int(row.c or 0)
-    # fold halves: metadata bounds rebuild through the leaf type
-    have_meta = int(agg.nn or 0) > 0
-    mrow = None
-    if have_meta and rebuild == "ntz":
-        import datetime as _dt
-
-        _epoch = _dt.datetime(1970, 1, 1)
-
-        class _R:  # tiny holder matching the Row access below
-            a = _epoch + _dt.timedelta(microseconds=int(agg.mn))
-            b = _epoch + _dt.timedelta(microseconds=int(agg.mx))
-
-        mrow = _R
-    elif have_meta:
-        mrow = spark.createDataFrame(
-            [(agg.mn, agg.mx)], "a " + ("string" if fam == "str" else
-                                        "long" if fam == "int" else
-                                        "double") + ", b " +
-            ("string" if fam == "str" else
-             "long" if fam == "int" else "double"),
-        ).select(rebuild(F.col("a")).alias("a"),
-                 rebuild(F.col("b")).alias("b")).first()
-    cands_mn = [x for x in ((mrow.a if mrow else None), dec_mn)
-                if x is not None]
-    cands_mx = [x for x in ((mrow.b if mrow else None), dec_mx)
-                if x is not None]
-    total_mn = min(cands_mn) if cands_mn else None
-    total_mx = max(cands_mx) if cands_mx else None
-    return total_mn, total_mx, {
-        "n_all": int(agg.n_all or 0),
-        "n_mixed": n_mixed,
-        "from_metadata": have_meta,
+    ok = pc.and_(kept["all"], pc.or_(bounded, empty))
+    proven = kept.filter(pc.and_(ok, pc.invert(empty)))
+    rest = kept.filter(pc.invert(ok))
+    mins, maxs = [], []
+    if proven.num_rows:
+        # the leaf type rebuilds a bound as Spark would collect it
+        # (epoch-us/days to datetime/date; tz-free for NTZ)
+        mins.append(leaf.fromInternal(pc.min(proven[f"t_min_{fam}"]).as_py()))
+        maxs.append(leaf.fromInternal(pc.max(proven[f"t_max_{fam}"]).as_py()))
+    if rest.num_rows:
+        pcols = sorted({c for br in branches for c, _, _ in br} | {column})
+        row = _decode_matching(
+            spark, plan, result_schema, pcols, _keys(rest), branches
+        ).agg(F.min(column).alias("mn"), F.max(column).alias("mx")).first()
+        mins += [row.mn] if row.mn is not None else []
+        maxs += [row.mx] if row.mx is not None else []
+    return (min(mins) if mins else None), (max(maxs) if maxs else None), {
+        "n_all": kept.num_rows - rest.num_rows,
+        "n_mixed": rest.num_rows,
+        "from_metadata": proven.num_rows > 0,
     }
+
+
+def _moment_sums(groups):
+    """Each group's target sum as a double (int sums widened)."""
+    return pc.coalesce(groups["t_sum_num"], pc.cast(groups["t_sum_int"], pa.float64()))
 
 
 def metadata_stddev(
@@ -2899,170 +2565,56 @@ def metadata_stddev(
     (SQL semantics). Only genuine numeric leaves qualify; other types
     raise. Live deletes raise.
 
-    Scale shape: two aggregates over the blob-free metadata table (the
-    second needs the global mean from the first) plus the shared
-    restricted boundary decode — at 10^12 rows a metadata-scale job,
-    never a data scan.
+    Scale shape: the planner's classification (:func:`_plan`) plus a
+    numpy fold of one component per ALL group on the driver, and one
+    Spark aggregate over the restricted boundary decode when there is
+    one — at 10^12 rows a metadata-scale answer, never a data scan.
 
     Returns dict(count, avg, var_pop, var_samp, stddev_pop,
     stddev_samp, detail); the variance keys are None when count < 1
     (< 2 for the sample forms), matching SQL.
     """
-    from pyspark.sql.types import (
-        ByteType, DoubleType, FloatType, IntegerType, LongType,
-        ShortType,
-    )
+    from pyspark.sql.types import DoubleType, FloatType
 
     leaf = _nested_field_type(result_schema, column)
-    if not isinstance(
-        leaf, (ByteType, ShortType, IntegerType, LongType,
-               FloatType, DoubleType)
-    ):
+    if not (_is_integral(leaf) or isinstance(leaf, (FloatType, DoubleType))):
         raise ValueError(
             f"column {column!r} is {leaf} — VAR/STDDEV needs a numeric "
             "leaf (int or float)"
         )
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — zone-stat moments "
-            "describe the encoded rows; compact the run first"
-        )
     predicate = predicate or []
-    pcols = sorted({c for c, _, _ in predicate})
-    need = sorted(set(pcols) | {column})
-    pins = _temporal_pins(result_schema, predicate)
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    # components: list of (n, sum, m2) driver-side — ONE per metadata
-    # fold half + one for the decode residue (never per stripe)
-    fast = _driver_classify(out_dir, run_id, predicate, pins, target=column)
-    comp_meta: list[tuple[int, float, float]] = []
-    if fast is not None:
-        n_meta = n_decode = 0
-        only = []
-        for g in fast[2].filter(fast[2]["keep"]).to_pylist():
-            s = g["sum_int"] if g["sum_int"] is not None else g["sum_num"]
-            ok = (s is not None and g["m2"] is not None) or g["nn"] == 0
-            if g["all"] and ok:
-                n_meta += 1
-                if g["nn"]:
-                    comp_meta.append(
-                        (int(g["nn"]), float(s), float(g["m2"]))
-                    )
-            else:
-                only.append((g["partition_id"], g["epoch"], g["stripe_idx"]))
-        n_decode = len(only)
-        j = meta_ok = None
-    else:
-        stripes = _key_restricted_stripes(
-            spark, out_dir, run_id, result_schema, predicate
-        )
-        want_tops = {c.partition(".")[0] for c in need}
-        meta = _epoch_keep_filter(
-            spark, stripes, want_tops
-        ).drop("data").filter(F.col("column").isin(need))
-        if predicate:
-            cls = _classify_pred_groups(meta, predicate, gkeys, pins=pins)
-        else:
-            cls = (
-                meta.groupBy(*gkeys)
-                .agg(F.max("n_rows").alias("n_rows"))
-                .select(
-                    *gkeys, "n_rows",
-                    F.lit(True).alias("_keep"), F.lit(True).alias("_all"),
-                )
-            )
-        tgt = meta.filter(F.col("column") == column).select(
-            *gkeys,
-            F.coalesce(
-                F.col("sum_num"), F.col("sum_int").cast("double")
-            ).alias("_s"),
-            F.col("m2"),
-            (F.col("n_rows") - F.coalesce("null_count", F.lit(0))).alias("_nn"),
-        )
-        j = cls.join(tgt, gkeys, "left")
-        stats_ok = (
-            (F.col("_s").isNotNull() & F.col("m2").isNotNull())
-            | F.coalesce(F.col("_nn") == 0, F.lit(False))
-        )
-        meta_ok = F.col("_keep") & F.col("_all") & stats_ok
-        agg = j.agg(
-            F.sum(F.when(meta_ok, F.col("_s"))).alias("s"),
-            F.sum(F.when(meta_ok, F.col("_nn"))).alias("nn"),
-            F.sum(F.when(meta_ok, 1).otherwise(0)).alias("n_meta"),
-            F.sum(
-                F.when(F.col("_keep") & ~meta_ok, 1).otherwise(0)
-            ).alias("n_decode"),
-            F.count(F.col("_nn")).alias("_tp"),
-            *_presence_aggs(predicate),
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, [predicate], {"t": column},
+        what="zone-stat moments",
+    )
+    kept = plan.groups.filter(plan.groups["keep"])
+    kept = kept.append_column("_s", _moment_sums(kept))
+    empty = pc.fill_null(pc.equal(kept["t_nn"], 0), False)
+    ok = pc.and_(
+        kept["all"],
+        pc.or_(pc.and_(pc.is_valid(kept["_s"]), pc.is_valid(kept["t_m2"])), empty),
+    )
+    comp = kept.filter(pc.and_(ok, pc.invert(empty)))
+    n, s, m2 = (
+        comp[c].to_numpy().astype(np.float64) for c in ("t_nn", "_s", "t_m2")
+    )
+    rest = kept.filter(pc.invert(ok))
+    if rest.num_rows:
+        need = sorted({c for c, _, _ in predicate} | {column})
+        x = F.col(column).cast("double")
+        row = _decode_matching(
+            spark, plan, result_schema, need, _keys(rest), [predicate]
+        ).agg(
+            F.count(x).alias("c"), F.sum(x).alias("s"), F.var_pop(x).alias("v")
         ).first()
-        _raise_missing(agg, predicate, run_id)
-        if int(agg._tp or 0) == 0:
-            raise ValueError(
-                f"no stats rows for column(s) [{column!r}] in run "
-                f"{run_id!r} — decode-and-aggregate instead"
+        if int(row.c):  # the decode residue is ONE component
+            n, s, m2 = (
+                np.append(n, row.c), np.append(s, row.s),
+                np.append(m2, float(row.v or 0.0) * row.c),
             )
-        n_meta = int(agg.n_meta or 0)
-        n_decode = int(agg.n_decode or 0)
-        only = None
-    # decode residue as ONE component
-    comp_dec: tuple[int, float, float] | None = None
-    if n_decode:
-        if only is None:
-            mixed = j.filter(F.col("_keep") & ~meta_ok).select(*gkeys)
-            if n_decode <= zonemap._PUSHDOWN_MAX_GROUPS:
-                only = [
-                    (r.partition_id, r.epoch, r.stripe_idx)
-                    for r in mixed.collect()
-                ]
-            else:
-                only = mixed
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, need, predicate, only
-        )
-        if predicate:
-            dec = dec.filter(zonemap.predicate_expr(predicate))
-        row = dec.agg(
-            F.count(column).alias("c"),
-            F.sum(F.col(column).cast("double")).alias("s"),
-            F.var_pop(F.col(column).cast("double")).alias("v"),
-        ).first()
-        if int(row.c):
-            comp_dec = (
-                int(row.c), float(row.s), float(row.v or 0.0) * int(row.c)
-            )
-    # --- Chan merge across components ---------------------------------
-    if fast is not None:
-        comps = comp_meta + ([comp_dec] if comp_dec else [])
-        total_n = sum(c[0] for c in comps)
-        total_s = sum(c[1] for c in comps)
-        mean = (total_s / total_n) if total_n else None
-        m2_total = (
-            sum(c[2] + c[0] * (c[1] / c[0] - mean) ** 2 for c in comps)
-            if total_n else None
-        )
-    else:
-        nn_meta = int(agg.nn or 0)
-        s_meta = float(agg.s) if agg.s is not None else 0.0
-        total_n = nn_meta + (comp_dec[0] if comp_dec else 0)
-        total_s = s_meta + (comp_dec[1] if comp_dec else 0.0)
-        mean = (total_s / total_n) if total_n else None
-        m2_total = None
-        if total_n:
-            # second metadata action: the correction term needs the
-            # global mean — still a blob-free metadata-table aggregate
-            corr = j.filter(meta_ok & (F.col("_nn") > 0)).agg(
-                F.sum("m2").alias("m2s"),
-                F.sum(
-                    F.col("_nn")
-                    * F.pow(F.col("_s") / F.col("_nn") - F.lit(mean), 2)
-                ).alias("adj"),
-            ).first()
-            m2_total = float(corr.m2s or 0.0) + float(corr.adj or 0.0)
-            if comp_dec:
-                c, s, m2 = comp_dec
-                m2_total += m2 + c * (s / c - mean) ** 2
-    detail = {"n_all": n_meta, "n_mixed": n_decode}
+    total_n = int(n.sum())
+    mean = float(s.sum()) / total_n if total_n else None
+    m2_total = float((m2 + n * (s / n - mean) ** 2).sum()) if total_n else None
     var_pop = (m2_total / total_n) if total_n else None
     var_samp = (m2_total / (total_n - 1)) if total_n > 1 else None
     return {
@@ -3074,61 +2626,68 @@ def metadata_stddev(
         "stddev_samp": (
             math.sqrt(var_samp) if var_samp is not None else None
         ),
-        "detail": detail,
+        "detail": {"n_all": kept.num_rows - rest.num_rows, "n_mixed": rest.num_rows},
     }
 
 
-def _group_purity_view(meta, result_schema, group_col: str, gkeys):
-    """(gview, leaf_type): per-stripe group-column purity + the single
-    typed group value, from the zone stats. A stripe is PURE when the
-    group column is single-valued (zone min == max), null-free, and
-    its stats are exact. The LEAF type drives the stat family even for
-    dotted keys (nested stats rows ride the parent's stripes under the
-    dotted name); unresolvable paths / float / decimal / nested-
-    container keys fall through to pure=False — their stripes decode,
-    exact either way. TimestampNTZType is deliberately excluded:
-    rebuilding an NTZ key from epoch-us goes through a session-
-    timezone-sensitive cast, so NTZ keys classify impure and decode."""
-    from pyspark.sql.types import (
-        BooleanType, ByteType, DateType, IntegerType, LongType,
-        ShortType, StringType, TimestampType,
+# ------------------------------------------- the grouped aggregates
+
+def _key_family(ltype) -> str | None:
+    """The stat family that holds a value of leaf type ``ltype``
+    exactly: min_str for strings, min_int for integral, boolean,
+    timestamp and date values. TimestampNTZType is deliberately
+    excluded: rebuilding an NTZ value from epoch-us goes through a
+    session-timezone-sensitive cast, so NTZ keys classify impure and
+    decode; floats, decimals and nested containers decode too."""
+    from pyspark.sql.types import BooleanType, DateType, StringType, TimestampType
+
+    if isinstance(ltype, StringType):
+        return "str"
+    if _is_integral(ltype) or isinstance(ltype, (BooleanType, TimestampType, DateType)):
+        return "int"
+    return None
+
+
+def _leaf_value(src, ltype):
+    """The ``ltype`` value of an int/num/str stat column."""
+    from pyspark.sql.types import BooleanType, DateType, StringType, TimestampType
+
+    if isinstance(ltype, TimestampType):
+        return F.timestamp_micros(src)
+    if isinstance(ltype, DateType):
+        return F.date_from_unix_date(src.cast("int"))
+    if isinstance(ltype, BooleanType):
+        return src == 1
+    if isinstance(ltype, StringType):
+        return src
+    return src.cast(ltype)
+
+
+def _pure_groups(groups, gtype):
+    """Groups PURE in the group key (planner role ``g``): the key is
+    single-valued (zone min == max), null-free and its stats exact, so
+    every row of the group carries that one key. The LEAF type picks
+    the stat family even for dotted keys (nested stats rows ride the
+    parent's stripes under the dotted name)."""
+    fam = _key_family(gtype)
+    if fam is None:
+        return pa.array(np.zeros(groups.num_rows, dtype=bool))
+    return pc.and_(
+        pc.and_(
+            pc.fill_null(pc.equal(groups[f"g_min_{fam}"], groups[f"g_max_{fam}"]), False),
+            pc.fill_null(pc.equal(groups["g_null_count"], 0), False),
+        ),
+        pc.fill_null(groups["g_stat_exact"], True),
     )
 
-    gtype = _nested_field_type(result_schema, group_col)
-    ghit = meta.filter(F.col("column") == group_col)
-    if isinstance(gtype, StringType):
-        pure = F.col("min_str").isNotNull() & (
-            F.col("min_str") == F.col("max_str")
-        )
-        gval = F.col("min_str")
-    elif isinstance(
-        gtype, (ByteType, ShortType, IntegerType, LongType, BooleanType,
-                TimestampType, DateType)
-    ):
-        pure = F.col("min_int").isNotNull() & (
-            F.col("min_int") == F.col("max_int")
-        )
-        if isinstance(gtype, TimestampType):
-            gval = F.timestamp_micros(F.col("min_int"))
-        elif isinstance(gtype, DateType):
-            gval = F.date_from_unix_date(F.col("min_int").cast("int"))
-        elif isinstance(gtype, BooleanType):
-            gval = F.col("min_int") == 1
-        else:
-            gval = F.col("min_int").cast(gtype)
-    else:
-        pure = F.lit(False)
-        gval = F.lit(None).cast(gtype) if gtype is not None else F.lit(None)
-    gview = ghit.select(
-        *gkeys,
-        (
-            pure
-            & (F.coalesce("null_count", F.lit(1)) == 0)
-            & F.coalesce("stat_exact", F.lit(True))
-        ).alias("_pure"),
-        gval.alias("_gval"),
-    )
-    return gview, gtype
+
+def _group_value(gtype):
+    """A pure group's typed key, as a Column over the plan's ``g_``
+    stats — the same Spark type the decode half's key has."""
+    fam = _key_family(gtype)
+    if fam is None:
+        return F.lit(None).cast(gtype) if gtype is not None else F.lit(None)
+    return _leaf_value(F.col(f"g_min_{fam}"), gtype)
 
 
 def metadata_group_aggregate(
@@ -3158,212 +2717,97 @@ def metadata_group_aggregate(
     way, never estimated.
 
     On a group-clustered layout (cluster_by=group_col) nearly every
-    stripe is single-valued in the key, so the whole GROUP BY costs a
-    metadata aggregation plus the run-boundary stripes where two
-    groups meet inside one stripe; impure / predicate-MIXED /
-    sum-less stripes decode through the restricted predicated path
-    and re-aggregate row-level — exact by construction, never
-    estimated. Group keys come back typed via the stat family
-    (string/min_str, integral & temporal/min_int, float/min_num) so
-    metadata rows and decoded rows merge in one final groupBy. Live
-    deletes raise (stats describe encoded rows).
+    stripe is single-valued in the key, so the whole GROUP BY costs
+    the planner's classification plus the run-boundary stripes where
+    two groups meet inside one stripe; impure / predicate-MIXED /
+    sum-less stripes decode through the shared tail and re-aggregate
+    row-level. Group keys come back typed via the stat family
+    (string/min_str, integral & temporal/min_int) so metadata rows
+    (a DataFrame over the plan) and decoded rows merge in one final
+    groupBy. Live deletes raise (stats describe encoded rows).
 
     Returns a DataFrame (group_col, cnt, [<agg>_<agg_col>]) — cnt is
     COUNT(*) of the group's predicate-matching rows.
     """
-    from pyspark.sql.types import (
-        BooleanType, ByteType, DateType, DoubleType, FloatType,
-        IntegerType, LongType, ShortType, StringType, TimestampType,
-    )
+    from pyspark.sql.types import DoubleType, FloatType
 
     if agg not in ("sum", "min", "max"):
         raise ValueError(f"agg must be 'sum', 'min' or 'max', got {agg!r}")
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — zone-stat group "
-            "aggregates describe the encoded rows; compact the run first"
-        )
-    predicate = predicate or []
-    pcols = sorted({c for c, _, _ in predicate})
-    need = sorted(set(pcols) | {group_col} | ({agg_col} if agg_col else set()))
-    by_name = {f.name: f for f in result_schema.fields}
-    gf = by_name.get(group_col.partition(".")[0])
-    if gf is None:
+    if group_col.partition(".")[0] not in {f.name for f in result_schema.fields}:
         raise ValueError(f"group column {group_col!r} not in result_schema")
-    stripes = read_stripes(spark, out_dir, run_id)
-    want_tops = {c.partition(".")[0] for c in need}
-    meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data").filter(
-        F.col("column").isin(need)
-    )
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    if predicate:
-        cls = _classify_pred_groups(
-            meta, predicate, gkeys,
-            pins=_temporal_pins(result_schema, predicate),
-        )
-    else:
-        cls = (
-            meta.groupBy(*gkeys)
-            .agg(F.max("n_rows").alias("n_rows"))
-            .select(
-                *gkeys, "n_rows",
-                F.lit(True).alias("_keep"), F.lit(True).alias("_all"),
-            )
-        )
-    gview, gtype = _group_purity_view(meta, result_schema, group_col, gkeys)
-    j = cls.join(gview, gkeys, "left")
-    j = j.withColumn("_pure", F.coalesce("_pure", F.lit(False)))
-    int_agg = False
+    atype = None
     if agg_col:
         # classify by the LEAF type — a dotted agg_col's top-level
         # field is a StructType, which would misroute an integer leaf
-        # onto the float family (sum_num is null for int leaves:
-        # pushdown dead, decode sums in double, exactness lost)
+        # onto the float family
         atype = _nested_field_type(result_schema, agg_col)
         if atype is None:
             raise ValueError(f"agg column {agg_col!r} not in result_schema")
-        int_agg = isinstance(
-            atype, (ByteType, ShortType, IntegerType, LongType)
-        )
+    predicate = predicate or []
+    targets = {"g": group_col, **({"t": agg_col} if agg_col else {})}
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, [predicate], targets,
+        lenient=("g", "t"), what="zone-stat group aggregates",
+    )
+    gtype = _nested_field_type(result_schema, group_col)
+    kept = plan.groups.filter(plan.groups["keep"])
+    ok = pc.and_(kept["all"], _pure_groups(kept, gtype))
+    int_agg = _is_integral(atype)
+    fam = None
+    if agg_col:
         if agg == "sum":
-            tgt = meta.filter(F.col("column") == agg_col).select(
-                *gkeys, "sum_int", "sum_num",
-                # an all-null agg stripe has no recorded sum but
-                # contributes its rows to cnt with a null summand
-                # (SQL SUM skips nulls) — no decode needed
-                (
-                    F.coalesce("null_count", F.lit(0)) == F.col("n_rows")
-                ).alias("_aallnull"),
-            )
-            j = j.join(tgt, gkeys, "left")
             # the agg column's type picks the stat family — int sums
-            # stay exact int64 end-to-end, float sums stay double
-            has_sum = (
-                F.col("sum_int").isNotNull()
-                if int_agg
-                else F.col("sum_num").isNotNull()
-            ) | F.coalesce("_aallnull", F.lit(False))
+            # stay exact end-to-end, float sums stay double
+            has = pc.is_valid(kept["t_sum_int" if int_agg else "t_sum_num"])
         else:
-            # MIN/MAX: zone bounds ARE the contribution. Family +
-            # leaf-type rebuild mirror the group-key logic above;
-            # TimestampNTZType is excluded for the same tz-cast
-            # reason, decimals for their widened (inexact) bounds.
-            if isinstance(
-                atype, (ByteType, ShortType, IntegerType, LongType,
-                        BooleanType, TimestampType, DateType)
-            ):
-                fam = "int"
-            elif isinstance(atype, (FloatType, DoubleType)):
-                fam = "num"
-            elif isinstance(atype, StringType):
-                fam = "str"
-            else:
-                fam = None
-            if fam is not None:
-                tgt = meta.filter(F.col("column") == agg_col).select(
-                    *gkeys,
-                    F.col(f"min_{fam}").alias("_amin"),
-                    F.col(f"max_{fam}").alias("_amax"),
-                    F.coalesce("stat_exact", F.lit(True)).alias("_aexact"),
-                    # an all-null agg stripe has no bounds but still
-                    # contributes its rows to cnt; MIN/MAX over it is
-                    # SQL-null, exactly what the fold produces
-                    (
-                        F.coalesce("null_count", F.lit(0))
-                        == F.col("n_rows")
-                    ).alias("_aallnull"),
-                )
-                j = j.join(tgt, gkeys, "left")
-                has_sum = (
-                    F.col("_amin").isNotNull()
-                    & F.col("_amax").isNotNull()
-                    & F.col("_aexact")
-                ) | F.coalesce("_aallnull", F.lit(False))
-            else:
-                has_sum = F.lit(False)  # decode everything: exact
-                # typed null placeholders keep the (never-matching)
-                # metadata fold analyzable
-                j = (
-                    j.withColumn("_amin", F.lit(None))
-                    .withColumn("_amax", F.lit(None))
-                )
-    else:
-        has_sum = F.lit(True)
-
-    def _mm_leaf(src):
-        """Rebuild the leaf-typed value from its int/num/str stat."""
-        if isinstance(atype, TimestampType):
-            return F.timestamp_micros(src)
-        if isinstance(atype, DateType):
-            return F.date_from_unix_date(src.cast("int"))
-        if isinstance(atype, BooleanType):
-            return src == 1
-        if isinstance(atype, StringType):
-            return src
-        return src.cast(atype)
-    meta_ok = F.col("_keep") & F.col("_all") & F.col("_pure") & has_sum
-    # metadata contribution: one (group, cnt[, sum]) row per pure
+            # MIN/MAX: zone bounds ARE the contribution; decimals
+            # (widened bounds) and NTZ (tz-cast rebuild) decode
+            fam = _key_family(atype) or (
+                "num" if isinstance(atype, (FloatType, DoubleType)) else None
+            )
+            has = pa.array(np.zeros(kept.num_rows, dtype=bool)) if fam is None else pc.and_(
+                pc.and_(pc.is_valid(kept[f"t_min_{fam}"]), pc.is_valid(kept[f"t_max_{fam}"])),
+                pc.fill_null(kept["t_stat_exact"], True),
+            )
+        # an all-null agg stripe contributes its rows to cnt with a
+        # null value (SQL SUM/MIN/MAX skip nulls) — no decode needed
+        ok = pc.and_(ok, pc.or_(has, pc.fill_null(pc.equal(kept["t_nn"], 0), False)))
+    # metadata contribution: one (group, cnt[, agg]) row per pure
     # stripe. Int sums accumulate in decimal(38,0): per-stripe sums
     # are int64-bounded by the encode guard but the per-GROUP total is
     # not, and a plain long SUM would wrap silently. Grouping rides an
     # internal key name (_gkey) so dotted group columns never hit
     # Spark's unresolvable-literal-dotted-name groupBy.
     maggs = [F.sum("n_rows").alias("cnt")]
-    if agg_col:
-        if agg == "sum":
-            maggs.append(
-                F.sum(
-                    F.col("sum_int").cast("decimal(38,0)")
-                    if int_agg else F.col("sum_num")
-                ).alias("_msum")
-            )
-        else:
-            mfold = F.min if agg == "min" else F.max
-            msrc = F.col("_amin" if agg == "min" else "_amax")
-            maggs.append(mfold(_mm_leaf(msrc)).alias("_msum"))
-    meta_part = (
-        j.filter(meta_ok).groupBy("_gval").agg(*maggs)
-        .withColumnRenamed("_gval", "_gkey")
-    )
-    decode_groups = j.filter(F.col("_keep") & ~meta_ok).select(*gkeys)
-    # ONE metadata action: the decode-set size + the loud
-    # missing-column check for predicate columns. A stat-less group
-    # or agg column merely classifies its stripes impure/sum-less —
-    # they decode and the result stays exact.
-    chk = j.agg(
-        F.sum(F.when(F.col("_keep") & ~meta_ok, 1).otherwise(0)).alias("_nd"),
-        *_presence_aggs(predicate),
-    ).first()
-    _raise_missing(chk, predicate, run_id)
-    n_decode = int(chk._nd or 0)
-    dec_part = None
-    if n_decode:
-        if n_decode <= zonemap._PUSHDOWN_MAX_GROUPS:
-            only = [
-                (r.partition_id, r.epoch, r.stripe_idx)
-                for r in decode_groups.collect()
-            ]
-        else:
-            only = decode_groups
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, need, predicate, only
+    if agg_col and agg == "sum":
+        maggs.append(
+            F.sum(
+                F.col("t_sum_int").cast("decimal(38,0)") if int_agg else F.col("t_sum_num")
+            ).alias("_msum")
         )
-        if predicate:
-            dec = dec.filter(zonemap.predicate_expr(predicate))
+    elif agg_col:
+        mval = (
+            _leaf_value(F.col(f"t_{agg}_{fam}"), atype) if fam else F.lit(None).cast(atype)
+        )
+        maggs.append((F.min if agg == "min" else F.max)(mval).alias("_msum"))
+    both = (
+        spark.createDataFrame(kept.filter(ok))
+        .groupBy(_group_value(gtype).alias("_gkey")).agg(*maggs)
+    )
+    rest = kept.filter(pc.invert(ok))
+    if rest.num_rows:
+        need = sorted({c for c, _, _ in predicate} | set(targets.values()))
+        dec = _decode_matching(
+            spark, plan, result_schema, need, _keys(rest), [predicate]
+        )
         daggs = [F.count(F.lit(1)).alias("cnt")]
-        if agg_col:
-            if agg == "sum":
-                dval = F.sum(
-                    F.col(agg_col).cast(
-                        "decimal(38,0)" if int_agg else "double"
-                    )
-                )
-            else:
-                dval = (F.min if agg == "min" else F.max)(F.col(agg_col))
-            daggs.append(dval.alias("_msum"))
-        dec_part = dec.groupBy(F.col(group_col).alias("_gkey")).agg(*daggs)
-    both = meta_part if dec_part is None else meta_part.unionByName(dec_part)
+        if agg_col and agg == "sum":
+            daggs.append(
+                F.sum(F.col(agg_col).cast("decimal(38,0)" if int_agg else "double")).alias("_msum")
+            )
+        elif agg_col:
+            daggs.append((F.min if agg == "min" else F.max)(F.col(agg_col)).alias("_msum"))
+        both = both.unionByName(dec.groupBy(F.col(group_col).alias("_gkey")).agg(*daggs))
     faggs = [F.sum("cnt").alias("cnt")]
     if agg_col:
         if agg == "sum":
@@ -3401,7 +2845,7 @@ def metadata_group_stddev(
     Each pure + predicate-ALL stripe with exact sum AND moment stats
     contributes one Chan component (nᵢ, sumᵢ, m2ᵢ) tagged with its
     single group key; impure / MIXED / stat-less stripes decode
-    through the restricted path and contribute row-level components
+    through the shared tail and contribute row-level components
     per group. The merge is the same two-pass parallel-variance
     algebra as metadata_stddev, but DISTRIBUTED per group: totals →
     per-group mean, then M2 = Σm2ᵢ + Σnᵢ(μᵢ−μ)² — associative and
@@ -3420,103 +2864,47 @@ def metadata_group_stddev(
 
     Returns (group_col, n_vals, avg, var_pop, var_samp).
     """
-    from pyspark.sql.types import (
-        ByteType, DoubleType, FloatType, IntegerType, LongType,
-        ShortType,
-    )
+    from pyspark.sql.types import DoubleType, FloatType
 
     leaf = _nested_field_type(result_schema, agg_col)
-    if not isinstance(
-        leaf, (ByteType, ShortType, IntegerType, LongType,
-               FloatType, DoubleType)
-    ):
+    if not (_is_integral(leaf) or isinstance(leaf, (FloatType, DoubleType))):
         raise ValueError(
             f"column {agg_col!r} is {leaf} — VAR/STDDEV needs a numeric "
             "leaf (int or float)"
         )
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — zone-stat moments "
-            "describe the encoded rows; compact the run first"
-        )
     predicate = predicate or []
-    pcols = sorted({c for c, _, _ in predicate})
-    need = sorted(set(pcols) | {group_col, agg_col})
-    stripes = read_stripes(spark, out_dir, run_id)
-    want_tops = {c.partition(".")[0] for c in need}
-    meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data").filter(
-        F.col("column").isin(need)
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, [predicate],
+        {"g": group_col, "t": agg_col}, lenient=("g",),
+        what="zone-stat moments",
     )
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    if predicate:
-        cls = _classify_pred_groups(
-            meta, predicate, gkeys,
-            pins=_temporal_pins(result_schema, predicate),
-        )
-    else:
-        cls = (
-            meta.groupBy(*gkeys)
-            .agg(F.max("n_rows").alias("n_rows"))
-            .select(
-                *gkeys, "n_rows",
-                F.lit(True).alias("_keep"), F.lit(True).alias("_all"),
-            )
-        )
-    gview, gtype = _group_purity_view(meta, result_schema, group_col, gkeys)
-    tgt = meta.filter(F.col("column") == agg_col).select(
-        *gkeys,
-        F.coalesce(
-            F.col("sum_num"), F.col("sum_int").cast("double")
-        ).alias("_s"),
-        F.col("m2"),
-        (F.col("n_rows") - F.coalesce("null_count", F.lit(0))).alias("_nn"),
+    gtype = _nested_field_type(result_schema, group_col)
+    kept = plan.groups.filter(plan.groups["keep"])
+    kept = kept.append_column("_s", _moment_sums(kept))
+    ok = pc.and_(
+        pc.and_(kept["all"], _pure_groups(kept, gtype)),
+        pc.or_(
+            pc.and_(pc.is_valid(kept["_s"]), pc.is_valid(kept["t_m2"])),
+            pc.fill_null(pc.equal(kept["t_nn"], 0), False),
+        ),
     )
-    j = (
-        cls.join(gview, gkeys, "left")
-        .withColumn("_pure", F.coalesce("_pure", F.lit(False)))
-        .join(tgt, gkeys, "left")
+    comps = spark.createDataFrame(
+        kept.filter(pc.and_(ok, pc.fill_null(pc.greater(kept["t_nn"], 0), False)))
+    ).select(
+        _group_value(gtype).alias("_g"),
+        F.col("t_nn").cast("double").alias("_n"),
+        F.col("_s"),
+        F.col("t_m2").alias("_m2"),
     )
-    stats_ok = (
-        (F.col("_s").isNotNull() & F.col("m2").isNotNull())
-        | F.coalesce(F.col("_nn") == 0, F.lit(False))
-    )
-    meta_ok = F.col("_keep") & F.col("_all") & F.col("_pure") & stats_ok
-    pres = j.agg(
-        F.count(F.col("_nn")).alias("_tp"), *_presence_aggs(predicate)
-    ).first()
-    _raise_missing(pres, predicate, run_id)
-    if int(pres._tp or 0) == 0:
-        raise ValueError(
-            f"no stats rows for column(s) [{agg_col!r}] in run "
-            f"{run_id!r} — decode-and-aggregate instead"
+    rest = kept.filter(pc.invert(ok))
+    if rest.num_rows:
+        dec = _decode_matching(
+            spark, plan, result_schema,
+            sorted({c for c, _, _ in predicate} | {group_col, agg_col}),
+            _keys(rest), [predicate],
         )
-    comp_meta = (
-        j.filter(meta_ok & (F.col("_nn") > 0))
-        .select(
-            F.col("_gval").alias("_g"),
-            F.col("_nn").cast("double").alias("_n"),
-            F.col("_s"),
-            F.col("m2").alias("_m2"),
-        )
-    )
-    mixed = j.filter(F.col("_keep") & ~meta_ok).select(*gkeys)
-    n_decode = mixed.count()
-    comps = comp_meta
-    if n_decode:
-        only: object = mixed
-        if n_decode <= zonemap._PUSHDOWN_MAX_GROUPS:
-            only = [
-                (r.partition_id, r.epoch, r.stripe_idx)
-                for r in mixed.collect()
-            ]
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, need, predicate, only
-        )
-        if predicate:
-            dec = dec.filter(zonemap.predicate_expr(predicate))
         av = F.col(agg_col).cast("double")
-        comp_dec = (
+        comps = comps.unionByName(
             dec.groupBy(F.col(group_col).alias("_g"))
             .agg(
                 F.count(av).cast("double").alias("_n"),
@@ -3525,7 +2913,6 @@ def metadata_group_stddev(
             )
             .filter(F.col("_n") > 0)
         )
-        comps = comp_meta.unionByName(comp_dec)
     # two-pass Chan merge, distributed per group
     tot = (
         comps.groupBy("_g")
@@ -3575,65 +2962,40 @@ def metadata_value_counts(
 
     Stripes that declined the histogram (> VCS_CAP distinct, long
     text, floats, pre-upgrade rows) or are predicate-MIXED route to
-    the restricted decode path — exact either way, never estimated.
+    the shared decode tail — exact either way, never estimated.
     NULL is a group (SQL semantics): histogram stripes contribute
     their footer null_count to it. Per-stripe coverage is gated loudly
     in-fold (sum of counts + nulls must equal n_rows). Live deletes
     raise (stats describe encoded rows).
 
-    Scale shape: the metadata half is one blob-free stripes scan →
-    explode of ≤ VCS_CAP pairs per stripe (Arrow-batched pandas UDF)
-    → groupBy(value); at 10^12 rows that is a metadata-table job ~5
-    orders of magnitude smaller than the data. Returns
-    (column, cnt).
+    Scale shape: the planner's classification, then an explode of
+    ≤ VCS_CAP pairs per ALL stripe (Arrow-batched pandas UDF over a
+    DataFrame of the plan) → groupBy(value); at 10^12 rows that is a
+    metadata-sized job ~5 orders of magnitude smaller than the data.
+    Returns (column, cnt).
     """
     from pyspark.sql.types import (
-        ArrayType, BooleanType, ByteType, DateType, IntegerType,
-        LongType, ShortType, StringType, StructField as SF,
-        StructType as ST, TimestampType,
+        ArrayType, LongType, StringType, StructField as SF,
+        StructType as ST,
     )
 
     from . import vcounts as vcounts_mod
 
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — footer histograms "
-            "describe the encoded rows; compact the run first"
-        )
-    predicate = predicate or []
-    pcols = sorted({c for c, _, _ in predicate})
-    need = sorted(set(pcols) | {column})
     ltype = _nested_field_type(result_schema, column)
     if ltype is None:
         raise ValueError(f"column {column!r} not in result_schema")
-    stripes = read_stripes(spark, out_dir, run_id)
-    want_tops = {c.partition(".")[0] for c in need}
-    meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data").filter(
-        F.col("column").isin(need)
+    predicate = predicate or []
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, [predicate], {"t": column},
+        lenient=("t",), blobs=("vcs",), what="footer histograms",
     )
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    if predicate:
-        cls = _classify_pred_groups(
-            meta, predicate, gkeys,
-            pins=_temporal_pins(result_schema, predicate),
-        )
-    else:
-        cls = (
-            meta.groupBy(*gkeys)
-            .agg(F.max("n_rows").alias("n_rows"))
-            .select(
-                *gkeys, "n_rows",
-                F.lit(True).alias("_keep"), F.lit(True).alias("_all"),
-            )
-        )
-    tgt = meta.filter(F.col("column") == column).select(
-        *gkeys, "vcs",
-        F.coalesce("null_count", F.lit(0)).alias("_nulls"),
-        F.col("n_rows").alias("_trows"),
+    kept = plan.groups.filter(plan.groups["keep"])
+    ok = pc.and_(kept["all"], pc.is_valid(kept["t_vcs"]))
+    j = spark.createDataFrame(kept.filter(ok)).select(
+        F.col("t_vcs").alias("vcs"),
+        F.coalesce("t_null_count", F.lit(0)).alias("_nulls"),
+        F.col("t_n_rows").alias("_trows"),
     )
-    j = cls.join(tgt, gkeys, "left")
-    meta_ok = F.col("_keep") & F.col("_all") & F.col("vcs").isNotNull()
 
     str_key = isinstance(ltype, StringType)
     pair_t = ArrayType(
@@ -3661,67 +3023,56 @@ def metadata_value_counts(
             )
         return pd.Series(out)
 
-    def _leaf(src):
-        if isinstance(ltype, TimestampType):
-            return F.timestamp_micros(src)
-        if isinstance(ltype, DateType):
-            return F.date_from_unix_date(src.cast("int"))
-        if isinstance(ltype, BooleanType):
-            return src == 1
-        if isinstance(ltype, StringType):
-            return src
-        if isinstance(ltype, (ByteType, ShortType, IntegerType, LongType)):
-            return src.cast(ltype)
-        return src  # unreachable: such columns never store vcs
-
-    mrows = (
-        j.filter(meta_ok)
-        .withColumn("_p", _pairs("vcs", "_nulls", "_trows"))
-        .select(F.explode_outer("_p").alias("_pair"))
+    mrows = j.withColumn("_p", _pairs("vcs", "_nulls", "_trows")).select(
+        F.explode_outer("_p").alias("_pair")
     )
     meta_part = (
         mrows.select(
-            _leaf(F.col("_pair.v")).alias("_gkey"),
+            _leaf_value(F.col("_pair.v"), ltype).alias("_gkey"),
             F.col("_pair.c").alias("cnt"),
         )
         .where(F.col("cnt").isNotNull())
         .groupBy("_gkey").agg(F.sum("cnt").alias("cnt"))
     )
     null_part = (
-        j.filter(meta_ok & (F.col("_nulls") > 0))
+        j.filter(F.col("_nulls") > 0)
         .agg(F.sum("_nulls").alias("cnt"))
         .select(F.lit(None).cast(ltype).alias("_gkey"), "cnt")
         .where(F.col("cnt").isNotNull())
     )
-    decode_groups = j.filter(F.col("_keep") & ~meta_ok).select(*gkeys)
-    chk = j.agg(
-        F.sum(F.when(F.col("_keep") & ~meta_ok, 1).otherwise(0)).alias("_nd"),
-        *_presence_aggs(predicate),
-    ).first()
-    _raise_missing(chk, predicate, run_id)
-    n_decode = int(chk._nd or 0)
     parts = meta_part.unionByName(null_part)
-    if n_decode:
-        if n_decode <= zonemap._PUSHDOWN_MAX_GROUPS:
-            only = [
-                (r.partition_id, r.epoch, r.stripe_idx)
-                for r in decode_groups.collect()
-            ]
-        else:
-            only = decode_groups
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, need, predicate, only
+    rest = kept.filter(pc.invert(ok))
+    if rest.num_rows:
+        dec = _decode_matching(
+            spark, plan, result_schema,
+            sorted({c for c, _, _ in predicate} | {column}), _keys(rest),
+            [predicate],
         )
-        if predicate:
-            dec = dec.filter(zonemap.predicate_expr(predicate))
-        dec_part = dec.groupBy(F.col(column).alias("_gkey")).agg(
-            F.count(F.lit(1)).alias("cnt")
+        parts = parts.unionByName(
+            dec.groupBy(F.col(column).alias("_gkey")).agg(F.count(F.lit(1)).alias("cnt"))
         )
-        parts = parts.unionByName(dec_part)
     return (
         parts.groupBy("_gkey").agg(F.sum("cnt").cast("long").alias("cnt"))
         .withColumnRenamed("_gkey", column)
     )
+
+
+def _quantile_leaf(column: str, ltype) -> bool:
+    """Whether ``ltype`` has an int-domain order sketch (else float);
+    raises for types with no sketch family at all."""
+    from pyspark.sql.types import (
+        DateType, DoubleType, FloatType, TimestampNTZType, TimestampType,
+    )
+
+    int_dom = _is_integral(ltype) or isinstance(
+        ltype, (TimestampType, TimestampNTZType, DateType)
+    )
+    if not int_dom and not isinstance(ltype, (FloatType, DoubleType)):
+        raise ValueError(
+            f"column {column!r} ({ltype.simpleString()}) has no quantile-"
+            "sketch family — strings/decimals/bools decode instead"
+        )
+    return int_dom
 
 
 def metadata_percentile(
@@ -3737,20 +3088,19 @@ def metadata_percentile(
     WHERE predicate`` for each q, with a PROVABLE worst-case rank-error
     bound of one rank gap per contributing unit (metadata stripe or
     decoded Arrow batch): ≤ N/(K−1) ≈ 1.6% of rows at K=64,
-    independent of the value distribution. Stripes the classifier
+    independent of the value distribution. Stripes the planner
     proves predicate-ALL contribute their per-stripe order-statistic
     sketch (engine/quantiles.py) with ZERO data bytes; MIXED /
-    unsketched (pre-upgrade) stripes decode through the restricted
-    path and re-sketch per Arrow batch with exact gap weights. The
+    unsketched (pre-upgrade) stripes decode through the shared tail
+    and re-sketch per Arrow batch with exact gap weights. The
     returned value is always one actually recorded in the data, and
     its true rank is ≥ ceil(q·N) — the estimate can only land
     at-or-above the target rank, never below it.
 
-    Distributed end-to-end: sketch points explode to (value, weight)
-    rows (stripes × K, ~1000× smaller than the data), the prefix-sum
-    runs as range-partitioned partials + a bounded per-partition
-    offset collect, and all quantiles resolve in ONE final aggregate.
-    No unbounded driver collect.
+    Distributed fold: sketch points explode to (value, weight) rows
+    (stripes × K, ~1000× smaller than the data), the prefix-sum runs
+    as range-partitioned partials + a bounded per-partition offset
+    collect, and all quantiles resolve in ONE final aggregate.
 
     Exact-or-loud: live deletes raise; a decoded batch whose values
     can't be sketched (NaN — engines disagree on its sort position)
@@ -3762,8 +3112,8 @@ def metadata_percentile(
     import pandas as pd
 
     from pyspark.sql.types import (
-        ByteType, DateType, DoubleType, FloatType, IntegerType, LongType,
-        ShortType, StructField, StructType, TimestampNTZType, TimestampType,
+        DateType, DoubleType, LongType, StructField, StructType,
+        TimestampNTZType, TimestampType,
     )
 
     from . import quantiles as quantiles_mod
@@ -3773,66 +3123,18 @@ def metadata_percentile(
     ltype = _nested_field_type(result_schema, column)
     if ltype is None:
         raise ValueError(f"column {column!r} not in result_schema")
-    int_dom = isinstance(
-        ltype, (ByteType, ShortType, IntegerType, LongType,
-                TimestampType, TimestampNTZType, DateType)
-    )
-    if not int_dom and not isinstance(ltype, (FloatType, DoubleType)):
-        raise ValueError(
-            f"column {column!r} ({ltype.simpleString()}) has no quantile-"
-            "sketch family — strings/decimals/bools decode instead"
-        )
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — sketch percentiles "
-            "describe the encoded rows; compact the run first"
-        )
+    int_dom = _quantile_leaf(column, ltype)
     predicate = predicate or []
-    pcols = sorted({c for c, _, _ in predicate})
-    need = sorted(set(pcols) | {column})
-    stripes = _key_restricted_stripes(
-        spark, out_dir, run_id, result_schema, predicate
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, [predicate], {"t": column},
+        blobs=("qsk",), what="sketch percentiles",
     )
-    want_tops = {c.partition(".")[0] for c in need}
-    meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data").filter(
-        F.col("column").isin(need)
-    )
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    if predicate:
-        cls = _classify_pred_groups(
-            meta, predicate, gkeys,
-            pins=_temporal_pins(result_schema, predicate),
-        )
-    else:
-        cls = (
-            meta.groupBy(*gkeys)
-            .agg(F.max("n_rows").alias("n_rows"))
-            .select(
-                *gkeys,
-                F.lit(True).alias("_keep"), F.lit(True).alias("_all"),
-            )
-        )
-    tgt = meta.filter(F.col("column") == column).select(
-        *gkeys,
-        F.col("qsk").alias("_qsk"),
-        F.col("n_rows").alias("_qn"),
-        F.coalesce("null_count", F.lit(0)).alias("_qnull"),
-    )
-    j = cls.join(tgt, gkeys, "left")
+    kept = plan.groups.filter(plan.groups["keep"])
     # metadata half: predicate-ALL stripes with a sketch (an all-null
     # stripe's sketch is valid-and-empty, so it rides free); everything
     # else kept — MIXED, unsketched, pre-upgrade — decodes and
     # re-sketches exactly per batch
-    meta_ok = F.col("_keep") & F.col("_all") & F.col("_qsk").isNotNull()
-    chk = j.agg(
-        F.sum(F.when(F.col("_keep") & ~meta_ok, 1).otherwise(0)).alias("_nd"),
-        F.count(F.col("_qn")).alias("_tp"),
-        *_presence_aggs(predicate),
-    ).first()
-    _raise_missing(chk, predicate, run_id)
-    if int(chk._tp or 0) == 0:
-        raise ValueError(f"no stripes for column {column!r} in run {run_id!r}")
+    ok = pc.and_(kept["all"], pc.is_valid(kept["t_qsk"]))
     out_schema = StructType(
         [
             StructField("q", DoubleType(), False),
@@ -3863,26 +3165,20 @@ def metadata_percentile(
             )
 
     points = (
-        j.filter(meta_ok)
-        .select("_qsk", "_qn", "_qnull")
+        spark.createDataFrame(kept.filter(ok))
+        .select(
+            F.col("t_qsk").alias("_qsk"), F.col("t_n_rows").alias("_qn"),
+            F.coalesce("t_null_count", F.lit(0)).alias("_qnull"),
+        )
         .mapInPandas(_explode, pt_schema)
     )
-    n_decode = int(chk._nd or 0)
-    if n_decode:
-        decode_groups = j.filter(F.col("_keep") & ~meta_ok).select(*gkeys)
-        if n_decode <= zonemap._PUSHDOWN_MAX_GROUPS:
-            only = [
-                (r.partition_id, r.epoch, r.stripe_idx)
-                for r in decode_groups.collect()
-            ]
-        else:
-            only = decode_groups
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, need,
-            predicate or None, only,
+    rest = kept.filter(pc.invert(ok))
+    if rest.num_rows:
+        dec = _decode_matching(
+            spark, plan, result_schema,
+            sorted({c for c, _, _ in predicate} | {column}), _keys(rest),
+            [predicate],
         )
-        if predicate:
-            dec = dec.filter(zonemap.predicate_expr(predicate))
         points = points.unionByName(
             quantiles_mod.column_batch_points(
                 dec.select(F.col(column).alias("_c")), int_dom
@@ -4093,8 +3389,8 @@ def metadata_group_percentile(
     """
     from pyspark.sql import Window
     from pyspark.sql.types import (
-        ByteType, DateType, DoubleType, FloatType, IntegerType, LongType,
-        ShortType, StructField, StructType, TimestampNTZType, TimestampType,
+        DateType, DoubleType, LongType, StructField, StructType,
+        TimestampNTZType, TimestampType,
     )
 
     from . import quantiles as quantiles_mod
@@ -4104,84 +3400,30 @@ def metadata_group_percentile(
     ltype = _nested_field_type(result_schema, pct_col)
     if ltype is None:
         raise ValueError(f"column {pct_col!r} not in result_schema")
-    int_dom = isinstance(
-        ltype, (ByteType, ShortType, IntegerType, LongType,
-                TimestampType, TimestampNTZType, DateType)
-    )
-    if not int_dom and not isinstance(ltype, (FloatType, DoubleType)):
-        raise ValueError(
-            f"column {pct_col!r} ({ltype.simpleString()}) has no quantile-"
-            "sketch family — strings/decimals/bools decode instead"
-        )
-    if _nested_field_type(result_schema, group_col) is None:
+    int_dom = _quantile_leaf(pct_col, ltype)
+    gtype = _nested_field_type(result_schema, group_col)
+    if gtype is None:
         raise ValueError(f"group column {group_col!r} not in result_schema")
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — sketch percentiles "
-            "describe the encoded rows; compact the run first"
-        )
     predicate = predicate or []
-    pcols = sorted({c for c, _, _ in predicate})
-    need = sorted(set(pcols) | {group_col, pct_col})
-    stripes = read_stripes(spark, out_dir, run_id)
-    want_tops = {c.partition(".")[0] for c in need}
-    meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data").filter(
-        F.col("column").isin(need)
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, [predicate],
+        {"g": group_col, "t": pct_col}, lenient=("g",), blobs=("qsk",),
+        what="sketch percentiles",
     )
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    if predicate:
-        cls = _classify_pred_groups(
-            meta, predicate, gkeys,
-            pins=_temporal_pins(result_schema, predicate),
-        )
-    else:
-        cls = (
-            meta.groupBy(*gkeys)
-            .agg(F.max("n_rows").alias("n_rows"))
-            .select(
-                *gkeys,
-                F.lit(True).alias("_keep"), F.lit(True).alias("_all"),
-            )
-        )
-    gview, gtype = _group_purity_view(meta, result_schema, group_col, gkeys)
-    j = cls.join(gview, gkeys, "left")
-    j = j.withColumn("_pure", F.coalesce("_pure", F.lit(False)))
-    tgt = meta.filter(F.col("column") == pct_col).select(
-        *gkeys,
-        F.col("qsk").alias("_qsk"),
-        F.col("n_rows").alias("_qn"),
-        F.coalesce("null_count", F.lit(0)).alias("_qnull"),
+    kept = plan.groups.filter(plan.groups["keep"])
+    ok = pc.and_(
+        pc.and_(kept["all"], _pure_groups(kept, gtype)), pc.is_valid(kept["t_qsk"])
     )
-    j = j.join(tgt, gkeys, "left")
-    meta_ok = (
-        F.col("_keep") & F.col("_all") & F.col("_pure")
-        & F.col("_qsk").isNotNull()
-    )
-    chk = j.agg(
-        F.sum(F.when(F.col("_keep") & ~meta_ok, 1).otherwise(0)).alias("_nd"),
-        F.count(F.col("_qn")).alias("_tp"),
-        *_presence_aggs(predicate),
-    ).first()
-    _raise_missing(chk, predicate, run_id)
-    if int(chk._tp or 0) == 0:
-        raise ValueError(
-            f"no stripes for column {pct_col!r} in run {run_id!r}"
-        )
     vtype = LongType() if int_dom else DoubleType()
-    # the metadata half's group key is the purity view's leaf-typed
-    # single value — same Spark type the decode half produces
-    ktype = gtype if gtype is not None else gview.schema["_gval"].dataType
     pt_schema = StructType(
         [
-            StructField("_gkey", ktype, True),
+            StructField("_gkey", gtype, True),
             StructField("_v", vtype, False),
             StructField("_w", LongType(), False),
         ]
     )
 
     def _explode_g(pdfs):
-        import numpy as np
         import pandas as pd
 
         for pdf in pdfs:
@@ -4200,26 +3442,21 @@ def metadata_group_percentile(
                 yield pd.concat(out, ignore_index=True)
 
     points = (
-        j.filter(meta_ok)
-        .select("_gval", "_qsk", "_qn", "_qnull")
+        spark.createDataFrame(kept.filter(ok))
+        .select(
+            _group_value(gtype).alias("_gval"), F.col("t_qsk").alias("_qsk"),
+            F.col("t_n_rows").alias("_qn"),
+            F.coalesce("t_null_count", F.lit(0)).alias("_qnull"),
+        )
         .mapInPandas(_explode_g, pt_schema)
     )
-    n_decode = int(chk._nd or 0)
-    if n_decode:
-        decode_groups = j.filter(F.col("_keep") & ~meta_ok).select(*gkeys)
-        if n_decode <= zonemap._PUSHDOWN_MAX_GROUPS:
-            only = [
-                (r.partition_id, r.epoch, r.stripe_idx)
-                for r in decode_groups.collect()
-            ]
-        else:
-            only = decode_groups
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, need,
-            predicate or None, only,
+    rest = kept.filter(pc.invert(ok))
+    if rest.num_rows:
+        dec = _decode_matching(
+            spark, plan, result_schema,
+            sorted({c for c, _, _ in predicate} | {group_col, pct_col}),
+            _keys(rest), [predicate],
         )
-        if predicate:
-            dec = dec.filter(zonemap.predicate_expr(predicate))
         points = points.unionByName(
             quantiles_mod.grouped_batch_points(
                 dec.select(
@@ -4279,8 +3516,8 @@ def metadata_group_ndv(
     bytes; every other kept stripe decodes (group, value) and
     re-sketches per Arrow batch with the SAME hash streams
     (ndv.grouped_batch_sketches), so both halves fold in one
-    associative register-max merge per group — no driver collect at
-    any size, groups never materialize their rows.
+    associative register-max merge per group — groups never
+    materialize their rows.
 
     Loud-or-approximate discipline (metadata_ndv's contract, grouped):
     live deletes raise; a metadata-half stripe without a sketch simply
@@ -4293,82 +3530,38 @@ def metadata_group_ndv(
     """
     from . import ndv as ndv_mod
 
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — sketch NDV would "
-            "count deleted rows; compact the run first"
-        )
-    predicate = predicate or []
-    pcols = sorted({c for c, _, _ in predicate})
-    need = sorted(set(pcols) | {group_col, ndv_col})
-    if _nested_field_type(result_schema, group_col) is None:
+    gtype = _nested_field_type(result_schema, group_col)
+    if gtype is None:
         raise ValueError(f"group column {group_col!r} not in result_schema")
     if _nested_field_type(result_schema, ndv_col) is None:
         raise ValueError(f"ndv column {ndv_col!r} not in result_schema")
-    stripes = read_stripes(spark, out_dir, run_id)
-    want_tops = {c.partition(".")[0] for c in need}
-    meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data").filter(
-        F.col("column").isin(need)
+    predicate = predicate or []
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, [predicate],
+        {"g": group_col, "t": ndv_col}, lenient=("g", "t"), blobs=("ndv",),
+        what="sketch NDV estimates",
     )
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    if predicate:
-        cls = _classify_pred_groups(
-            meta, predicate, gkeys,
-            pins=_temporal_pins(result_schema, predicate),
+    kept = plan.groups.filter(plan.groups["keep"])
+    ok = pc.and_(
+        pc.and_(kept["all"], _pure_groups(kept, gtype)), pc.is_valid(kept["t_ndv"])
+    )
+    both = spark.createDataFrame(kept.filter(ok)).select(
+        _group_value(gtype).alias("_gkey"), F.col("t_ndv").alias("ndv_sketch")
+    )
+    rest = kept.filter(pc.invert(ok))
+    if rest.num_rows:
+        dec = _decode_matching(
+            spark, plan, result_schema,
+            sorted({c for c, _, _ in predicate} | {group_col, ndv_col}),
+            _keys(rest), [predicate],
         )
-    else:
-        cls = (
-            meta.groupBy(*gkeys)
-            .agg(F.max("n_rows").alias("n_rows"))
-            .select(
-                *gkeys, "n_rows",
-                F.lit(True).alias("_keep"), F.lit(True).alias("_all"),
+        both = both.unionByName(
+            ndv_mod.grouped_batch_sketches(
+                dec.select(
+                    F.col(group_col).alias("_gkey"), F.col(ndv_col).alias("_val")
+                )
             )
         )
-    gview, _ = _group_purity_view(meta, result_schema, group_col, gkeys)
-    j = cls.join(gview, gkeys, "left")
-    j = j.withColumn("_pure", F.coalesce("_pure", F.lit(False)))
-    tgt = meta.filter(F.col("column") == ndv_col).select(
-        *gkeys, F.col("ndv").alias("_sketch")
-    )
-    j = j.join(tgt, gkeys, "left")
-    meta_ok = (
-        F.col("_keep") & F.col("_all") & F.col("_pure")
-        & F.col("_sketch").isNotNull()
-    )
-    meta_part = j.filter(meta_ok).select(
-        F.col("_gval").alias("_gkey"),
-        F.col("_sketch").alias("ndv_sketch"),
-    )
-    decode_groups = j.filter(F.col("_keep") & ~meta_ok).select(*gkeys)
-    chk = j.agg(
-        F.sum(F.when(F.col("_keep") & ~meta_ok, 1).otherwise(0)).alias("_nd"),
-        *_presence_aggs(predicate),
-    ).first()
-    _raise_missing(chk, predicate, run_id)
-    n_decode = int(chk._nd or 0)
-    both = meta_part
-    if n_decode:
-        if n_decode <= zonemap._PUSHDOWN_MAX_GROUPS:
-            only = [
-                (r.partition_id, r.epoch, r.stripe_idx)
-                for r in decode_groups.collect()
-            ]
-        else:
-            only = decode_groups
-        dec = _restricted_decode(
-            spark, out_dir, run_id, result_schema, need,
-            predicate or None, only,
-        )
-        if predicate:
-            dec = dec.filter(zonemap.predicate_expr(predicate))
-        dec_sk = ndv_mod.grouped_batch_sketches(
-            dec.select(
-                F.col(group_col).alias("_gkey"), F.col(ndv_col).alias("_val")
-            )
-        )
-        both = meta_part.unionByName(dec_sk)
     return (
         ndv_mod.merged_ndv_by(both, "_gkey")
         .withColumnRenamed("_gkey", group_col)
@@ -4406,7 +3599,9 @@ def metadata_topk(
     weaken the guarantee and widen the candidate set, never drop a
     contender); NaN-poisoned / stat-less groups have no bounds and are
     always candidates. On a time-clustered crawl table "newest k
-    pages" touches the last stripe per partition.
+    pages" touches the last stripe per partition. The threshold is a
+    sort over the planner's groups (:func:`_plan`, one row per kept
+    stripe group) on the driver.
 
     ``tiebreak`` (default: none) is appended to the final sort for a
     deterministic order on ties — selection only concerns order_col.
@@ -4414,143 +3609,67 @@ def metadata_topk(
     Live deletes raise (zone counts describe encoded rows).
     """
     from pyspark.sql.types import (
-        ByteType, DateType, DoubleType, FloatType, IntegerType, LongType,
-        ShortType, StringType, TimestampNTZType, TimestampType,
+        DateType, DoubleType, FloatType, StringType, TimestampNTZType,
+        TimestampType,
     )
 
     if k <= 0:
         raise ValueError("k must be positive")
-    dstats = deletes_mod.delete_stats(spark, out_dir, run_id)
-    if dstats["n_vectors"] or dstats["n_eq_values"]:
-        raise ValueError(
-            f"run {run_id!r} carries live deletes — zone-stat top-k "
-            "describes the encoded rows; compact the run first"
-        )
-    predicate = predicate or []
-    by_name = {f.name: f for f in result_schema.fields}
-    of = by_name.get(order_col)
+    of = next((f for f in result_schema.fields if f.name == order_col), None)
     if of is None:
         raise ValueError(f"order column {order_col!r} not in result_schema")
     if isinstance(of.dataType, StringType):
-        mn, mx = "min_str", "max_str"
+        fam = "str"
     elif isinstance(of.dataType, (FloatType, DoubleType)):
-        mn, mx = "min_num", "max_num"
-    elif isinstance(
-        of.dataType,
-        (ByteType, ShortType, IntegerType, LongType, TimestampType,
-         TimestampNTZType, DateType),
+        fam = "num"
+    elif _is_integral(of.dataType) or isinstance(
+        of.dataType, (TimestampType, TimestampNTZType, DateType)
     ):
-        mn, mx = "min_int", "max_int"
+        fam = "int"
     else:
         raise ValueError(
             f"order column type {of.dataType} has no zone family — "
             "decode-and-sort instead"
         )
-    pcols = sorted({c for c, _, _ in predicate})
-    need = sorted(set(pcols) | {order_col})
+    predicate = predicate or []
     want = sorted(
         set(columns or [f.name for f in result_schema.fields])
-        | set(need) | ({tiebreak} if tiebreak else set())
+        | {c for c, _, _ in predicate} | {order_col}
+        | ({tiebreak} if tiebreak else set())
     )
-    stripes = read_stripes(spark, out_dir, run_id)
-    want_tops = {c.partition(".")[0] for c in need}
-    pins = _temporal_pins(result_schema, predicate)
-    gkeys = ["partition_id", "epoch", "stripe_idx"]
-    meta = _epoch_keep_filter(spark, stripes, want_tops).drop("data")
-    if predicate:
-        cls = _classify_pred_groups(
-            meta.filter(F.col("column").isin(need)), predicate, gkeys,
-            pins=pins,
-        ).filter(F.col("_keep")).select(*gkeys, "_all")
-    else:
-        cls = (
-            meta.filter(F.col("column").isin(need))
-            .groupBy(*gkeys).agg(F.max("n_rows").alias("n_rows"))
-            .select(*gkeys, F.lit(True).alias("_all"))
-        )
-    ordstats = meta.filter(F.col("column") == order_col).select(
-        *gkeys,
-        F.col(mn).alias("_lo"), F.col(mx).alias("_hi"),
-        (F.col("n_rows") - F.coalesce("null_count", F.lit(0))).alias("_nn"),
+    plan = _plan(
+        spark, out_dir, run_id, result_schema, [predicate], {"o": order_col},
+        lenient=("o",), what="zone-stat top-k",
     )
-    j = cls.join(ordstats, gkeys, "left")
+    kept = plan.groups.filter(plan.groups["keep"])
+    rows = kept.select(
+        [*zonemap.GROUP_KEYS, "all", f"o_min_{fam}", f"o_max_{fam}", "o_nn"]
+    ).to_pylist()
     # the k-guarantee may count a group's rows ONLY when the predicate
-    # provably holds for every row (_all) — a zone/bloom-keep MIXED
+    # provably holds for every row (all) — a zone/bloom-keep MIXED
     # group might contain zero matching rows, and counting it could
-    # push the threshold past the stripes holding the true top-k
-    sdir = lineage_mod.stripes_dir(out_dir)
-    if not storage.is_iceberg(sdir) and zonemap._driver_plan_budget_ok(sdir):
-        # footer-budget fast path: one bounded collect (a row per kept
-        # stripe group) and the threshold as a python sort
-        rows = j.collect()
-        bounded_all = [
-            r for r in rows
-            if r._all and r._lo is not None and r._hi is not None
-        ]
-        thresh = None
-        if bounded_all:
-            # guarantee list: DESC uses zone mins (every non-null row
-            # of an ALL group is a MATCH >= its min), ASC uses maxes
-            guar = sorted(
-                ((r._lo if descending else r._hi), int(r._nn or 0))
-                for r in bounded_all
-            )
-            if descending:
-                guar = guar[::-1]
-            total = 0
-            for v, nn in guar:
-                total += nn
-                if total >= k:
-                    thresh = v
-                    break
-        cands = []
-        for r in rows:
-            if r._lo is None or r._hi is None:
-                cands.append((r.partition_id, r.epoch, r.stripe_idx))
-                continue
-            edge = r._hi if descending else r._lo
-            if (
-                thresh is None
-                or (edge >= thresh if descending else edge <= thresh)
-            ):
-                cands.append((r.partition_id, r.epoch, r.stripe_idx))
-        only = [(int(p), int(e), int(s)) for p, e, s in cands]
-    else:
-        # distributed threshold (100 TB route — stripe-group metadata
-        # outgrows the driver): running-sum window over the guarantee
-        # bound, ONE scalar to the driver, candidates stay a DataFrame
-        # (decode_job semi-joins them)
-        from pyspark.sql import Window
-
-        gb = F.col("_lo") if descending else F.col("_hi")
-        w = Window.orderBy(gb.desc() if descending else gb.asc())
-        trow = (
-            j.filter(
-                F.col("_all")
-                & F.col("_lo").isNotNull() & F.col("_hi").isNotNull()
-            )
-            .withColumn("_cum", F.sum(F.coalesce("_nn", F.lit(0))).over(w))
-            .filter(F.col("_cum") >= k)
-            .agg(
-                (F.max(gb) if descending else F.min(gb)).alias("t")
-            ).first()
-        )
-        thresh = trow.t if trow is not None else None
-        edge = F.col("_hi") if descending else F.col("_lo")
-        no_bounds = F.col("_lo").isNull() | F.col("_hi").isNull()
-        if thresh is None:
-            only = j.select(*gkeys)
-        else:
-            only = j.filter(
-                no_bounds
-                | (edge >= F.lit(thresh) if descending
-                   else edge <= F.lit(thresh))
-            ).select(*gkeys)
-    dec = _restricted_decode(
-        spark, out_dir, run_id, result_schema, want, predicate, only
+    # push the threshold past the stripes holding the true top-k.
+    # DESC guarantees with zone mins (every non-null row of an ALL
+    # group is a MATCH >= its min), ASC with maxes
+    lo, hi = f"o_min_{fam}", f"o_max_{fam}"
+    guar = sorted(
+        ((r[lo] if descending else r[hi]), int(r["o_nn"] or 0))
+        for r in rows if r["all"] and r[lo] is not None and r[hi] is not None
     )
-    if predicate:
-        dec = dec.filter(zonemap.predicate_expr(predicate))
+    thresh = None
+    total = 0
+    for v, nn in (guar[::-1] if descending else guar):
+        total += nn
+        if total >= k:
+            thresh = v
+            break
+    cands = [
+        tuple(r[c] for c in zonemap.GROUP_KEYS)
+        for r in rows
+        if r[lo] is None or r[hi] is None or thresh is None
+        or (r[hi] >= thresh if descending else r[lo] <= thresh)
+    ]
+    dec = _decode_matching(spark, plan, result_schema, want, cands, [predicate])
     order = [
         F.col(order_col).desc() if descending else F.col(order_col).asc()
     ]

@@ -287,20 +287,161 @@ def _pin_keep_cands(ints, pin):
     return [ints[0]] if pin == "us" else [ints[1]]
 
 
-def _range_overlap(lo, hi, pin: str | None = None) -> Column:
+# ---------------------------- TimestampNTZ under a session time zone
+#
+# An NTZ column's stats hold its wall clock (epoch micros of the naive
+# value). A datetime literal is an instant, and Spark compares the two
+# by casting the column to an instant in the session time zone — or,
+# where its optimizer unwraps that cast, by comparing the column with
+# the literal's wall clock in the zone. The two differ only for wall
+# clocks in a DST gap or overlap, and which one a filter gets depends
+# on its plan, so a conjunct with datetime literals keeps a group
+# either comparison may match (the group's wall bounds mapped to
+# instants, or the literal mapped to a wall clock) and proves ALL only
+# where both do. A date literal is cast to the column's wall clock and
+# compares with the raw bounds. Callers mark such columns with the pin
+# "ntz:<zone>" (pipeline._temporal_pins); under a UTC session zone
+# they pin "us".
+
+NTZ_PIN = "ntz:"
+_EPOCH = datetime.datetime(1970, 1, 1)
+# the wall clocks Python's datetime can hold, a day inside each end
+_WALL_MIN_US = -62_135_596_800_000_000 + 2 * 86_400_000_000
+_WALL_MAX_US = 253_402_300_799_000_000 - 2 * 86_400_000_000
+
+
+def _literals(op: str, value) -> list:
+    if op in ("between", "in"):
+        return list(value)
+    if op in ("is_null", "not_null", "like_prefix", "contains_token"):
+        return []
+    return [value]
+
+
+def _resolve_ntz(op: str, value, pin):
+    """``(pin, zone)`` to evaluate one conjunct with. For an NTZ pin:
+    ``("us", zone)`` when its literals are datetimes (compare instants),
+    ``("us", None)`` when none is (compare wall clocks), and
+    ``("us", False)`` for a mix, where no one view is sound: callers
+    keep every group and prove none. Other pins pass through."""
+    if not (isinstance(pin, str) and pin.startswith(NTZ_PIN)):
+        return pin, None
+    kinds = {isinstance(v, datetime.datetime) for v in _literals(op, value)}
+    if len(kinds) > 1:
+        return "us", False
+    return "us", pin[len(NTZ_PIN):] if True in kinds else None
+
+
+def _tzinfo(zone: str):
+    """The tzinfo of a Spark session zone id (region or fixed offset),
+    or None when Python cannot name it."""
+    from zoneinfo import ZoneInfo
+
+    try:
+        return ZoneInfo(zone)
+    except (ValueError, KeyError, OSError):
+        pass
+    try:
+        return datetime.datetime.strptime(zone.replace("UTC", "").replace("GMT", ""), "%z").tzinfo
+    except ValueError:
+        return None
+
+
+def _wall_literals(op: str, value, zone: str):
+    """The conjunct's datetime literals as epoch micros of their wall
+    clock in ``zone`` — the NTZ values Spark compares the column with
+    when it unwraps the cast — in the conjunct's value shape; None when
+    Python cannot name the zone."""
+    tz = _tzinfo(zone)
+    if tz is None:
+        return None
+
+    def wall(v):
+        at = _EPOCH + datetime.timedelta(microseconds=_as_scalar(v)[0][0])
+        local = at.replace(tzinfo=datetime.timezone.utc).astimezone(tz).replace(tzinfo=None)
+        return (local - _EPOCH) // datetime.timedelta(microseconds=1)
+
+    if op == "between":
+        return tuple(wall(v) for v in value)
+    if op == "in":
+        return [wall(v) for v in value]
+    return wall(value)
+
+
+def _spark_offsets_us(walls: np.ndarray, tz) -> np.ndarray:
+    """The UTC offset Spark applies to each wall clock when it casts
+    NTZ to an instant: the zone's offset, and inside a gap or an
+    overlap the offset in force before the transition (java.time's
+    ZonedDateTime.ofLocal, which Python's fold=0 matches)."""
+    uniq, inv = np.unique(np.clip(walls, _WALL_MIN_US, _WALL_MAX_US), return_inverse=True)
+    offs = [
+        (_EPOCH + datetime.timedelta(microseconds=int(w))).replace(tzinfo=tz).utcoffset()
+        for w in uniq.tolist()
+    ]
+    return np.array([o // datetime.timedelta(microseconds=1) for o in offs], np.int64)[inv]
+
+
+def _ntz_instant_bounds(meta: pa.Table, zone: str) -> pa.Table:
+    """``meta`` with its int-family wall bounds replaced by bounds on
+    the instants Spark casts them to in ``zone``. The cast is monotone
+    except inside a gap, where a wall clock maps up to the gap's length
+    later than the wall clocks just after it; so each bound shifts by
+    the largest (min) or smallest (max) offset in force within a day of
+    it. Sound while a zone changes offset at most once a day, by less
+    than a day."""
+    tz = _tzinfo(zone)
+    out = {}
+    for name, step, pick in (("min_int", 1, np.maximum), ("max_int", -1, np.minimum)):
+        col = meta[name]
+        valid = np.array(pc.is_valid(col), dtype=bool)
+        w = np.array(pc.fill_null(col, 0), dtype=np.int64)
+        if valid.any():
+            ws = w[valid]
+            near = np.clip(ws, _WALL_MIN_US, _WALL_MAX_US) + step * _DAY_US
+            w[valid] = ws - pick(_spark_offsets_us(ws, tz), _spark_offsets_us(near, tz))
+        out[name] = pa.array(w, pa.int64(), mask=~valid)
+    for name, arr in out.items():
+        meta = meta.set_column(meta.schema.get_field_index(name), name, arr)
+    return meta
+
+
+def _ntz_instant_cols(zone: str) -> dict:
+    """Column twins of :func:`_ntz_instant_bounds`, for the Spark
+    metadata jobs; Spark's own cast supplies the offsets. Bounds past
+    ±2^62 µs come out null (no stats: keep)."""
+    def offset(c):
+        return c - F.unix_micros(F.to_utc_timestamp(F.timestamp_micros(c), zone))
+
+    def bound(name, step, pick):
+        c = F.col(name)
+        shifted = c - pick(offset(c), offset(c + F.lit(step * _DAY_US)))
+        return F.when(c.between(-(1 << 62), 1 << 62), shifted)
+
+    return {
+        "min_int": bound("min_int", 1, F.greatest),
+        "max_int": bound("max_int", -1, F.least),
+    }
+
+
+def _stat(name: str, sub: dict | None) -> Column:
+    return (sub or {}).get(name, F.col(name))
+
+
+def _range_overlap(lo, hi, pin: str | None = None, sub: dict | None = None) -> Column:
     """Keep-condition: the stripe's [min, max] intersects [lo, hi]
     (either bound None = unbounded). Evaluated per stat family; a
-    family's stats being null means it can't veto."""
+    family's stats being null means it can't veto. ``sub`` replaces
+    stat columns by expressions (the NTZ instant bounds)."""
     ilo, nlo, slo = _as_scalar(lo) if lo is not None else (None, None, None)
     ihi, nhi, shi = _as_scalar(hi) if hi is not None else (None, None, None)
     ilo, ihi = _pin_keep_cands(ilo, pin), _pin_keep_cands(ihi, pin)
 
     def fam(minc: str, maxc: str, flo, fhi) -> Column:
-        cond = F.col(minc).isNotNull()
+        cond = _stat(minc, sub).isNotNull()
         if fhi is not None:
-            cond = cond & (F.col(minc) <= F.lit(fhi))
+            cond = cond & (_stat(minc, sub) <= F.lit(fhi))
         if flo is not None:
-            cond = cond & (F.col(maxc) >= F.lit(flo))
+            cond = cond & (_stat(maxc, sub) >= F.lit(flo))
         return cond
 
     if slo is not None or shi is not None:
@@ -329,11 +470,11 @@ def _range_overlap(lo, hi, pin: str | None = None) -> Column:
         )
         for c in int_checks:
             checked = checked | c
-        stats_present = F.col("min_int").isNotNull() | F.col("min_num").isNotNull()
+        stats_present = _stat("min_int", sub).isNotNull() | F.col("min_num").isNotNull()
     return checked | ~stats_present  # no stats -> never prune
 
 
-def _single_valued_at(value) -> Column:
+def _single_valued_at(value, sub: dict | None = None) -> Column:
     """True when the stripe's stats PROVE every non-null value equals
     ``value`` (min == max == v in the literal's stat family) — the only
     layout a `!=` predicate can prune. Null rows never match `!=`
@@ -351,9 +492,9 @@ def _single_valued_at(value) -> Column:
 
     def fam(minc: str, maxc: str, v) -> Column:
         return (
-            F.col(minc).isNotNull()
-            & (F.col(minc) == F.lit(v))
-            & (F.col(maxc) == F.lit(v))
+            _stat(minc, sub).isNotNull()
+            & (_stat(minc, sub) == F.lit(v))
+            & (_stat(maxc, sub) == F.lit(v))
         )
 
     if s is not None:
@@ -426,6 +567,20 @@ def _conjunct_keep(op: str, value, pin: str | None = None) -> Column:
         # lives in the token bloom (the probe sites), so the zone
         # level keeps every stripe that has stats rows at all
         return F.lit(True)
+    pin, zone = _resolve_ntz(op, value, pin)
+    if zone is False:
+        return F.lit(True)
+    if zone:
+        walls = _wall_literals(op, value, zone)
+        if walls is None:
+            return F.lit(True)
+        return _zone_keep(op, value, pin, _ntz_instant_cols(zone)) | _zone_keep(
+            op, walls, None, None
+        )
+    return _zone_keep(op, value, pin, None)
+
+
+def _zone_keep(op: str, value, pin, sub) -> Column:
     if op == "is_null":
         # keep iff the stripe may contain a null (absent count: keep)
         return F.col("null_count").isNull() | (F.col("null_count") > 0)
@@ -434,29 +589,29 @@ def _conjunct_keep(op: str, value, pin: str | None = None) -> Column:
             F.col("null_count") < F.col("n_rows")
         )
     if op == "!=":
-        return ~_single_valued_at(value)
+        return ~_single_valued_at(value, sub)
     if op == "between":
         lo, hi = value
-        return _range_overlap(lo, hi, pin)
+        return _range_overlap(lo, hi, pin, sub)
     if op == "in":
         vals = list(value)
         if not vals:
             return F.lit(False)  # empty IN-list matches nothing
-        keep = _range_overlap(vals[0], vals[0], pin)
+        keep = _range_overlap(vals[0], vals[0], pin, sub)
         for v in vals[1:]:
-            keep = keep | _range_overlap(v, v, pin)
+            keep = keep | _range_overlap(v, v, pin, sub)
         return keep
     if op in ("==", "="):
-        return _range_overlap(value, value, pin)
+        return _range_overlap(value, value, pin, sub)
     if op == ">=":
-        return _range_overlap(value, None, pin)
+        return _range_overlap(value, None, pin, sub)
     if op == ">":
         # strict: a stripe whose max == value still can't satisfy, but
         # only when max is exact; inclusive overlap stays conservative
-        return _range_overlap(value, None, pin)
+        return _range_overlap(value, None, pin, sub)
     if op == "<=":
-        return _range_overlap(None, value, pin)
-    return _range_overlap(None, value, pin)  # '<'
+        return _range_overlap(None, value, pin, sub)
+    return _range_overlap(None, value, pin, sub)  # '<'
 
 
 # ------------------------------------ the same keep tests over Arrow
@@ -599,6 +754,17 @@ def conjunct_keep_arrow(meta: pa.Table, op: str, value, pin: str | None = None):
                 f"got {value!r}"
             )
         return _const_arrow(meta, True)
+    pin, zone = _resolve_ntz(op, value, pin)
+    if zone is False:
+        return _const_arrow(meta, True)
+    if zone:
+        walls = _wall_literals(op, value, zone)
+        if walls is None:
+            return _const_arrow(meta, True)
+        return pc.or_kleene(
+            conjunct_keep_arrow(_ntz_instant_bounds(meta, zone), op, value, pin),
+            conjunct_keep_arrow(meta, op, walls),
+        )
     nc = meta["null_count"]
     if op == "is_null":
         return pc.or_kleene(pc.is_null(nc), pc.greater(nc, 0))
@@ -676,6 +842,11 @@ def _conjunct_all(op: str, value, pin: str | None = None) -> Column:
         return F.coalesce(no_nulls, F.lit(False))
     if op == "contains_token":
         return F.lit(False)  # token membership is never zone-provable
+    pin, zone = _resolve_ntz(op, value, pin)
+    if zone is not None:
+        # NTZ against a datetime: only conjunct_all_arrow maps the
+        # bounds; this form proves nothing there
+        return F.lit(False)
 
     def within(lo, hi, strict_lo=False, strict_hi=False) -> Column:
         """All values in the interval (bounds None = unbounded)."""
@@ -788,6 +959,17 @@ def conjunct_all_arrow(meta: pa.Table, op: str, value, pin: str | None = None):
         return pc.fill_null(pc.equal(nc, 0), False)
     if op == "contains_token":
         return _const_arrow(meta, False)
+    pin, zone = _resolve_ntz(op, value, pin)
+    if zone is False:
+        return _const_arrow(meta, False)
+    if zone:
+        walls = _wall_literals(op, value, zone)
+        if walls is None:
+            return _const_arrow(meta, False)
+        return pc.and_(
+            conjunct_all_arrow(_ntz_instant_bounds(meta, zone), op, value, pin),
+            conjunct_all_arrow(meta, op, walls),
+        )
 
     def fam(minc: str, maxc: str, bounds, lo_op: str, hi_op: str):
         """Both stats present and every (lo, hi) candidate holds."""
@@ -884,7 +1066,7 @@ def prune_stripes(
     for col, op, value in predicate:
         cond = _conjunct_keep(op, value, pin=(pins or {}).get(col))
         rows = meta.filter(F.col("column") == col).filter(cond)
-        pvals = _bloom_probe_vals(op, value)
+        pvals = _bloom_probe_vals(op, value, (pins or {}).get(col))
         if has_bloom and pvals is not None:
             vals = pvals
             bks = [
@@ -991,75 +1173,76 @@ def plan_keep_groups(
 
     Per stripe group: each conjunct's zone flag (the max of
     :func:`conjunct_keep_arrow` over the group's rows of that column —
-    a group with no row for a conjunct's column is pruned); per
-    partition, the newest epoch whose wanted column set is complete,
-    short-circuited to epoch 0 when no wanted column has a later epoch
-    (mirrors pipeline._epoch_keep_filter, so predicated and
-    unpredicated decodes select the same stripe sets); then the bloom
-    veto (AND across conjuncts, OR across IN-list members; absent or
-    cross-domain blobs keep). Semantics equal the distributed metadata
-    job in :func:`fused_prune`.
+    a group with no row for a conjunct's column is pruned); the epoch
+    selection of :func:`_group_flags`; then the bloom veto (AND across
+    conjuncts, OR across IN-list members; absent or cross-domain blobs
+    keep). Semantics equal the distributed metadata job in
+    :func:`fused_prune`.
 
     Returns sorted (partition_id, epoch, stripe_idx) keys, or None when
     more than ``max_groups`` groups pass the zones (None = no cap).
     """
-    meta, g = _group_flags(meta, want, predicate, pins, with_all=False)
+    meta, g = _group_flags(meta, want, [predicate], pins, with_all=False)
     keep = g["_epoch_ok"]
     for i in range(len(predicate)):
-        keep = pc.and_(keep, pc.fill_null(pc.equal(g[f"_k{i}_max"], 1), False))
+        keep = pc.and_(keep, pc.fill_null(pc.equal(g[f"_k0_{i}_max"], 1), False))
     surv = g.filter(keep)
     if max_groups is not None and surv.num_rows > max_groups:
         return None
-    surv = surv.filter(pa.array(_bloom_keep(meta, surv, predicate)))
-    return sorted(zip(*(surv[k].to_pylist() for k in _GROUP_KEYS)))
+    surv = surv.filter(pa.array(_bloom_keep(meta, surv, predicate, pins)))
+    return sorted(zip(*(surv[k].to_pylist() for k in GROUP_KEYS)))
 
 
-_GROUP_KEYS = ["partition_id", "epoch", "stripe_idx"]
+GROUP_KEYS = ["partition_id", "epoch", "stripe_idx"]
 
 
-def _group_flags(meta, want, predicate, pins, with_all, target=None):
+def _group_flags(meta, want, branches, pins, with_all, extra=()):
     """The per-stripe-group view both driver planners share: ``meta``
-    cut to completed rows of the wanted, predicate and ``target``
-    columns, and one row per group with ``n_rows_max``, each conjunct's
-    zone keep flag ``_k{i}_max`` (and ALL flag ``_a{i}_max`` when
-    ``with_all``), ``_h{i}_max`` (1 when the group has a row of the
-    conjunct's column, else null), the target column's stats, and
-    ``_epoch_ok``: the group is in its partition's newest epoch whose
-    wanted column set is complete, short-circuited to epoch 0 when no
-    wanted column has a later epoch (pipeline._epoch_keep_filter)."""
+    cut to completed rows of the wanted, predicate and ``extra``
+    columns, and one row per group with ``n_rows_max``, the zone keep
+    flag ``_k{b}_{i}_max`` of conjunct i of branch b (and its ALL flag
+    ``_a{b}_{i}_max`` when ``with_all``), ``_h:{column}_max`` (1 when
+    the group has a row of that predicate or extra column, else null),
+    and ``_epoch_ok``: the group is in its partition's newest epoch
+    whose wanted column set is complete, short-circuited to epoch 0
+    when no wanted column has a later epoch
+    (pipeline._epoch_keep_filter).
+
+    Raises when a selected epoch holds a group whose every wanted row
+    failed: no completed row forms that group, so it would vanish from
+    the answer instead of failing the decode loudly."""
     want_set = set(want)
-    cols = want_set | {c for c, _, _ in predicate} | ({target} if target else set())
+    pcols = {c for br in branches for c, _, _ in br}
     ctype = meta.schema.field("column").type
-    meta = meta.filter(
-        pc.and_(
-            pc.equal(meta["status"], "completed"),
-            pc.is_in(meta["column"], value_set=pa.array(sorted(cols), type=ctype)),
-        )
+    wanted = pa.array(sorted(want_set), type=ctype)
+    done = pc.equal(meta["status"], "completed")
+    failed = meta.filter(pc.and_(pc.invert(done), pc.is_in(meta["column"], value_set=wanted)))
+    formed = meta.filter(done)  # any column: the groups whose rows exist
+    meta = formed.filter(
+        pc.is_in(formed["column"], value_set=pa.array(sorted(want_set | pcols | set(extra)), type=ctype))
     ).combine_chunks()
     col = meta["column"]
-    flags = {k: meta[k] for k in (*_GROUP_KEYS, "n_rows")}
+    flags = {k: meta[k] for k in (*GROUP_KEYS, "n_rows")}
     aggs = [("n_rows", "max")]
 
     def where(hit, arr, name):
         flags[name] = pc.if_else(hit, arr, pa.scalar(None, arr.type))
         aggs.append((name, "max"))
 
-    for i, (c, op, value) in enumerate(predicate):
-        hit = pc.equal(col, c)
-        pin = (pins or {}).get(c)
-        where(hit, conjunct_keep_arrow(meta, op, value, pin=pin).cast(pa.int8()), f"_k{i}")
-        where(hit, _const_arrow(meta, True).cast(pa.int8()), f"_h{i}")
-        if with_all:
-            where(hit, conjunct_all_arrow(meta, op, value, pin=pin).cast(pa.int8()), f"_a{i}")
-    if target is not None:
-        hit = pc.equal(col, target)
-        for k in ("sum_int", "sum_num", "m2"):
-            where(hit, meta[k], f"_t_{k}")
-        where(hit, pc.subtract(meta["n_rows"], pc.fill_null(meta["null_count"], 0)), "_t_nn")
-    g = pa.table(flags).group_by(_GROUP_KEYS, use_threads=False).aggregate(aggs)
-    w = meta.filter(pc.is_in(col, value_set=pa.array(sorted(want_set), type=ctype)))
+    hits = {c: pc.equal(col, c) for c in sorted(pcols | set(extra))}
+    for c, hit in hits.items():
+        where(hit, _const_arrow(meta, True).cast(pa.int8()), f"_h:{c}")
+    for b, br in enumerate(branches):
+        for i, (c, op, value) in enumerate(br):
+            pin = (pins or {}).get(c)
+            where(hits[c], conjunct_keep_arrow(meta, op, value, pin=pin).cast(pa.int8()), f"_k{b}_{i}")
+            if with_all:
+                where(hits[c], conjunct_all_arrow(meta, op, value, pin=pin).cast(pa.int8()), f"_a{b}_{i}")
+    g = pa.table(flags).group_by(GROUP_KEYS, use_threads=False).aggregate(aggs)
+    w = meta.filter(pc.is_in(col, value_set=wanted))
     if not w.num_rows or pc.max(w["epoch"]).as_py() == 0:
         ok = pc.equal(g["epoch"], 0)
+        lost = failed.filter(pc.equal(failed["epoch"], 0))
     else:
         per = w.group_by(["partition_id", "epoch"]).aggregate(
             [("column", "count_distinct")]
@@ -1067,16 +1250,63 @@ def _group_flags(meta, want, predicate, pins, with_all, target=None):
         best = per.filter(
             pc.greater_equal(per["column_count_distinct"], len(want_set))
         ).group_by("partition_id").aggregate([("epoch", "max")])
-        best_ep = pc.take(
-            best["epoch_max"],
-            pc.index_in(g["partition_id"], value_set=best["partition_id"]),
-        )
-        ok = pc.fill_null(pc.equal(g["epoch"], best_ep), False)
+
+        def selected(t):
+            best_ep = pc.take(
+                best["epoch_max"],
+                pc.index_in(t["partition_id"], value_set=best["partition_id"]),
+            )
+            return pc.fill_null(pc.equal(t["epoch"], best_ep), False)
+
+        ok = selected(g)
+        lost = failed.filter(selected(failed))
+    if lost.num_rows:
+        lk = group_key_strings(lost)
+        lost = lost.filter(pc.and_(
+            pc.invert(pc.is_in(lk, value_set=group_key_strings(w))),
+            pc.is_in(lk, value_set=group_key_strings(formed)),
+        ))
+        raise_lost_groups(zip(*(lost[k].to_pylist() for k in GROUP_KEYS)))
     return meta, g.append_column("_epoch_ok", ok)
 
 
-def _bloom_keep(meta, groups, predicate) -> np.ndarray:
-    """Bloom veto over ``groups`` (rows keyed by _GROUP_KEYS): True where
+def raise_lost_groups(keys) -> None:
+    """Fail loudly on stripe groups whose rows exist (a stripe of some
+    column completed) while every stripe of the wanted columns failed:
+    a decode never sees such a group, so a read or count would drop
+    its rows silently instead of failing like a group that lacks only
+    some wanted columns. A group where every column failed holds no
+    rows and is absent from the table (a never-written partition)."""
+    keys = sorted(set(keys))
+    if keys:
+        raise RuntimeError(
+            f"incomplete stripe groups (missing columns): {keys[:4]} hold "
+            "rows but no completed stripe of the wanted columns"
+        )
+
+
+def lost_group_check(stripes: DataFrame, want, where) -> None:
+    """:func:`raise_lost_groups` for a Spark metadata plan, run only
+    when its job flagged candidate groups: ``where`` (a Column over
+    partition_id/epoch/stripe_idx) selects them, and one more job
+    finds those with rows."""
+    done = F.col("status") == "completed"
+    wanted = F.col("column").isin(sorted(want))
+    rows = (
+        stripes.drop("data").filter(where).groupBy(*GROUP_KEYS)
+        .agg(
+            F.max(~done & wanted).alias("_f"), F.max(done & wanted).alias("_w"),
+            F.max(done).alias("_d"),
+        )
+        .filter(F.col("_f") & ~F.col("_w") & F.col("_d"))
+        .limit(4)
+        .collect()
+    )
+    raise_lost_groups(tuple(r[k] for k in GROUP_KEYS) for r in rows)
+
+
+def _bloom_keep(meta, groups, predicate, pins=None) -> np.ndarray:
+    """Bloom veto over ``groups`` (rows keyed by GROUP_KEYS): True where
     every equality-shaped conjunct may match — AND across conjuncts, OR
     across IN-list members; absent or cross-domain blobs keep."""
     kept = np.ones(groups.num_rows, dtype=bool)
@@ -1084,7 +1314,7 @@ def _bloom_keep(meta, groups, predicate) -> np.ndarray:
         return kept
     col = meta["column"]
     for c, op, value in predicate:
-        vals = _bloom_probe_vals(op, value)
+        vals = _bloom_probe_vals(op, value, (pins or {}).get(c))
         if not vals or any(_probe_hash_pairs(op, v) is None for v in vals):
             continue
         brows = meta.filter(pc.and_(pc.equal(col, c), pc.is_valid(meta["bloom"])))
@@ -1100,45 +1330,66 @@ def _bloom_keep(meta, groups, predicate) -> np.ndarray:
     return kept
 
 
-def classify_groups(meta, want, predicate, pins=None, target=None):
+def classify_groups(meta, want, branches, pins=None, targets=None, fields=(), extra=()):
     """Classify every stripe group of a run as ALL, NONE or MIXED
-    against a conjunctive predicate, on the driver from an Arrow table
-    of blob-free stripe metadata — the metadata_count / metadata_sum /
-    metadata_stddev counterpart of :func:`plan_keep_groups`, with the
-    same group, epoch and bloom logic.
+    against a predicate in disjunctive normal form — a list of
+    branches, each a conjunct list; a conjunction is one branch and an
+    empty branch matches every row — on the driver, from an Arrow table
+    of blob-free stripe metadata, with :func:`plan_keep_groups`'s
+    group, epoch and bloom logic.
 
-    A group is kept unless some conjunct's zone keep flag is 0 or the
-    bloom veto rejects it; a conjunct whose column has no row in the
-    group neither prunes nor proves (the group decodes). It is ALL when
-    every conjunct's :func:`conjunct_all_arrow` flag is 1. These are
-    the distributed classifier's rules (pipeline._classify_pred_groups).
+    Per branch, a group is kept unless some conjunct's zone keep flag
+    is 0 or the bloom veto rejects it; a conjunct whose column has no
+    row in the group neither prunes nor proves (the group decodes). It
+    is ALL for the branch when every conjunct's
+    :func:`conjunct_all_arrow` flag is 1. Across branches both are
+    OR-ed: a group ALL for one branch has every row matching.
 
-    Returns ``(groups, present, target_present)``: ``groups`` has one
-    row per group of the selected epochs with ``partition_id``,
-    ``epoch``, ``stripe_idx``, ``n_rows``, ``keep``, ``all`` and, for a
-    ``target`` column, its ``sum_int``, ``sum_num``, ``m2`` and
-    non-null count ``nn`` (null where the group has no target row);
-    ``present[j]`` says conjunct j's column has a row in some group."""
-    meta, g = _group_flags(meta, want, predicate, pins, with_all=True, target=target)
+    Returns ``(groups, meta, present)``. ``groups`` has one row per
+    group of the selected epochs: ``partition_id``, ``epoch``,
+    ``stripe_idx``, ``n_rows``, ``keep``, ``all`` (which implies
+    ``keep``) and, for each ``targets`` entry ``role -> column``, that
+    column's stats ``fields`` as ``{role}_{field}`` and its non-null
+    count ``{role}_nn`` (null where the group has no row of it).
+    ``meta`` is the completed rows of the wanted, predicate, target and
+    ``extra`` columns the groups are formed from; ``present`` the
+    predicate, target and extra columns with a row in some selected
+    group."""
+    targets = targets or {}
+    extra = set(targets.values()) | set(extra)
+    meta, g = _group_flags(meta, want, branches, pins, with_all=True, extra=extra)
     g = g.filter(g["_epoch_ok"])
-    keep = _const_arrow(g, True)
-    all_ = _const_arrow(g, True)
-    for i in range(len(predicate)):
-        keep = pc.and_(keep, pc.fill_null(pc.equal(g[f"_k{i}_max"], 1), True))
-        all_ = pc.and_(all_, pc.fill_null(pc.equal(g[f"_a{i}_max"], 1), False))
-    keep = np.array(keep, dtype=bool)
-    idx = np.flatnonzero(keep)
-    keep[idx] = _bloom_keep(meta, g.take(idx), predicate)
-    cols = {k: g[k] for k in _GROUP_KEYS}
+    keep = np.zeros(g.num_rows, dtype=bool)
+    all_ = np.zeros(g.num_rows, dtype=bool)
+    for b, br in enumerate(branches):
+        kb = _const_arrow(g, True)
+        ab = _const_arrow(g, True)
+        for i in range(len(br)):
+            kb = pc.and_(kb, pc.fill_null(pc.equal(g[f"_k{b}_{i}_max"], 1), True))
+            ab = pc.and_(ab, pc.fill_null(pc.equal(g[f"_a{b}_{i}_max"], 1), False))
+        kb = np.array(kb, dtype=bool)
+        idx = np.flatnonzero(kb & ~keep)
+        kb[idx] = _bloom_keep(meta, g.take(idx), br, pins)
+        keep |= kb
+        all_ |= np.array(ab, dtype=bool)
+    cols = {k: g[k] for k in GROUP_KEYS}
     cols["n_rows"] = g["n_rows_max"]
     cols["keep"] = pa.array(keep)
-    cols["all"] = all_
-    if target is not None:
-        for k in ("sum_int", "sum_num", "m2", "nn"):
-            cols[k] = g[f"_t_{k}_max"]
-    present = [g[f"_h{i}_max"].null_count < g.num_rows for i in range(len(predicate))]
-    target_present = target is not None and g["_t_nn_max"].null_count < g.num_rows
-    return pa.table(cols), present, target_present
+    cols["all"] = pa.array(all_ & keep)
+    if targets:
+        gkeys = group_key_strings(g)
+        for role, c in targets.items():
+            t = meta.filter(pc.equal(meta["column"], c))
+            at = pc.index_in(gkeys, value_set=group_key_strings(t))
+            for f in fields:
+                cols[f"{role}_{f}"] = pc.take(t[f], at)
+            nn = pc.subtract(t["n_rows"], pc.fill_null(t["null_count"], 0))
+            cols[f"{role}_nn"] = pc.take(nn, at)
+    present = {
+        c[3:-4] for c in g.column_names
+        if c.startswith("_h:") and g[c].null_count < g.num_rows
+    }
+    return pa.table(cols), meta, present
 
 
 def restrict_groups(stripes: DataFrame, keys) -> DataFrame:
@@ -1215,23 +1466,28 @@ def fused_prune(
     complete or not), mirroring _epoch_keep_filter so predicated and
     unpredicated decodes select identical stripe sets and a faulted
     never-resumed table fails DECODE-loudly on both paths instead of
-    returning zero rows on one of them (ADVICE r4 #2).
+    returning zero rows on one of them (ADVICE r4 #2). A selected
+    group whose wanted rows all failed has nothing to decode, so it
+    raises here instead of vanishing.
     """
     from pyspark.sql import Window
 
     want = sorted(want_cols)
     pcols = {c for c, _, _ in predicate}
     base = stripes.filter(F.col("status") == "completed")
-    proj = base.drop("data").filter(
+    # every status: failed rows of a wanted column flag lost groups
+    proj = stripes.drop("data").filter(
         F.col("column").isin(sorted(set(want) | pcols))
     )
     has_bloom = "bloom" in stripes.columns
     if stripes_path is not None and _driver_plan_budget_ok(stripes_path):
-        meta = proj.select(
+        meta = stripes.select(
             *[c for c in PLAN_COLUMNS if has_bloom or c != "bloom"]
         ).toArrow()
         keys = plan_keep_groups(meta, want, predicate, pins, max_groups)
         return None if keys is None else restrict_groups(base, keys)
+    done = F.col("status") == "completed"
+    wanted = F.col("column").isin(want)
     flags = []
     bloom_probes: dict[str, list] = {}  # agg alias -> probe values
     for i, (c, op, value) in enumerate(predicate):
@@ -1239,10 +1495,10 @@ def fused_prune(
         # null when the group has no row for the conjunct's column —
         # which prunes, matching prune_stripes' intersection semantics
         proj = proj.withColumn(
-            f"_k{i}", F.when(F.col("column") == c, cond.cast("int"))
+            f"_k{i}", F.when(done & (F.col("column") == c), cond.cast("int"))
         )
         flags.append(f"_k{i}")
-        pvals = _bloom_probe_vals(op, value)
+        pvals = _bloom_probe_vals(op, value, (pins or {}).get(c))
         if has_bloom and pvals is not None:
             vals = pvals
             if vals and all(
@@ -1250,9 +1506,10 @@ def fused_prune(
             ):
                 bloom_probes[f"_b{i}"] = [(f"_k{i}", c, op, vals)]
     aggs = [
-        F.collect_set(
-            F.when(F.col("column").isin(want), F.col("column"))
-        ).alias("_cols"),
+        F.collect_set(F.when(done & wanted, F.col("column"))).alias("_cols"),
+        F.max(done).alias("_formed"),
+        # lost candidate: its wanted rows all failed (lost_group_check)
+        (F.max(~done & wanted) & ~F.max(done & wanted)).alias("_lost"),
         *[F.max(F.col(f)).alias(f) for f in flags],
         *[
             F.first(
@@ -1269,9 +1526,7 @@ def fused_prune(
     # short-circuits completeness exactly like _epoch_keep_filter —
     # one tiny broadcast branch, so the single-epoch common case keeps
     # incomplete partitions on BOTH decode paths (ADVICE r4 #2)
-    gmax = proj.filter(F.col("column").isin(want)).agg(
-        F.max("epoch").alias("_gmax")
-    )
+    gmax = proj.filter(done & wanted).agg(F.max("epoch").alias("_gmax"))
     g = (
         g.crossJoin(F.broadcast(gmax))
         .withColumn(
@@ -1279,24 +1534,33 @@ def fused_prune(
             F.size(F.array_distinct(F.flatten(F.collect_list("_cols").over(w_pe)))),
         )
         .withColumn(
-            "_complete",
-            (F.col("_nc") >= len(want))
-            | (F.coalesce(F.col("_gmax"), F.lit(0)) == 0),
-        )
-        .withColumn(
-            "_best", F.max(F.when(F.col("_complete"), F.col("epoch"))).over(w_p)
+            "_best",
+            F.when(F.coalesce(F.col("_gmax"), F.lit(0)) == 0, F.lit(0)).otherwise(
+                F.max(
+                    F.when((F.col("_nc") >= len(want)) & F.col("_formed"), F.col("epoch"))
+                ).over(w_p)
+            ),
         )
         .filter(F.col("epoch") == F.col("_best"))  # null best: no epoch kept
     )
+    kept = F.lit(True)
     for f in flags:
-        g = g.filter(F.col(f) == 1)
+        kept = kept & (F.col(f) == 1)
     keys = (
-        g.select("partition_id", "epoch", "stripe_idx", *bloom_probes)
+        g.filter(kept | F.col("_lost"))
+        .select("partition_id", "epoch", "stripe_idx", "_lost", *bloom_probes)
         .limit(max_groups + 1)
         .collect()
     )
     if len(keys) > max_groups:
         return None
+    lost = [f"{r.partition_id}:{r.epoch}:{r.stripe_idx}" for r in keys if r._lost]
+    if lost:
+        lost_group_check(
+            stripes, want,
+            F.concat_ws(":", "partition_id", "epoch", "stripe_idx").isin(lost),
+        )
+        keys = [r for r in keys if not r._lost]
     # driver-side bloom veto: AND across conjuncts, OR across IN-list
     # members; absent/cross-domain blobs keep (bloom_membership)
     for alias, spec in bloom_probes.items():
@@ -1763,8 +2027,12 @@ def _probe_hash_pairs(op: str, value):
     return _value_hash_pairs(value)
 
 
-def _bloom_probe_vals(op: str, value) -> list | None:
-    """The probe literals of a bloom-usable conjunct, else None."""
+def _bloom_probe_vals(op: str, value, pin=None) -> list | None:
+    """The probe literals of a bloom-usable conjunct, else None. An NTZ
+    column's blooms hash its wall clock, which a datetime literal is
+    not (see _resolve_ntz): those never probe."""
+    if isinstance(pin, str) and pin.startswith(NTZ_PIN):
+        return None
     if op in ("==", "="):
         return [value]
     if op == "in":
